@@ -42,6 +42,16 @@ def persist_tracked(
     return df
 
 
+def unpersist_tracked(df: DataFrame) -> None:
+    """Release one ``persist_tracked`` frame now, before the next
+    ``release_tracked``, and drop it from the registry."""
+    try:
+        df.unpersist()
+    except Exception:  # session already stopped — nothing to free
+        pass
+    _TRACKED[:] = [d for d in _TRACKED if d is not df]
+
+
 class Checkpoint:
     """Handle to a localCheckpoint'ed DataFrame whose blocks can be freed
     deterministically.

@@ -28,6 +28,7 @@ import os
 import shutil
 import tempfile
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
@@ -86,13 +87,17 @@ def _parity_summary(
     n_inputs: int,
 ) -> DataFrame:
     # r13: the two exceptAll passes each re-executed the full batch
-    # serving pipeline — persist it for the diff, release before
-    # returning (all uses reduce to scalars here).
-    batch = batch.persist()
+    # serving pipeline — persist it for the diff (all uses reduce to
+    # scalars here). A frame the caller already cached is the caller's
+    # to release; only a cache made here is released here.
+    owned = batch.storageLevel == StorageLevel.NONE
+    if owned:
+        batch = batch.persist()
     total = streamed.count()
     stream_only = streamed.exceptAll(batch).count()
     batch_only = batch.exceptAll(streamed).count()
-    batch.unpersist()
+    if owned:
+        batch.unpersist()
     matching = total - stream_only
     acc = round(100.0 * matching / total, 2) if total else 0.0
     return spark.createDataFrame(
@@ -293,12 +298,15 @@ def serving_parity_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
         final = read_current_distribution(spark, os.path.join(tmp, "out"))
         streamed = spark.createDataFrame(final.collect(), final.schema)
         # persist: n_inputs below + both exceptAll diffs re-executed
-        # this agg 3× (the _parity_summary persist reuses this cache).
+        # this agg 3× (_parity_summary reads this cache, releases none).
         batch = windowed_count_distribution(
             events, "ts", 300, ["event_type"]
         ).persist()
-        return _parity_summary(
-            spark, "windowed_dist_online", streamed, batch, batch.count()
-        )
+        try:
+            return _parity_summary(
+                spark, "windowed_dist_online", streamed, batch, batch.count()
+            )
+        finally:
+            batch.unpersist()
     finally:
         shutil.rmtree(tmp, ignore_errors=True)

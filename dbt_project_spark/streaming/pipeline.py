@@ -17,7 +17,13 @@ Scale notes: stream-stream joins buffer per-key state until the
 watermark expires it — the join keys include the event timestamp, so
 state is bounded by (rate × watermark). Windowed aggs in append mode
 emit once per closed window; ``foreachBatch`` sinks write per
-micro-batch and stay idempotent by epoch.
+micro-batch and stay idempotent by epoch. A ``foreachBatch`` frame is
+an unpersisted plan over the stateful join, so every action on it
+re-runs both stream-stream joins, state-store load and commit
+included. ``micro_batch_analytics`` therefore persists its input once
+(lazily: the first sink write fills the cache) and the five sinks read
+that one materialization; the batch is released by the next call or
+by ``run_file_stream_pipeline`` once its query stops.
 """
 
 from __future__ import annotations
@@ -27,8 +33,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dbt_project_spark.caching import persist_tracked, unpersist_tracked
 from dbt_project_spark.functions.expressions import engagement_score
 from dbt_project_spark.sources.registry import ensure_runtime_confs
+
+# The frame the last ``micro_batch_analytics`` call persisted.
+_held_batch: DataFrame | None = None
 
 
 def split_event_streams(events: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -75,9 +85,29 @@ def join_metric_streams(
     )
 
 
+def _release_held_batch() -> None:
+    global _held_batch
+    if _held_batch is not None:
+        unpersist_tracked(_held_batch)
+        _held_batch = None
+
+
 def micro_batch_analytics(df: DataFrame) -> dict[str, DataFrame]:
     """The reference's per-batch analytics (process_batch,
-    spark_streaming_new.py:109-252), reusing the batch operators."""
+    spark_streaming_new.py:109-252), reusing the batch operators.
+
+    ``df`` is persisted (MEMORY_AND_DISK, lazily) and all five outputs
+    read it, so writing them materializes the batch — for a stream,
+    runs the stateful join — once instead of once per output. The
+    persisted frame is released when this function is next called
+    (Spark runs one query's micro-batches one after another, so the
+    previous batch's sinks are written by then), by
+    ``run_file_stream_pipeline`` when its query stops, or by
+    ``caching.release_tracked``. Two concurrent queries calling this
+    share the one slot: one may release the other's batch early, which
+    only makes that batch's remaining writes recompute from lineage.
+    """
+    global _held_batch
     from dbt_project_spark.operators.bucketize import categorize
     from dbt_project_spark.operators.stats import correlation_matrix, hourly_profile
     from dbt_project_spark.operators.windows import (
@@ -85,6 +115,8 @@ def micro_batch_analytics(df: DataFrame) -> dict[str, DataFrame]:
         windowed_stats,
     )
 
+    _release_held_batch()
+    df = _held_batch = persist_tracked(df)
     dist = windowed_count_distribution(df, "ts", 300, ["page_views"])
     cats = windowed_count_distribution(
         df.withColumn(
@@ -148,9 +180,12 @@ def run_file_stream_pipeline(
     }
 
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        # analytics first: the emptiness check then reads the persisted
+        # batch instead of running the stateful join once more
+        outputs = micro_batch_analytics(batch_df)
         if batch_df.isEmpty():
             return
-        for name, out in micro_batch_analytics(batch_df).items():
+        for name, out in outputs.items():
             out.write.mode("append").parquet(sink_paths[name])
 
     q = (
@@ -160,7 +195,10 @@ def run_file_stream_pipeline(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
+    try:
+        q.awaitTermination()
+    finally:
+        _release_held_batch()
     return sink_paths
 
 

@@ -21,6 +21,7 @@ from dbt_project_spark.caching import (
     persist_tracked,
     release_tracked,
     reclaim_jvm,
+    unpersist_tracked,
 )
 
 
@@ -41,6 +42,20 @@ def test_release_tracked_drains_registry(spark):
     assert _TRACKED == []
     # released plans stay recomputable (lineage intact)
     assert df.count() == 100
+
+
+def test_unpersist_tracked_releases_one_frame(spark):
+    from pyspark import StorageLevel
+
+    keep = persist_tracked(spark.range(10))
+    drop = persist_tracked(spark.range(20))
+    unpersist_tracked(drop)
+    assert drop.storageLevel == StorageLevel.NONE
+    assert keep.storageLevel != StorageLevel.NONE
+    assert not any(d is drop for d in _TRACKED)
+    assert any(d is keep for d in _TRACKED)
+    unpersist_tracked(drop)  # a second release is a no-op
+    release_tracked()
 
 
 def test_reclaim_jvm_with_checkpointed_plan(spark):

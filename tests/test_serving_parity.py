@@ -62,3 +62,26 @@ def test_serving_parity_windowed_reconciles(spark):
     assert r["matching_records"] == n_groups
     assert r["stream_only"] == 0 and r["batch_only"] == 0
     assert r["accuracy_percentage"] == 100.0
+
+
+def test_parity_summary_releases_only_its_own_cache(spark):
+    """_parity_summary persists the batch frame for its diffs; a frame
+    the caller already persisted stays cached (the caller releases it),
+    and a frame it cached itself is released before it returns."""
+    from pyspark import StorageLevel
+
+    from dbt_project_spark.queries_streaming_parity import _parity_summary
+
+    streamed = spark.range(10).toDF("x")
+    callers = spark.range(10).toDF("x").filter("x >= 0").persist()
+    try:
+        r = _parity_summary(spark, "t", streamed, callers, 10).first()
+        assert (r["matching_records"], r["stream_only"], r["batch_only"]) == (10, 0, 0)
+        assert callers.storageLevel != StorageLevel.NONE
+    finally:
+        callers.unpersist()
+
+    own = spark.range(10).toDF("x").filter("x >= 1")
+    r = _parity_summary(spark, "t", streamed, own, 10).first()
+    assert (r["stream_only"], r["batch_only"]) == (1, 0)
+    assert own.storageLevel == StorageLevel.NONE

@@ -51,6 +51,78 @@ def test_file_stream_pipeline_matches_batch(spark, events, tmp_path):
         assert want.exceptAll(got).count() == 0, name
 
 
+def test_file_stream_pipeline_leaves_no_cached_batch(spark, events, tmp_path):
+    """The pipeline releases the micro-batch it persisted once its
+    availableNow query stops: no cached blocks outlive the run."""
+    src = str(tmp_path / "src")
+    events.write.parquet(src)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+
+    run_file_stream_pipeline(
+        spark, src, str(tmp_path / "out"), str(tmp_path / "ckpt")
+    )
+
+    assert cache.isEmpty()
+
+
+def test_micro_batch_analytics_runs_stateful_join_once(spark, events, tmp_path):
+    """Writing all five outputs of one micro-batch runs the stateful
+    3-way join once: each of the two stream-stream joins adds every
+    input row of both its sides to state once, so a batch of N complete
+    records updates 4N state rows (an unpersisted batch re-runs the join
+    per output and reports about 5x that). The batch the previous call
+    persisted is released by the next call."""
+    from pyspark import StorageLevel
+
+    src = str(tmp_path / "src")
+    out_dir = tmp_path / "out"
+    # two files in event-time order → two data micro-batches, none late
+    ts = sorted(r.ts for r in events.select("ts").collect())
+    mid = F.lit(ts[len(ts) // 2])
+    early, late = events.filter(F.col("ts") < mid), events.filter(F.col("ts") >= mid)
+    early.coalesce(1).write.parquet(src)
+    late.coalesce(1).write.mode("append").parquet(src)
+    sizes = [early.count(), late.count()]
+
+    raw = (
+        spark.readStream.schema(spark.read.parquet(src).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    if dict(raw.dtypes).get("ts") == "bigint":
+        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    joined = join_metric_streams(*split_event_streams(raw))
+
+    frames, prev_cached, own_cached = [], [], []
+
+    def process_batch(batch_df, epoch_id):
+        for name, out in micro_batch_analytics(batch_df).items():
+            out.write.mode("append").parquet(str(out_dir / name))
+        own_cached.append(batch_df.storageLevel != StorageLevel.NONE)
+        if frames:
+            prev_cached.append(frames[-1].storageLevel != StorageLevel.NONE)
+        frames.append(batch_df)
+
+    q = (
+        joined.writeStream.outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .foreachBatch(process_batch)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+    updated = {
+        p.batchId: sum(op.numRowsUpdated for op in p.stateOperators)
+        for p in q.recentProgress
+    }
+    assert [updated[b] for b in (0, 1)] == [4 * n for n in sizes]
+    assert sum(updated.values()) == 4 * sum(sizes)
+    assert all(own_cached) and len(own_cached) >= 2
+    assert prev_cached and not any(prev_cached)
+
+
 def test_synthetic_rate_stream_schema(spark):
     df = synthetic_rate_stream(spark, rows_per_second=5)
     assert df.isStreaming
