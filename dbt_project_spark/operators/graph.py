@@ -93,29 +93,35 @@ def orient_by_degree(edges: DataFrame) -> DataFrame:
 CLOSING_BROADCAST_MAX_EDGES = 16_000_000
 
 
-def _edge_stats(edges: DataFrame) -> tuple[int, int]:
-    """(edge count, max node id) in ONE materializing job over the
-    (persisted) undirected edge list — the count doubles as the cache
-    materializer and the max id guards the packed-key encoding (u < v
-    per input contract, so max(v) is the global max)."""
+def _edge_stats(edges: DataFrame) -> tuple[int, bool]:
+    """(edge count, whether every node id fits the packed pair key) in
+    ONE materializing job over the (persisted) undirected edge list —
+    the count doubles as the cache materializer. A pair (a, b) packs
+    into the BIGINT a·2³¹ + b only when both ids lie in [0, 2³¹):
+    outside that domain distinct pairs collide, e.g. (−3, −1) and
+    (−4, 2³¹−1) both pack to −3·2³¹ − 1."""
     row = edges.agg(
-        F.count(F.lit(1)).alias("m"), F.max("v").alias("mx")
+        F.count(F.lit(1)).alias("m"),
+        F.min(F.least("u", "v")).alias("lo"),
+        F.max(F.greatest("u", "v")).alias("hi"),
     ).collect()[0]
-    return int(row["m"]), int(row["mx"] if row["mx"] is not None else 0)
+    lo, hi = row["lo"], row["hi"]
+    packed = lo is None or (0 <= lo and hi < 2**31)
+    return int(row["m"]), packed
 
 
 def _closed_wedges(
-    o: DataFrame, m: int, max_id: int, max_edges: int
+    o: DataFrame, m: int, packed: bool, max_edges: int
 ) -> DataFrame:
     """(s, a, b) wedges of the oriented edge list ``o`` that close
     into triangles — the shared core of ``triangle_count`` and
     ``triangles_per_node``. ``m`` (the undirected edge count) picks
     the semi-join strategy: broadcast the closing set under
     ``max_edges`` (wedges never shuffle), shuffle-hash past it. When
-    every id fits 31 bits the (a, b) key is packed into one BIGINT —
-    a LongHashedRelation is ~2× smaller and faster to probe than the
-    generic two-column relation; ids are graph-node ids, so the guard
-    only fails past 2³¹ nodes, where the edge bound fails first."""
+    ``packed`` (every id in [0, 2³¹), see ``_edge_stats``) the (a, b)
+    key is packed into one BIGINT — a LongHashedRelation is ~2×
+    smaller and faster to probe than the generic two-column relation;
+    otherwise the join keys on both columns."""
     e1 = o.alias("e1")
     e2 = o.alias("e2")
     wedge = e1.join(
@@ -130,7 +136,6 @@ def _closed_wedges(
     closing = o.select(
         F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
     )
-    packed = 0 <= max_id < 2**31
     if packed:
         pk = lambda x, y: (F.col(x).cast("bigint") * F.lit(2**31)  # noqa: E731
                            + F.col(y).cast("bigint")).alias("pk")
@@ -168,9 +173,9 @@ def triangle_count(
     # (expensive) edge construction would run ~5 times. Tracked:
     # released when the next catalog query is built.
     edges = persist_tracked(edges)
-    m, max_id = _edge_stats(edges)
+    m, packed = _edge_stats(edges)
     o = persist_tracked(orient_by_degree(edges))
-    tri = _closed_wedges(o, m, max_id, closing_broadcast_max_edges).agg(
+    tri = _closed_wedges(o, m, packed, closing_broadcast_max_edges).agg(
         F.count(F.lit(1)).alias("n_triangles")
     )
     n_nodes = (
@@ -805,9 +810,9 @@ def triangles_per_node(
     from dbt_project_spark.caching import persist_tracked
 
     edges = persist_tracked(edges)
-    m, max_id = _edge_stats(edges)
+    m, packed = _edge_stats(edges)
     o = persist_tracked(orient_by_degree(edges))
-    tri = _closed_wedges(o, m, max_id, closing_broadcast_max_edges)
+    tri = _closed_wedges(o, m, packed, closing_broadcast_max_edges)
     # Explode the three corners from ONE pass over the triangle set —
     # a 3-way union would reference the (unpersisted) wedge⋈closing
     # subtree three times and re-execute it per branch (measured 2.2×

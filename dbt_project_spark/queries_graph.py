@@ -1133,12 +1133,12 @@ def link_prediction_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     edges = persist_tracked(copurchase_edges(li))
-    # r13: one job materializes the edge cache AND returns the max id
-    # for the packed-key guard. Without the eager fill, AQE
+    # r13: one job materializes the edge cache AND returns the id
+    # range for the packed-key guard. Without the eager fill, AQE
     # materializes both wedge-join sides concurrently and a lazy
     # persist cannot dedupe in-flight work — the whole basket build
     # ran twice (59 s executor at sf0.1, the §4 minhash race).
-    _m, max_id = _edge_stats(edges)
+    _m, packed = _edge_stats(edges)
     adj = edges.select(
         F.col("u").alias("node"), F.col("v").alias("nbr")
     ).unionAll(edges.select(F.col("v").alias("node"), F.col("u").alias("nbr")))
@@ -1147,16 +1147,16 @@ def link_prediction_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = adj.select(F.col("node").alias("na"), "nbr")
     b = adj.select(F.col("node").alias("nb"), "nbr")
     wedges = a.join(b, "nbr").filter(F.col("na") < F.col("nb"))
-    if 0 <= max_id < 2**31:
+    if packed:
         # r13 (the _closed_wedges packed-key convention, guide §2.3):
         # the Σd² wedge stream is the query's dominant cost (452 s of
         # 625 s executor at sf0.1) and its partial-agg shuffle carried
         # (na, nb, cnt) rows — pack the pair into ONE BIGINT so the
         # combine hashes a single long and the exchange row narrows
         # (1091 MB → see OPTIMIZATION_r13.md); the anti-join probes
-        # the same packed key. Ids are partkeys: the guard only fails
-        # past 2³¹ parts, where the two-column fallback below applies
-        # unchanged. Unpacking via div/mod is exact (na, nb < 2³¹).
+        # the same packed key. Ids outside [0, 2³¹) take the
+        # two-column fallback below. Unpacking via div/mod is exact
+        # (0 ≤ na, nb < 2³¹).
         pk = (
             F.col("na").cast("bigint") * F.lit(2**31)
             + F.col("nb").cast("bigint")

@@ -5,6 +5,21 @@ cluster job would be: AQE on (runtime coalescing + skew-join handling),
 UTC session timezone (determinism across machines), Arrow enabled for
 the few Pandas-UDF paths, and shuffle partitions sized from the
 environment rather than hardcoded.
+
+Stream state defaults. Every state store instance costs a fixed load
+and commit per micro-batch, whatever rows it holds, so a small stream's
+batch latency is set by how many instances it touches. A stream-stream
+join keeps 4 stores per shuffle partition (keys and key-to-row-number,
+per side); join state format 3 keeps them as column families of one
+RocksDB store, so each join touches one store per partition (format 3
+is supported only on the RocksDB provider, so the two are set
+together; changelog checkpointing uploads only the batch's changes at
+commit). The shuffle width is the core count, so a stream's state
+stages — which run without AQE coalescing — take one wave of tasks.
+The provider, the join state format and the shuffle width are all
+written into each checkpoint's offset log at its first batch, so a
+query restarted from an existing checkpoint keeps the settings it was
+created with; these defaults only shape fresh checkpoints.
 """
 
 from __future__ import annotations
@@ -24,6 +39,13 @@ def get_spark(
     If a session already exists (e.g. the driver passed one in), it is
     reused untouched — queries must not depend on these configs being
     set, only benefit from them.
+
+    ``shuffle_partitions`` defaults to the core count: one wave of
+    tasks for batch stages before AQE coalescing and for stream state
+    stages, where the width is fixed at the query's first batch. Stream
+    state goes to one RocksDB store per join partition (join state
+    format 3) instead of four HDFS-backed ones — see the module
+    docstring for why and for how existing checkpoints keep theirs.
     """
     active = SparkSession.getActiveSession()
     if active is not None:
@@ -31,7 +53,7 @@ def get_spark(
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
-        shuffle_partitions = max(int(cpus) if cpus.isdigit() else 32, 8)
+        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -41,6 +63,17 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.session.timeZone", "UTC")
+        .config(
+            "spark.sql.streaming.stateStore.providerClass",
+            "org.apache.spark.sql.execution.streaming.state."
+            "RocksDBStateStoreProvider",
+        )
+        .config(
+            "spark.sql.streaming.stateStore.rocksdb."
+            "changelogCheckpointing.enabled",
+            "true",
+        )
+        .config("spark.sql.streaming.join.stateFormatVersion", "3")
         # Read parquet TIMESTAMP(isAdjustedToUTC=false) as TimestampType
         # (session-TZ) rather than NTZ so window()/unix_timestamp behave
         # uniformly; session TZ is pinned to UTC above so values are

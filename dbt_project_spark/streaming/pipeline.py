@@ -24,6 +24,15 @@ included. ``micro_batch_analytics`` therefore persists its input once
 (lazily: the first sink write fills the cache) and the five sinks read
 that one materialization; the batch is released by the next call or
 by ``run_file_stream_pipeline`` once its query stops.
+
+State layout: the 3-way join is two stream-stream joins, each keeping
+4 state stores per shuffle partition (keys and key-to-row-number, per
+side). On engine sessions (``session.get_spark``) join state format 3
+holds those 4 as column families of one RocksDB store, and the state
+width is the core count, so a batch loads and commits 2 stores per
+core. Each load and commit is a fixed cost, so at small batch sizes
+the store count, not the row count, sets the join's time. A
+checkpoint keeps the provider, format and width it was created with.
 """
 
 from __future__ import annotations

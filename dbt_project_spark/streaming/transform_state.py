@@ -8,11 +8,12 @@ state variables (value/list/map), native TTL, and the RocksDB state
 store provider (changelog-checkpointable, state sized by disk not
 heap — the 100 TB answer to growing key cardinality).
 
-Requires the RocksDB state store provider; callers set
-``spark.sql.streaming.stateStore.providerClass`` to
-``org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider``
-before starting the query (transformWithState rejects the default
-HDFS-backed provider).
+Requires the RocksDB state store provider
+(``spark.sql.streaming.stateStore.providerClass`` =
+``org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider``),
+which is the default on engine sessions (``session.get_spark``); on any
+other session callers set it before starting the query
+(transformWithState rejects Spark's default HDFS-backed provider).
 
 Determinism: fixed-point integer accumulation (value100), so state is
 exactly the batch groupBy regardless of batch boundaries or row order.

@@ -29,6 +29,18 @@ def test_triangle_path_has_none(spark):
     assert triangle_count(path).collect()[0].n_triangles == 0
 
 
+def test_triangle_count_negative_ids_do_not_collide(spark):
+    """Packed pair keys a·2³¹ + b collide outside [0, 2³¹): the open
+    wedge (-3, -1) of node -10 packs to the same key as the edge
+    (-4, 2³¹-1). Ids with a negative must take the two-column join."""
+    g = _edges(
+        spark,
+        [(-10, -3), (-10, -1), (-3, 100), (-1, 101), (-4, 2**31 - 1)],
+    )
+    row = triangle_count(g).collect()[0]
+    assert (row.n_nodes, row.n_edges, row.n_triangles) == (7, 5, 0)
+
+
 def test_triangle_hub_star_plus_rim(spark):
     # star hub 0 with rim cycle 1-2-3-4-1: triangles = rim edges = 4
     g = _edges(

@@ -55,6 +55,20 @@ def test_link_prediction_excludes_existing_edges(spark, tmp_path):
     assert link_prediction_jaccard(spark, str(tmp_path)).count() == 0
 
 
+def test_link_prediction_negative_ids_take_unpacked_keys(spark, tmp_path):
+    """Parts -3 and -1 share neighbors 7 and 8 and are not adjacent;
+    the unrelated edge (-4, 2³¹-1) packs to the same a·2³¹ + b key as
+    (-3, -1), so a packed anti-join would drop that pair."""
+    from dbt_project_spark.queries_graph import link_prediction_jaccard
+
+    _write_lineitem(
+        spark, tmp_path, [[-3, 7], [-3, 8], [-1, 7], [-1, 8], [-4, 2**31 - 1]]
+    )
+    out = link_prediction_jaccard(spark, str(tmp_path)).collect()
+    got = {(r["part_a"], r["part_b"]): r["jaccard_micro"] for r in out}
+    assert got == {(-3, -1): 1_000_000, (7, 8): 1_000_000}
+
+
 def test_interarrival_hand_computed_moments(spark, tmp_path):
     from dbt_project_spark.queries_timeseries import interarrival_stats
 

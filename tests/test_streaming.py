@@ -31,13 +31,15 @@ def test_join_metric_streams_batch_semantics(spark, events):
     assert row["engagement_score"] == pytest.approx(expected)
 
 
-def test_file_stream_pipeline_matches_batch(spark, events, tmp_path):
+def check_pipeline_matches_batch(spark, events, tmp_path):
+    """Run the availableNow file-stream pipeline over ``events`` and
+    assert every sink equals the batch path; returns the checkpoint
+    dir."""
     src = str(tmp_path / "src")
+    ckpt = str(tmp_path / "ckpt")
     events.write.parquet(src)
 
-    sinks = run_file_stream_pipeline(
-        spark, src, str(tmp_path / "out"), str(tmp_path / "ckpt")
-    )
+    sinks = run_file_stream_pipeline(spark, src, str(tmp_path / "out"), ckpt)
 
     # batch-side ground truth through the same operators
     pv, sd, tp = split_event_streams(events)
@@ -49,6 +51,11 @@ def test_file_stream_pipeline_matches_batch(spark, events, tmp_path):
         assert got.count() == want.count(), name
         assert got.exceptAll(want).count() == 0, name
         assert want.exceptAll(got).count() == 0, name
+    return ckpt
+
+
+def test_file_stream_pipeline_matches_batch(spark, events, tmp_path):
+    check_pipeline_matches_batch(spark, events, tmp_path)
 
 
 def test_file_stream_pipeline_leaves_no_cached_batch(spark, events, tmp_path):
@@ -121,6 +128,92 @@ def test_micro_batch_analytics_runs_stateful_join_once(spark, events, tmp_path):
     assert sum(updated.values()) == 4 * sum(sizes)
     assert all(own_cached) and len(own_cached) >= 2
     assert prev_cached and not any(prev_cached)
+
+
+def _run_join_stream(spark, src, out, ckpt):
+    """availableNow run of the 3-way stream join over the parquet files
+    in ``src`` into a parquet sink; returns the stopped query."""
+    raw = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+    if dict(raw.dtypes).get("ts") == "bigint":
+        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    q = (
+        join_metric_streams(*split_event_streams(raw))
+        .writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return q
+
+
+def _join_ops(q):
+    """State operators of the query's first batch that read input."""
+    p = next(p for p in q.recentProgress if p.numInputRows > 0)
+    ops = p.stateOperators
+    assert [op.operatorName for op in ops] == ["symmetricHashJoin"] * 2
+    return ops
+
+
+def test_stream_join_keeps_one_state_store_per_partition(spark, events, tmp_path):
+    """On an engine session each stream-stream join keeps its 4 state
+    stores (keys and key-to-row-number, per side) in one store per
+    shuffle partition — join state format 3 on RocksDB — so a batch
+    loads and commits 2 stores per partition, not 8."""
+    src = str(tmp_path / "src")
+    events.write.parquet(src)
+
+    q = _run_join_stream(spark, src, str(tmp_path / "out"), str(tmp_path / "ckpt"))
+
+    for op in _join_ops(q):
+        assert op.numStateStoreInstances == op.numShufflePartitions > 0
+
+
+# The stream state settings before the engine defaults changed.
+_OLD_STATE_CONF = {
+    "spark.sql.streaming.stateStore.providerClass": (
+        "org.apache.spark.sql.execution.streaming.state."
+        "HDFSBackedStateStoreProvider"
+    ),
+    "spark.sql.streaming.join.stateFormatVersion": "2",
+    "spark.sql.shuffle.partitions": "3",
+}
+
+
+def test_stream_join_restarts_on_its_checkpoint_state_settings(
+    spark, events, tmp_path
+):
+    """A checkpoint records its state provider, join state format and
+    shuffle width at its first batch: a query created under the old
+    settings restarts on them (4 stores per partition, 3 partitions)
+    under the engine defaults, and its joined rows still equal the
+    batch join of all input."""
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+    ts = sorted(r.ts for r in events.select("ts").collect())
+    mid = F.lit(ts[len(ts) // 2])
+    events.filter(F.col("ts") < mid).coalesce(1).write.parquet(src)
+
+    prev = {k: spark.conf.get(k) for k in _OLD_STATE_CONF}
+    for k, v in _OLD_STATE_CONF.items():
+        spark.conf.set(k, v)
+    try:
+        _run_join_stream(spark, src, out, ckpt)
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+
+    events.filter(F.col("ts") >= mid).coalesce(1).write.mode("append").parquet(src)
+    q = _run_join_stream(spark, src, out, ckpt)
+
+    for op in _join_ops(q):
+        assert op.numShufflePartitions == 3
+        assert op.numStateStoreInstances == 4 * op.numShufflePartitions
+    got = spark.read.parquet(out)
+    want = join_metric_streams(*split_event_streams(events))
+    assert got.count() == want.count() == events.count()
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
 
 
 def test_synthetic_rate_stream_schema(spark):

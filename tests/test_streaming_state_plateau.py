@@ -49,7 +49,9 @@ def _write_hourly_source(spark, src):
 @pytest.mark.parametrize(
     "provider",
     [
-        None,  # session default (HDFSBackedStateStoreProvider)
+        # Spark's default provider (engine sessions default to RocksDB)
+        "org.apache.spark.sql.execution.streaming.state."
+        "HDFSBackedStateStoreProvider",
         # the 100×-scale provider: state lives in local RocksDB SSTs,
         # not on the executor heap (r11 — VERDICT r10 task 7; the full
         # 999k-group run is state_rocksdb_r11.json). rocksdbjni ships
@@ -65,8 +67,7 @@ def test_state_plateaus_at_watermark_horizon(spark, tmp_path, provider):
 
     key = "spark.sql.streaming.stateStore.providerClass"
     prev = spark.conf.get(key)
-    if provider is not None:
-        spark.conf.set(key, provider)
+    spark.conf.set(key, provider)
     try:
         progress = _run(spark, tmp_path, src)
     finally:

@@ -28,6 +28,15 @@ _VANILLA_DEFAULTS = {
     # non-UTC zone so any query whose parity silently depends on the
     # session TZ (instead of ensure_runtime_confs re-pinning UTC) fails.
     "spark.sql.session.timeZone": "America/New_York",
+    # Stream state: the factory's RocksDB provider, join state format 3
+    # and core-count shuffle width. Provider and format are reset
+    # together — format 3 on the HDFS provider fails at query start.
+    "spark.sql.streaming.stateStore.providerClass": (
+        "org.apache.spark.sql.execution.streaming.state."
+        "HDFSBackedStateStoreProvider"
+    ),
+    "spark.sql.streaming.join.stateFormatVersion": "2",
+    "spark.sql.shuffle.partitions": "200",
 }
 
 # Timestamp-semantics-heavy queries: the class that broke on the driver
@@ -129,3 +138,27 @@ def test_checkpoint_query_green_on_vanilla_session(vanilla, name):
     _reset(vanilla)
     r = check_query(vanilla, SF_SMOKE, name, QUERIES[name], ORACLES.get(name))
     assert r["ok"], r
+
+
+def test_file_stream_pipeline_green_on_vanilla_session(vanilla, tmp_path):
+    """The engine's stream pipeline runs on Spark's default state
+    settings (HDFS provider, join state format 2, 200 partitions) and
+    its sinks match the batch path: it never depends on the factory's
+    stream state defaults."""
+    import json
+
+    from dbt_project_spark.sources import load_table
+    from tests.test_streaming import check_pipeline_matches_batch
+
+    _reset(vanilla)
+    events = load_table(vanilla, SF_SMOKE, "events")
+    ckpt = check_pipeline_matches_batch(vanilla, events, tmp_path)
+
+    with open(f"{ckpt}/offsets/0") as fh:
+        recorded = json.loads(fh.read().splitlines()[1])["conf"]
+    for k in (
+        "spark.sql.streaming.stateStore.providerClass",
+        "spark.sql.streaming.join.stateFormatVersion",
+        "spark.sql.shuffle.partitions",
+    ):
+        assert recorded[k] == _VANILLA_DEFAULTS[k], k
