@@ -12,6 +12,8 @@ session accumulates MEMORY_AND_DISK blocks without bound (ADVICE r02).
 built: every consumer (driver gate, local oracle gate, bench, CLI)
 builds then materializes one query before building the next, so by the
 time query N+1 is constructed, query N's intermediates are dead.
+``bounded_collect`` is the one guard of the operators that collect a
+bounded input to the driver and otherwise run distributed.
 
 Lifetime contract (narrowed in r08): releasing PERSISTED plans is
 never a correctness risk — a re-execution recomputes from lineage.
@@ -27,7 +29,7 @@ release their own per-round intermediates eagerly) is a no-op.
 from __future__ import annotations
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 
 _TRACKED: list[DataFrame] = []
 _CHECKPOINTS: list["Checkpoint"] = []
@@ -50,6 +52,18 @@ def unpersist_tracked(df: DataFrame) -> None:
     except Exception:  # session already stopped — nothing to free
         pass
     _TRACKED[:] = [d for d in _TRACKED if d is not df]
+
+
+def bounded_collect(df: DataFrame, max_rows: int) -> list[Row] | None:
+    """``df``'s rows if it has at most ``max_rows`` of them, else None.
+
+    The one guard behind every "collect if bounded, else run
+    distributed" operator (graph fixed points, Markov removal, the
+    bruteforce query set): ``limit(max_rows + 1).collect()`` is a
+    single job that never pulls more than ``max_rows + 1`` rows to the
+    driver, where ``count()`` then ``collect()`` pays two."""
+    rows = df.limit(max_rows + 1).collect()
+    return rows if len(rows) <= max_rows else None
 
 
 class Checkpoint:

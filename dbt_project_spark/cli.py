@@ -12,13 +12,20 @@ one-liners.
 
     # run the catalog:
     python -m dbt_project_spark.cli query tpch_q5 --sf-dir /root/testdata/sf0.01
+
+    # time every catalog query (or the named ones) once, to catch
+    # stragglers — one JSON line per query:
+    python -m dbt_project_spark.cli sweep --sf-dir /data/sf0.1
 """
 
 from __future__ import annotations
 
 import argparse
+import json
 import os
 import sys
+import time
+import traceback
 
 from pyspark.sql import functions as F
 
@@ -118,6 +125,37 @@ def _explain(args) -> int:
     return 0
 
 
+def _sweep(args) -> int:
+    from dbt_project_spark import get_spark
+    from dbt_project_spark.caching import reclaim_jvm
+    from dbt_project_spark.catalog import QUERIES, load_all
+
+    load_all()
+    unknown = [n for n in args.names if n not in QUERIES]
+    if unknown:
+        print(f"unknown query {unknown[0]!r}; known: {', '.join(sorted(QUERIES))}")
+        return 2
+    spark = get_spark(app_name="dbt-project-spark-sweep")
+    failed = 0
+    for i, name in enumerate(args.names or sorted(QUERIES)):
+        if i % 25 == 0:
+            reclaim_jvm()  # outside the timed region
+        spark.sparkContext.setJobDescription(f"sweep:{name}")
+        t = time.perf_counter()
+        try:
+            QUERIES[name](spark, args.sf_dir).write.mode("overwrite").format(
+                "noop"
+            ).save()
+        except Exception as e:  # noqa: BLE001 — report and keep sweeping
+            traceback.print_exc()
+            failed += 1
+            line = {"query": name, "error": f"{type(e).__name__}: {e}"[:200]}
+        else:
+            line = {"query": name, "wall_s": round(time.perf_counter() - t, 3)}
+        print(json.dumps(line), flush=True)
+    return 1 if failed else 0
+
+
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="dbt_project_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
@@ -154,6 +192,15 @@ def main(argv: list[str] | None = None) -> int:
         choices=["simple", "extended", "formatted", "cost", "codegen"],
     )
     e.set_defaults(fn=_explain)
+
+    w = sub.add_parser(
+        "sweep",
+        help="run each catalog query once into a noop sink and print one "
+        "JSON line per query with its wall time (all queries by default)",
+    )
+    w.add_argument("names", nargs="*")
+    w.add_argument("--sf-dir", default=q.get_default("sf_dir"))
+    w.set_defaults(fn=_sweep)
 
     args = p.parse_args(argv)
     return args.fn(args)

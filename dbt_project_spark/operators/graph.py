@@ -12,9 +12,16 @@ from the edges-sized data so only small tables are ever broadcast.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from dbt_project_spark.caching import (
+    RoundCache,
+    bounded_collect,
+    local_checkpoint_tracked,
+    persist_tracked,
+)
 
 # Bounded-graph driver kernel threshold (r13): below this many edges
 # the fixed-point iterations (PageRank / HITS / BFS / SSSP) run as
@@ -34,10 +41,15 @@ from pyspark.sql import types as T
 # tests/test_graph_driver_kernel.py, which runs both paths).
 DRIVER_FIXPOINT_MAX_EDGES = 100_000
 
-
-def _collect_edge_tuples(edges: DataFrame, *cols: str) -> list[tuple]:
-    """Collect a bounded edge list to the driver as plain tuples."""
-    return [tuple(r) for r in edges.select(*cols).collect()]
+# Node-table broadcast bound of the distributed iterations (PageRank,
+# HITS, BFS, SSSP, label propagation): the per-round rank / score /
+# distance / label table has one row per node and is broadcast onto
+# the edge list only while the graph has at most this many nodes
+# (counted once from the cached edges). Past ~10⁷ nodes a broadcast
+# node table is a driver/executor OOM, so the joins run as shuffle
+# joins on the equi-key (AQE still promotes genuinely small tables at
+# runtime). Integer results are identical in both regimes.
+NODE_BROADCAST_MAX_NODES = 10_000_000
 
 
 def _node_rows_df(
@@ -93,35 +105,36 @@ def orient_by_degree(edges: DataFrame) -> DataFrame:
 CLOSING_BROADCAST_MAX_EDGES = 16_000_000
 
 
-def _edge_stats(edges: DataFrame) -> tuple[int, bool]:
-    """(edge count, whether every node id fits the packed pair key) in
-    ONE materializing job over the (persisted) undirected edge list —
-    the count doubles as the cache materializer. A pair (a, b) packs
-    into the BIGINT a·2³¹ + b only when both ids lie in [0, 2³¹):
-    outside that domain distinct pairs collide, e.g. (−3, −1) and
-    (−4, 2³¹−1) both pack to −3·2³¹ − 1."""
+def _edge_stats(edges: DataFrame) -> tuple[int, bool, int]:
+    """(edge count, whether every node id fits the packed pair key,
+    id span) in ONE materializing job over the (persisted) undirected
+    edge list — the count doubles as the cache materializer. A pair
+    (a, b) packs into the BIGINT a·2³¹ + b only when both ids lie in
+    [0, 2³¹): outside that domain distinct pairs collide, e.g. (−3, −1)
+    and (−4, 2³¹−1) both pack to −3·2³¹ − 1. The span hi − lo + 1 is an
+    exact upper bound on the node count (0 for no edges)."""
     row = edges.agg(
         F.count(F.lit(1)).alias("m"),
         F.min(F.least("u", "v")).alias("lo"),
         F.max(F.greatest("u", "v")).alias("hi"),
     ).collect()[0]
     lo, hi = row["lo"], row["hi"]
-    packed = lo is None or (0 <= lo and hi < 2**31)
-    return int(row["m"]), packed
+    if lo is None:
+        return 0, True, 0
+    return int(row["m"]), 0 <= lo and hi < 2**31, hi - lo + 1
 
 
-def _closed_wedges(
-    o: DataFrame, m: int, packed: bool, max_edges: int
-) -> DataFrame:
+def _closed_wedges(o: DataFrame, m: int, packed: bool) -> DataFrame:
     """(s, a, b) wedges of the oriented edge list ``o`` that close
     into triangles — the shared core of ``triangle_count`` and
     ``triangles_per_node``. ``m`` (the undirected edge count) picks
     the semi-join strategy: broadcast the closing set under
-    ``max_edges`` (wedges never shuffle), shuffle-hash past it. When
-    ``packed`` (every id in [0, 2³¹), see ``_edge_stats``) the (a, b)
-    key is packed into one BIGINT — a LongHashedRelation is ~2×
-    smaller and faster to probe than the generic two-column relation;
-    otherwise the join keys on both columns."""
+    CLOSING_BROADCAST_MAX_EDGES (wedges never shuffle), shuffle-hash
+    past it. When ``packed`` (every id in [0, 2³¹), see
+    ``_edge_stats``) the (a, b) key is packed into one BIGINT — a
+    LongHashedRelation is ~2× smaller and faster to probe than the
+    generic two-column relation; otherwise the join keys on both
+    columns."""
     e1 = o.alias("e1")
     e2 = o.alias("e2")
     wedge = e1.join(
@@ -144,7 +157,7 @@ def _closed_wedges(
         keys = ["pk"]
     else:
         keys = ["a", "b"]
-    if m <= max_edges:
+    if m <= CLOSING_BROADCAST_MAX_EDGES:
         closing = F.broadcast(closing)
     else:
         # SHUFFLE_HASH on the closing side: sort-merge would SORT the
@@ -155,17 +168,13 @@ def _closed_wedges(
     return wedge.join(closing, on=keys, how="leftsemi").select("s", "a", "b")
 
 
-def triangle_count(
-    edges: DataFrame,
-    closing_broadcast_max_edges: int = CLOSING_BROADCAST_MAX_EDGES,
-) -> DataFrame:
+def triangle_count(edges: DataFrame) -> DataFrame:
     """Count triangles in an undirected graph given one row per edge
     with columns (u, v), u < v. Returns a 1-row DataFrame
     (n_nodes, n_edges, n_triangles). Degree-oriented wedge join —
     every stage is an equi-join, no node's fan-out exceeds O(sqrt(m));
     the closing check is a broadcast semi-join under
-    ``closing_broadcast_max_edges`` (see _closed_wedges)."""
-    from dbt_project_spark.caching import persist_tracked
+    CLOSING_BROADCAST_MAX_EDGES (see _closed_wedges)."""
 
     # edges feeds orientation (3 refs) + the node/edge counts; the
     # oriented list feeds both wedge sides and the closing set. Cache
@@ -173,9 +182,9 @@ def triangle_count(
     # (expensive) edge construction would run ~5 times. Tracked:
     # released when the next catalog query is built.
     edges = persist_tracked(edges)
-    m, packed = _edge_stats(edges)
+    m, packed, _ = _edge_stats(edges)
     o = persist_tracked(orient_by_degree(edges))
-    tri = _closed_wedges(o, m, packed, closing_broadcast_max_edges).agg(
+    tri = _closed_wedges(o, m, packed).agg(
         F.count(F.lit(1)).alias("n_triangles")
     )
     n_nodes = (
@@ -192,16 +201,16 @@ def triangle_count(
 
 
 def _pagerank_driver(
-    edges: DataFrame, iters: int, scale: int, damping_pct: int
+    edges: DataFrame, es: list, iters: int, scale: int, damping_pct: int
 ) -> DataFrame:
     """Exact driver-side twin of the distributed PageRank loop: the
-    same BIGINT floor-division recurrence over a collected (bounded)
-    edge list. Python ints are arbitrary-precision and ``//`` on
-    non-negative operands equals Spark's ``div``, so results are
-    bit-identical (pinned by tests/test_graph_driver_kernel.py)."""
+    same BIGINT floor-division recurrence over the collected (bounded)
+    (src, dst) rows ``es`` of ``edges``. Python ints are
+    arbitrary-precision and ``//`` on non-negative operands equals
+    Spark's ``div``, so results are bit-identical (pinned by
+    tests/test_graph_driver_kernel.py)."""
     from collections import Counter, defaultdict
 
-    es = _collect_edge_tuples(edges, "src", "dst")
     nodes = {s for s, _ in es} | {d for _, d in es}
     fields = [T.StructField("r", T.LongType())]
     if not nodes:
@@ -229,8 +238,6 @@ def pagerank_fixedpoint(
     iters: int = 5,
     scale: int = 1_000_000_000_000,
     damping_pct: int = 85,
-    broadcast_threshold: int = 10_000_000,
-    driver_max_edges: int = DRIVER_FIXPOINT_MAX_EDGES,
 ) -> DataFrame:
     """Fixed-point PageRank over a directed edge list (src, dst).
 
@@ -242,22 +249,17 @@ def pagerank_fixedpoint(
     scaled units.
 
     The rank/contribution tables are BROADCAST only while the graph
-    has ≤ ``broadcast_threshold`` nodes (counted once from the cached
-    edge list). Broadcasting a rank table past ~10⁷ nodes is a
-    driver/executor OOM; above the threshold the joins run as plain
-    shuffle hash/merge joins on the equi-keys (AQE still promotes
-    genuinely small rank tables to broadcast at runtime). Results are
+    has ≤ NODE_BROADCAST_MAX_NODES nodes; above it the joins run as
+    plain shuffle hash/merge joins on the equi-keys. Results are
     bit-identical in both regimes — integer fixed-point math is
     partitioning-independent.
 
-    Bounded graphs (≤ ``driver_max_edges`` edges, counted from the
-    cached edge list) skip the per-iteration Spark jobs entirely: the
-    edge list is collected once and the identical floor-division
-    integer recurrence runs in Python ints on the driver (exact — see
-    DRIVER_FIXPOINT_MAX_EDGES). One distributed pass builds the edges
-    either way; only the nodes-sized iteration moves.
+    Bounded graphs (≤ DRIVER_FIXPOINT_MAX_EDGES edges) skip the
+    per-iteration Spark jobs entirely: the edge list is collected once
+    and the identical floor-division integer recurrence runs in Python
+    ints on the driver. One distributed pass builds the edges either
+    way; only the nodes-sized iteration moves.
     """
-    from dbt_project_spark.caching import persist_tracked
 
     # Persist the RAW edge list first: nodes, out-degrees, and the
     # node count each reference it, and Spark does not share subtrees
@@ -265,9 +267,9 @@ def pagerank_fixedpoint(
     # pipeline would run once per reference. All persists here are
     # tracked: released when the next catalog query is built.
     edges = persist_tracked(edges)
-    n_edges = edges.count()
-    if n_edges <= driver_max_edges:
-        return _pagerank_driver(edges, iters, scale, damping_pct)
+    es = bounded_collect(edges.select("src", "dst"), DRIVER_FIXPOINT_MAX_EDGES)
+    if es is not None:
+        return _pagerank_driver(edges, es, iters, scale, damping_pct)
     nodes = (
         edges.select(F.col("src").alias("node"))
         .unionAll(edges.select(F.col("dst").alias("node")))
@@ -281,7 +283,7 @@ def pagerank_fixedpoint(
 
     # One scalar count decides the join strategy for every iteration;
     # nodes is persisted, so this also warms the cache the loop reuses.
-    small_graph = nodes.count() <= broadcast_threshold
+    small_graph = nodes.count() <= NODE_BROADCAST_MAX_NODES
 
     def _rank_side(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if small_graph else df
@@ -317,16 +319,18 @@ def pagerank_fixedpoint(
     return ranks.select("node", "r")
 
 
-def _hits_driver(edges: DataFrame, iters: int, scale: int) -> DataFrame:
-    """Exact driver-side twin of the distributed HITS loop (same
-    Gauss-Seidel half-step order, same floor-division max
-    normalization — Python ints replicate the DECIMAL(38,0) multiply
-    exactly). The per-half-step max always lands on a node with an
-    incident edge, so the normalizing divisor is > 0 whenever the
-    score table is non-empty — no div-by-zero branch to mirror."""
+def _hits_driver(
+    edges: DataFrame, es: list, iters: int, scale: int
+) -> DataFrame:
+    """Exact driver-side twin of the distributed HITS loop over the
+    collected (src, dst) rows ``es`` (same Gauss-Seidel half-step
+    order, same floor-division max normalization — Python ints
+    replicate the DECIMAL(38,0) multiply exactly). The per-half-step
+    max always lands on a node with an incident edge, so the
+    normalizing divisor is > 0 whenever the score table is non-empty —
+    no div-by-zero branch to mirror."""
     from collections import defaultdict
 
-    es = _collect_edge_tuples(edges, "src", "dst")
     nodes = {s for s, _ in es} | {d for _, d in es}
     # non-nullable like the distributed path's coalesce(·, 0) output
     fields = [
@@ -364,8 +368,6 @@ def hits_fixedpoint(
     edges: DataFrame,
     iters: int = 4,
     scale: int = 1_000_000_000,
-    broadcast_threshold: int = 10_000_000,
-    driver_max_edges: int = DRIVER_FIXPOINT_MAX_EDGES,
 ) -> DataFrame:
     """Fixed-point HITS (Kleinberg hubs & authorities) over a
     directed edge list (src, dst). Returns (node, h, a) with hub and
@@ -384,24 +386,21 @@ def hits_fixedpoint(
     Scale shape mirrors ``pagerank_fixedpoint``: the edges never
     move; each half-step joins the nodes-sized score table onto the
     edge list and sum-aggregates with map-side combine. Score tables
-    are broadcast only below ``broadcast_threshold`` nodes; the
+    are broadcast only up to NODE_BROADCAST_MAX_NODES nodes; the
     per-step max is a 1-row aggregate broadcast onto the score table.
     """
-    from dbt_project_spark.caching import (
-        local_checkpoint_tracked,
-        persist_tracked,
-    )
 
     edges = persist_tracked(edges)
-    if edges.count() <= driver_max_edges:
-        return _hits_driver(edges, iters, scale)
+    es = bounded_collect(edges.select("src", "dst"), DRIVER_FIXPOINT_MAX_EDGES)
+    if es is not None:
+        return _hits_driver(edges, es, iters, scale)
     nodes = (
         edges.select(F.col("src").alias("node"))
         .unionAll(edges.select(F.col("dst").alias("node")))
         .distinct()
     )
     nodes = persist_tracked(nodes)
-    small_graph = nodes.count() <= broadcast_threshold
+    small_graph = nodes.count() <= NODE_BROADCAST_MAX_NODES
 
     def _side(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if small_graph else df
@@ -479,19 +478,18 @@ _BFS_CHECKPOINT_EVERY = 4
 
 def _bfs_sssp_driver(
     edges: DataFrame,
+    es: list,
     source: DataFrame | None,
     iters: int,
     weighted: bool,
 ) -> DataFrame:
     """Exact driver-side twin of the unrolled BFS / Bellman-Ford
-    rounds over a collected (bounded) edge list: per round, extend
-    every reached node's out-edges and min-merge — identical to the
-    distributed union + min-aggregate (min over ints is
+    rounds over the collected (bounded) edge rows ``es``: per round,
+    extend every reached node's out-edges and min-merge — identical to
+    the distributed union + min-aggregate (min over ints is
     partitioning-independent). ``weighted`` selects the (src, dst,
     cost) relaxation (BIGINT cost column) vs hop counting (INT hops,
     matching the distributed path's ``lit(0) + 1`` typing)."""
-    cols = ("src", "dst", "cost") if weighted else ("src", "dst")
-    es = _collect_edge_tuples(edges, *cols)
     val_t = T.LongType() if weighted else T.IntegerType()
     fields = [T.StructField("cost" if weighted else "hops", val_t)]
     if source is None:
@@ -519,12 +517,43 @@ def _bfs_sssp_driver(
     return _node_rows_df(edges, "src", rows, fields)
 
 
+def _shortest_paths(
+    edges: DataFrame, source: DataFrame | None, iters: int, weighted: bool
+) -> DataFrame:
+    """The shared body of ``bfs_hops`` (``weighted=False``: INT hop
+    counts over (src, dst)) and ``weighted_sssp`` (``weighted=True``:
+    BIGINT cost sums over (src, dst, cost)): the driver twin for
+    bounded graphs, else the unrolled distributed rounds."""
+    val = "cost" if weighted else "hops"
+    cols = ("src", "dst", "cost") if weighted else ("src", "dst")
+    edges = persist_tracked(edges.select(*cols))
+    es = bounded_collect(edges, DRIVER_FIXPOINT_MAX_EDGES)
+    if es is not None:
+        return _bfs_sssp_driver(edges, es, source, iters, weighted)
+    ends = edges.select(F.col("src").alias("node")).unionAll(
+        edges.select(F.col("dst").alias("node"))
+    )
+    small_graph = ends.distinct().count() <= NODE_BROADCAST_MAX_NODES
+    if source is None:
+        source = ends.agg(F.min("node").alias("node"))
+    zero = F.lit(0).cast("bigint") if weighted else F.lit(0)
+    step = edges["cost"] if weighted else F.lit(1)
+    dist = source.select("node", zero.alias(val))
+    rounds = RoundCache(_BFS_CHECKPOINT_EVERY)
+    for _ in range(iters):
+        side = F.broadcast(dist) if small_graph else dist
+        nxt = edges.join(side, edges.src == dist.node).select(
+            F.col("dst").alias("node"), (dist[val] + step).alias(val)
+        )
+        new = dist.unionAll(nxt).groupBy("node").agg(F.min(val).alias(val))
+        dist = rounds.advance(new)
+    return dist
+
+
 def bfs_hops(
     edges: DataFrame,
     source: DataFrame | None = None,
     iters: int = 8,
-    broadcast_threshold: int = 10_000_000,
-    driver_max_edges: int = DRIVER_FIXPOINT_MAX_EDGES,
 ) -> DataFrame:
     """Unrolled BFS shortest-hop counts over a directed edge list
     (src, dst). ``source`` is a 1-row frame with column ``node``
@@ -539,9 +568,9 @@ def bfs_hops(
     by one hop, union with the previous distances, and min-aggregate
     per node (map-side combinable). Same dataflow and broadcast
     policy as ``pagerank_fixedpoint``: the distance table is
-    broadcast only while the graph is below ``broadcast_threshold``
-    nodes; past that the joins fall back to shuffle hash joins on the
-    equi-key and AQE re-promotes genuinely small frontiers.
+    broadcast only up to NODE_BROADCAST_MAX_NODES nodes; past that
+    the joins fall back to shuffle hash joins on the equi-key and AQE
+    re-promotes genuinely small frontiers.
 
     Unlike pagerank (each rank table feeds exactly ONE downstream
     join), every round here references ``dist`` TWICE (edge join +
@@ -553,39 +582,7 @@ def bfs_hops(
     ``connected_components`` (see dedup.py: persistence alone does
     not truncate the logical plan).
     """
-    from dbt_project_spark.caching import RoundCache, persist_tracked
-
-    edges = persist_tracked(edges.select("src", "dst"))
-    if edges.count() <= driver_max_edges:
-        return _bfs_sssp_driver(edges, source, iters, weighted=False)
-    n_nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionAll(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .count()
-    )
-    small_graph = n_nodes <= broadcast_threshold
-
-    def _dist_side(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if small_graph else df
-
-    if source is None:
-        source = (
-            edges.select(F.col("src").alias("node"))
-            .unionAll(edges.select(F.col("dst").alias("node")))
-            .agg(F.min("node").alias("node"))
-        )
-    dist = source.select("node", F.lit(0).alias("hops"))
-    rounds = RoundCache(_BFS_CHECKPOINT_EVERY)
-    for i in range(iters):
-        nxt = edges.join(
-            _dist_side(dist), edges.src == dist.node
-        ).select(F.col("dst").alias("node"), (F.col("hops") + 1).alias("hops"))
-        new = (
-            dist.unionAll(nxt).groupBy("node").agg(F.min("hops").alias("hops"))
-        )
-        dist = rounds.advance(new)
-    return dist
+    return _shortest_paths(edges, source, iters, weighted=False)
 
 
 # Truncate peeling lineage every N rounds (same convention as BFS/CC,
@@ -622,7 +619,6 @@ def kcore(edges: DataFrame, k: int, iters: int = 8) -> DataFrame:
     GC/ContextCleaner race and OOM'd an 8 g driver in the r07 full
     suite.
     """
-    from dbt_project_spark.caching import RoundCache, persist_tracked
 
     def _degrees(frame: DataFrame) -> DataFrame:
         # Persisted by callers: BOTH semi-joins AND the fixpoint
@@ -683,8 +679,6 @@ def weighted_sssp(
     edges: DataFrame,
     iters: int = 8,
     source: DataFrame | None = None,
-    broadcast_threshold: int = 1_000_000,
-    driver_max_edges: int = DRIVER_FIXPOINT_MAX_EDGES,
 ) -> DataFrame:
     """Unrolled hop-bounded Bellman-Ford over a weighted directed edge
     list (src, dst, cost): returns (node, cost) — the cheapest total
@@ -698,47 +692,10 @@ def weighted_sssp(
     itself a common production semantics). Per round: join the
     nodes-sized distance table onto the edges (edges never move),
     relax, union, min-aggregate (map-side combinable). Broadcast /
-    persist / checkpoint discipline is identical to ``bfs_hops``:
-    dist is referenced twice per round, so each round persists,
-    materializes, drops the previous cache, and localCheckpoints
-    every ``_BFS_CHECKPOINT_EVERY`` rounds.
+    persist / checkpoint discipline is ``bfs_hops``'s — both run
+    ``_shortest_paths``.
     """
-    from dbt_project_spark.caching import RoundCache, persist_tracked
-
-    edges = persist_tracked(edges.select("src", "dst", "cost"))
-    if edges.count() <= driver_max_edges:
-        return _bfs_sssp_driver(edges, source, iters, weighted=True)
-    n_nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionAll(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .count()
-    )
-    small_graph = n_nodes <= broadcast_threshold
-
-    def _dist_side(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if small_graph else df
-
-    if source is None:
-        source = (
-            edges.select(F.col("src").alias("node"))
-            .unionAll(edges.select(F.col("dst").alias("node")))
-            .agg(F.min("node").alias("node"))
-        )
-    dist = source.select("node", F.lit(0).cast("bigint").alias("cost"))
-    rounds = RoundCache(_BFS_CHECKPOINT_EVERY)
-    for i in range(iters):
-        nxt = edges.join(
-            _dist_side(dist), edges.src == dist.node
-        ).select(
-            F.col("dst").alias("node"),
-            (dist["cost"] + edges["cost"]).alias("cost"),
-        )
-        new = (
-            dist.unionAll(nxt).groupBy("node").agg(F.min("cost").alias("cost"))
-        )
-        dist = rounds.advance(new)
-    return dist
+    return _shortest_paths(edges, source, iters, weighted=True)
 
 
 def graph_diagnostics(edges: DataFrame) -> DataFrame:
@@ -753,7 +710,6 @@ def graph_diagnostics(edges: DataFrame) -> DataFrame:
     reciprocity is a self-semi-join on the reversed key — all
     map-side-combinable, nothing quadratic.
     """
-    from dbt_project_spark.caching import persist_tracked
 
     edges = persist_tracked(edges.select("src", "dst"))
     deg = persist_tracked(
@@ -795,10 +751,7 @@ def graph_diagnostics(edges: DataFrame) -> DataFrame:
     )
 
 
-def triangles_per_node(
-    edges: DataFrame,
-    closing_broadcast_max_edges: int = CLOSING_BROADCAST_MAX_EDGES,
-) -> DataFrame:
+def triangles_per_node(edges: DataFrame) -> DataFrame:
     """Per-node triangle counts over an undirected edge list (u, v),
     u < v: the degree-oriented wedge join of ``triangle_count``, but
     keeping each closed wedge's three corners (wedge source + both
@@ -807,12 +760,11 @@ def triangles_per_node(
     orientation caps out-degree at O(sqrt(m)); the corner fan-out is
     exactly 3× the triangle count. Closing semi-join strategy as in
     ``triangle_count`` (broadcast under the edge bound)."""
-    from dbt_project_spark.caching import persist_tracked
 
     edges = persist_tracked(edges)
-    m, packed = _edge_stats(edges)
+    m, packed, _ = _edge_stats(edges)
     o = persist_tracked(orient_by_degree(edges))
-    tri = _closed_wedges(o, m, packed, closing_broadcast_max_edges)
+    tri = _closed_wedges(o, m, packed)
     # Explode the three corners from ONE pass over the triangle set —
     # a 3-way union would reference the (unpersisted) wedge⋈closing
     # subtree three times and re-execute it per branch (measured 2.2×
@@ -825,11 +777,7 @@ def triangles_per_node(
     )
 
 
-def label_propagation(
-    edges: DataFrame,
-    iters: int = 4,
-    broadcast_threshold: int = 10_000_000,
-) -> DataFrame:
+def label_propagation(edges: DataFrame, iters: int = 4) -> DataFrame:
     """Synchronous label propagation over an undirected edge list
     (u, v), u < v: labels start as node ids; each round every node
     adopts the most frequent label among its NEIGHBORS, ties broken
@@ -841,8 +789,8 @@ def label_propagation(
 
     Scale shape (r13 co-partitioned rounds, guide §2.4): the
     adjacency is persisted HASH-PARTITIONED BY node once; each round
-    then broadcasts the nodes-sized label table onto it (below
-    ``broadcast_threshold`` nodes — the pagerank policy; a broadcast
+    then broadcasts the nodes-sized label table onto it (up to
+    NODE_BROADCAST_MAX_NODES nodes — the pagerank policy; a broadcast
     join preserves the streamed side's partitioning), so the
     (node, label) count, the arg-max, and the label join all satisfy
     their required distribution from that ONE up-front exchange —
@@ -855,7 +803,6 @@ def label_propagation(
     preserves the physical partitioning, so the co-partition
     property survives checkpoint rounds.
     """
-    from dbt_project_spark.caching import RoundCache, persist_tracked
 
     edges = persist_tracked(edges.select("u", "v"))
     # Symmetrize ONCE (inline, not union — one edge scan, r13) and
@@ -872,7 +819,7 @@ def label_propagation(
         ).repartition("node")
     )
     nodes = persist_tracked(adj.select("node").distinct())
-    small_graph = nodes.count() <= broadcast_threshold
+    small_graph = nodes.count() <= NODE_BROADCAST_MAX_NODES
 
     def _lab_side(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if small_graph else df

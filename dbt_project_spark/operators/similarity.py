@@ -116,8 +116,12 @@ def bruteforce_topk(
 
     import numpy as np
 
+    from dbt_project_spark.caching import bounded_collect
+
     spark = queries.sparkSession
-    qrows = queries.select(query_id, qvec).limit(_BF_MAX_QUERIES + 1).collect()
+    # [] when empty or past the bound: both take the crossJoin path
+    qrows = bounded_collect(queries.select(query_id, qvec), _BF_MAX_QUERIES)
+    qrows = qrows or []
 
     def _qok(r):
         v = r[1]
@@ -128,12 +132,7 @@ def bruteforce_topk(
         )
 
     dims = {len(r[1]) for r in qrows if r[1] is not None}
-    if (
-        not qrows
-        or len(qrows) > _BF_MAX_QUERIES
-        or not all(_qok(r) for r in qrows)
-        or len(dims) != 1
-    ):
+    if not qrows or not all(_qok(r) for r in qrows) or len(dims) != 1:
         return _bruteforce_topk_join(
             queries, corpus, k, query_id, corpus_id, qvec, cvec
         )

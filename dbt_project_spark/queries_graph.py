@@ -1067,9 +1067,10 @@ def lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 LP_TOP_K = 20
 LP_MIN_COMMON = 2  # candidate floor (1 shared neighbor is noise)
-# Anti-join edge-broadcast bound (r13): see the comment at the use
-# site — tighter than CLOSING_BROADCAST_MAX_EDGES because this
-# broadcast shares the heap with the common-neighbor aggregation.
+# Broadcast bound of the anti-join edge set and the two degree tables
+# (r13): see the comments at the use sites — tighter than
+# CLOSING_BROADCAST_MAX_EDGES because these broadcasts share the heap
+# with the common-neighbor aggregation.
 LP_ANTI_BROADCAST_MAX_EDGES = 4_000_000
 
 
@@ -1127,18 +1128,16 @@ def link_prediction_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_quantity"
     )
-    from dbt_project_spark.operators.graph import (
-        CLOSING_BROADCAST_MAX_EDGES,
-        _edge_stats,
-    )
+    from dbt_project_spark.operators.graph import _edge_stats
 
     edges = persist_tracked(copurchase_edges(li))
     # r13: one job materializes the edge cache AND returns the id
-    # range for the packed-key guard. Without the eager fill, AQE
-    # materializes both wedge-join sides concurrently and a lazy
-    # persist cannot dedupe in-flight work — the whole basket build
-    # ran twice (59 s executor at sf0.1, the §4 minhash race).
-    _m, packed = _edge_stats(edges)
+    # range for the packed-key guard and the node-count bound. Without
+    # the eager fill, AQE materializes both wedge-join sides
+    # concurrently and a lazy persist cannot dedupe in-flight work —
+    # the whole basket build ran twice (59 s executor at sf0.1, the §4
+    # minhash race).
+    _m, packed, span = _edge_stats(edges)
     adj = edges.select(
         F.col("u").alias("node"), F.col("v").alias("nbr")
     ).unionAll(edges.select(F.col("v").alias("node"), F.col("u").alias("nbr")))
@@ -1201,12 +1200,15 @@ def link_prediction_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         if _m <= LP_ANTI_BROADCAST_MAX_EDGES:
             eab = F.broadcast(eab)
         nonedge = cn.join(eab, ["na", "nb"], "left_anti")
-    # r13: deg is node-sized (≤ 2m rows) — broadcast both degree
-    # attachments under the same edge bound so the surviving pair
-    # stream flows join→join→TakeOrdered with zero exchanges.
+    # r13: broadcast both degree attachments so the surviving pair
+    # stream flows join→join→TakeOrdered with zero exchanges. deg has
+    # one row per node, so the guard bounds the node count — by both
+    # 2m and the id span, exact upper bounds from the same job — under
+    # the anti-join's heap-sharing bound: a forced broadcast that
+    # cannot build fails the query instead of falling back.
     deg_a = deg.select(F.col("node").alias("na"), F.col("d").alias("d_a"))
     deg_b = deg.select(F.col("node").alias("nb"), F.col("d").alias("d_b"))
-    if _m <= CLOSING_BROADCAST_MAX_EDGES:
+    if min(2 * _m, span) <= LP_ANTI_BROADCAST_MAX_EDGES:
         deg_a, deg_b = F.broadcast(deg_a), F.broadcast(deg_b)
     sc = (
         nonedge.join(deg_a, "na")

@@ -756,7 +756,7 @@ def attribution_markov_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant), and each tiny iteration persists so the 24-round chain
     stays shallow. At 100 TB the events window is the only real cost.
     """
-    from dbt_project_spark.caching import persist_tracked
+    from dbt_project_spark.caching import bounded_collect, persist_tracked
 
     e = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", F.expr(_OKEY_SPARK).alias("ok")
@@ -816,8 +816,8 @@ def attribution_markov_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     # run the identical truncating-integer recurrence in Python ints;
     # the distributed loop below remains for a pathological
     # high-cardinality event_type corpus.
-    prows = p.limit(_MK_DRIVER_MAX + 1).collect()
-    if len(prows) <= _MK_DRIVER_MAX:
+    prows = bounded_collect(p, _MK_DRIVER_MAX)
+    if prows is not None:
         return _markov_removal_driver(spark, prows)
     variants = spark.createDataFrame(
         [("base",)] + [(c,) for c in MK_CHANNELS], "variant string"

@@ -1,30 +1,15 @@
-"""Sink builders: parquet (partitioned), CSV, JDBC (gated).
+"""JDBC sink (gated on a driver jar and a reachable database).
 
 The reference writes every analytic to MySQL via JDBC
 (spark_streaming_new.py:126-223). ``write_jdbc`` is live-tested
 against the Spark-bundled embedded Derby (tests/test_jdbc.py) —
-MySQL itself is reachable by swapping url+driver. Parquet sinks are
-the cluster-native equivalent (columnar, partition-pruned,
-object-store friendly) and what the analytics pipeline tests
-exercise.
+MySQL itself is reachable by swapping url+driver. The pipelines'
+own sinks write parquet through ``DataFrame.write``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-
-
-def write_parquet(
-    df: DataFrame, path: str, mode: str = "append", partition_by: str | None = None
-) -> None:
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(partition_by)
-    w.parquet(path)
-
-
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).option("header", "true").csv(path)
 
 
 def write_jdbc(

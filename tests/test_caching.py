@@ -17,6 +17,7 @@ from dbt_project_spark.caching import (
     _CHECKPOINTS,
     _TRACKED,
     RoundCache,
+    bounded_collect,
     local_checkpoint_tracked,
     persist_tracked,
     release_tracked,
@@ -31,6 +32,15 @@ def _n_stored_rdds(spark) -> int:
 
 def _stored_rdd_ids(spark) -> set:
     return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def test_bounded_collect_boundary(spark):
+    """Rows come back up to the bound and not one past it."""
+    five = spark.range(5)
+    assert bounded_collect(five.limit(0), 3) == []
+    assert sorted(r.id for r in bounded_collect(five, 5)) == [0, 1, 2, 3, 4]
+    assert bounded_collect(five, 4) is None
+    assert bounded_collect(five, 0) is None
 
 
 def test_release_tracked_drains_registry(spark):

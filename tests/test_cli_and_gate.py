@@ -1,5 +1,7 @@
 """CLI smoke tests (in-process) + oracle-gate sensitivity meta-test."""
 
+import json
+
 import duckdb
 
 from dbt_project_spark.cli import main
@@ -18,6 +20,19 @@ def test_cli_unknown_query_lists_catalog(spark, capsys):
     assert rc == 2
     out = capsys.readouterr().out
     assert "unknown query" in out and "tpch_q1" in out
+
+
+def test_cli_sweep_prints_one_json_line_per_query(spark, capsys):
+    rc = main(["sweep", "wt_bounce_rate", "tpch_q6", "--sf-dir", SF_SMOKE])
+    assert rc == 0
+    lines = [json.loads(x) for x in capsys.readouterr().out.splitlines()]
+    assert [x["query"] for x in lines] == ["wt_bounce_rate", "tpch_q6"]
+    assert all(x["wall_s"] >= 0 for x in lines)
+
+
+def test_cli_sweep_unknown_query(spark, capsys):
+    assert main(["sweep", "wt_bounce_rate", "not_a_query"]) == 2
+    assert "unknown query 'not_a_query'" in capsys.readouterr().out
 
 
 def test_cli_batch_csv(spark, tmp_path, capsys):

@@ -4,6 +4,7 @@ conservation and hand-computed fixed-point values."""
 
 import pyspark.sql.functions as F
 
+from dbt_project_spark.operators import graph
 from dbt_project_spark.operators.graph import (
     orient_by_degree,
     pagerank_fixedpoint,
@@ -103,32 +104,30 @@ def test_copurchase_basket_cap_bounds_hot_order(spark):
     assert {(10, 11), (10, 12), (11, 12)} <= edges
 
 
-def test_pagerank_shuffle_regime_bit_identical(spark):
-    """Above broadcast_threshold the rank joins run as plain shuffle
-    joins; integer fixed-point ranks must be bit-identical to the
-    broadcast regime (partitioning-independence is the whole point of
-    the scaled-BIGINT math)."""
+def test_pagerank_shuffle_regime_bit_identical(spark, monkeypatch):
+    """Above NODE_BROADCAST_MAX_NODES the rank joins run as plain
+    shuffle joins; integer fixed-point ranks must be bit-identical to
+    the broadcast regime (partitioning-independence is the whole point
+    of the scaled-BIGINT math)."""
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (3, 4), (4, 1), (5, 1)],
         "src bigint, dst bigint",
     )
+    monkeypatch.setattr(graph, "DRIVER_FIXPOINT_MAX_EDGES", 0)
+    bcast = {
+        row.node: row.r
+        for row in pagerank_fixedpoint(edges, iters=4).collect()
+    }
+    monkeypatch.setattr(graph, "NODE_BROADCAST_MAX_NODES", 0)
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         shuffled = {
             row.node: row.r
-            for row in pagerank_fixedpoint(
-                edges, iters=4, broadcast_threshold=0, driver_max_edges=0
-            ).collect()
+            for row in pagerank_fixedpoint(edges, iters=4).collect()
         }
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    bcast = {
-        row.node: row.r
-        for row in pagerank_fixedpoint(
-            edges, iters=4, driver_max_edges=0
-        ).collect()
-    }
     assert shuffled == bcast
 
 
@@ -185,19 +184,17 @@ def test_bfs_iteration_cap_truncates(spark):
     assert got == {0: 0, 1: 1, 2: 2}
 
 
-def test_bfs_custom_source_on_shuffle_path(spark):
+def test_bfs_custom_source_on_shuffle_path(spark, monkeypatch):
     from dbt_project_spark.operators.graph import bfs_hops
 
     g = _dedges(spark, [(5, 6), (6, 7), (1, 5)])
     src = spark.createDataFrame([(6,)], "node bigint")
-    # broadcast_threshold=0 forces the large-graph shuffle-join path
-    # (driver_max_edges=0 keeps the bounded-graph driver kernel out);
+    # A zero node bound forces the large-graph shuffle-join path (a
+    # zero edge bound keeps the bounded-graph driver kernel out);
     # results must be identical to the broadcast regime.
-    got = dict(
-        bfs_hops(
-            g, source=src, iters=4, broadcast_threshold=0, driver_max_edges=0
-        ).collect()
-    )
+    monkeypatch.setattr(graph, "NODE_BROADCAST_MAX_NODES", 0)
+    monkeypatch.setattr(graph, "DRIVER_FIXPOINT_MAX_EDGES", 0)
+    got = dict(bfs_hops(g, source=src, iters=4).collect())
     assert got == {6: 0, 7: 1}
 
 
@@ -334,21 +331,21 @@ def test_hits_matches_integer_mirror(spark):
     assert got == want
 
 
-def test_hits_shuffle_regime_bit_identical(spark):
+def test_hits_shuffle_regime_bit_identical(spark, monkeypatch):
     """Above/below the broadcast threshold must not change a single
     scaled score (integer fixed-point is partitioning-independent)."""
     from dbt_project_spark.operators.graph import hits_fixedpoint
 
     pairs = [(i, (i * 3 + 1) % 11) for i in range(11)] + [(0, 5), (7, 5)]
     e = _dedges(spark, pairs)
+    monkeypatch.setattr(graph, "DRIVER_FIXPOINT_MAX_EDGES", 0)
     small = {
         r["node"]: (r["h"], r["a"])
-        for r in hits_fixedpoint(e, iters=3, driver_max_edges=0).collect()
+        for r in hits_fixedpoint(e, iters=3).collect()
     }
+    monkeypatch.setattr(graph, "NODE_BROADCAST_MAX_NODES", 0)
     shuffled = {
         r["node"]: (r["h"], r["a"])
-        for r in hits_fixedpoint(
-            e, iters=3, broadcast_threshold=0, driver_max_edges=0
-        ).collect()
+        for r in hits_fixedpoint(e, iters=3).collect()
     }
     assert small == shuffled

@@ -3,19 +3,22 @@
 (PageRank / HITS / BFS / weighted SSSP) the driver-kernel path
 (default, edge count ≤ DRIVER_FIXPOINT_MAX_EDGES) must produce the
 EXACT same rows and dtypes as the distributed DataFrame iteration
-(forced with driver_max_edges=0). Graphs are chosen adversarially:
+(forced by setting DRIVER_FIXPOINT_MAX_EDGES to 0). Graphs are chosen adversarially:
 cycles, sinks, sources, disconnected pieces, hubs, self-referential
 normalization (HITS), unreachable nodes, multi-path min-relaxation
 (SSSP with a longer-but-cheaper route)."""
 
 import pytest
 
+from dbt_project_spark.operators import graph
 from dbt_project_spark.operators.graph import (
     bfs_hops,
     hits_fixedpoint,
     pagerank_fixedpoint,
     weighted_sssp,
 )
+
+_KERNELS = ("_pagerank_driver", "_hits_driver", "_bfs_sssp_driver")
 
 # Directed planted graphs: cycle + chords + sink, two components with
 # a hub, a long chain (exercises the BFS/SSSP frontier over many
@@ -37,7 +40,29 @@ def _rows(df):
     return sorted(map(tuple, df.collect()))
 
 
-def _check(df_driver, df_dist):
+def _spy(kernel, calls):
+    def run(*a, **kw):
+        calls.append(kernel.__name__)
+        return kernel(*a, **kw)
+
+    return run
+
+
+def _check(op, *args, **kwargs):
+    """Run ``op`` on the driver kernel (the default for these small
+    graphs) and on the distributed iteration; assert each call took the
+    path it names and that both give the same rows and schema."""
+    calls = []
+    with pytest.MonkeyPatch.context() as mp:
+        for name in _KERNELS:
+            mp.setattr(graph, name, _spy(getattr(graph, name), calls))
+        df_driver = op(*args, **kwargs)
+    assert calls, "driver kernel did not run"
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(graph, "DRIVER_FIXPOINT_MAX_EDGES", 0)
+        for name in _KERNELS:
+            mp.setattr(graph, name, None)  # calling it would raise
+        df_dist = op(*args, **kwargs)
     assert df_driver.schema == df_dist.schema
     assert _rows(df_driver) == _rows(df_dist)
 
@@ -45,37 +70,25 @@ def _check(df_driver, df_dist):
 @pytest.mark.parametrize("pairs", GRAPHS)
 def test_pagerank_driver_kernel_bit_identical(spark, pairs):
     e = _dedges(spark, pairs)
-    _check(
-        pagerank_fixedpoint(e, iters=4),
-        pagerank_fixedpoint(e, iters=4, driver_max_edges=0),
-    )
+    _check(pagerank_fixedpoint, e, iters=4)
 
 
 @pytest.mark.parametrize("pairs", GRAPHS)
 def test_hits_driver_kernel_bit_identical(spark, pairs):
     e = _dedges(spark, pairs)
-    _check(
-        hits_fixedpoint(e, iters=4),
-        hits_fixedpoint(e, iters=4, driver_max_edges=0),
-    )
+    _check(hits_fixedpoint, e, iters=4)
 
 
 @pytest.mark.parametrize("pairs", GRAPHS)
 def test_bfs_driver_kernel_bit_identical(spark, pairs):
     e = _dedges(spark, pairs)
-    _check(
-        bfs_hops(e, iters=5),
-        bfs_hops(e, iters=5, driver_max_edges=0),
-    )
+    _check(bfs_hops, e, iters=5)
 
 
 def test_bfs_driver_kernel_custom_source(spark):
     e = _dedges(spark, [(5, 6), (6, 7), (1, 5)])
     src = spark.createDataFrame([(6,)], "node bigint")
-    _check(
-        bfs_hops(e, source=src, iters=4),
-        bfs_hops(e, source=src, iters=4, driver_max_edges=0),
-    )
+    _check(bfs_hops, e, source=src, iters=4)
 
 
 @pytest.mark.parametrize(
@@ -92,16 +105,10 @@ def test_sssp_driver_kernel_bit_identical(spark, pairs):
         [(int(s), int(d), int(c)) for s, d, c in pairs],
         "src bigint, dst bigint, cost bigint",
     )
-    _check(
-        weighted_sssp(e, iters=4),
-        weighted_sssp(e, iters=4, driver_max_edges=0),
-    )
+    _check(weighted_sssp, e, iters=4)
 
 
 def test_driver_kernel_iteration_cap_matches(spark):
     # the hop cap truncates reachability identically on both paths
     chain = _dedges(spark, [(i, i + 1) for i in range(8)])
-    _check(
-        bfs_hops(chain, iters=2),
-        bfs_hops(chain, iters=2, driver_max_edges=0),
-    )
+    _check(bfs_hops, chain, iters=2)

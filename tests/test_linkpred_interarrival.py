@@ -69,6 +69,37 @@ def test_link_prediction_negative_ids_take_unpacked_keys(spark, tmp_path):
     assert got == {(-3, -1): 1_000_000, (7, 8): 1_000_000}
 
 
+def test_link_prediction_degree_broadcast_bounded_by_node_count(
+    spark, tmp_path, monkeypatch
+):
+    """The degree tables have one row per node: with widely spaced ids
+    (span 3·10⁶ + 1) and 2m = 8 both over the bound, they must not be
+    broadcast even though the m = 4 edge set still is — and the rows
+    must equal the broadcast run's."""
+    import dbt_project_spark.queries_graph as QG
+
+    ids = [1_000_000, 2_000_000, 3_000_000, 4_000_000]
+    a, b, c, d = ids
+    _write_lineitem(spark, tmp_path, [[a, b], [b, c], [c, d], [a, d]])
+
+    def run():
+        df = QG.link_prediction_jaccard(spark, str(tmp_path))
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return sorted(map(tuple, df.collect())), plan.count("BroadcastHashJoin")
+
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        want, n_bcast = run()
+        monkeypatch.setattr(QG, "LP_ANTI_BROADCAST_MAX_EDGES", 4)
+        got, n_bounded = run()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert n_bcast - n_bounded == 2  # deg_a and deg_b, not the anti-join
+    assert got == want
+    assert {(r[0], r[1]) for r in got} == {(a, c), (b, d)}
+
+
 def test_interarrival_hand_computed_moments(spark, tmp_path):
     from dbt_project_spark.queries_timeseries import interarrival_stats
 

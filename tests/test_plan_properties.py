@@ -372,38 +372,38 @@ def test_pagerank_ranks_are_broadcast(spark):
     is a local/RDD relation with NO joins and NO exchanges; the
     per-iteration distributed plan died with it. (The distributed
     path's broadcast-vs-shuffle property is pinned on the operator
-    with driver_max_edges=0 in the test below; driver-vs-distributed
-    bit-identity in tests/test_graph_driver_kernel.py.)"""
+    with DRIVER_FIXPOINT_MAX_EDGES = 0 in the test below;
+    driver-vs-distributed bit-identity in
+    tests/test_graph_driver_kernel.py.)"""
     plan = _plan(QUERIES["pagerank_trade"](spark, SF_SMOKE))
     assert "Join" not in plan  # no per-iteration joins remain
     assert _exchanges(plan) == 0
     assert "ExistingRDD" in plan or "LocalTableScan" in plan
 
 
-def test_pagerank_broadcast_is_conditional_on_node_count(spark):
+def test_pagerank_broadcast_is_conditional_on_node_count(spark, monkeypatch):
     """The generic operator must hint broadcast only under the node
     threshold: past ~10⁷ nodes a broadcast rank table is a driver OOM.
     Both regimes are pinned — the small graph broadcasts even with
     auto-broadcast disabled (explicit hint), the above-threshold
     binding plans shuffle joins for the SAME graph."""
+    from dbt_project_spark.operators import graph
     from dbt_project_spark.operators.graph import pagerank_fixedpoint
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1)], "src bigint, dst bigint"
     )
+    # A zero edge bound forces the distributed iteration (the default
+    # would take the bounded-graph driver kernel, whose plan is a
+    # LocalRelation with no joins at all).
+    monkeypatch.setattr(graph, "DRIVER_FIXPOINT_MAX_EDGES", 0)
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        # driver_max_edges=0 forces the distributed iteration (the
-        # default would take the bounded-graph driver kernel, whose
-        # plan is a LocalRelation with no joins at all).
-        hinted = _plan(pagerank_fixedpoint(edges, iters=2, driver_max_edges=0))
+        hinted = _plan(pagerank_fixedpoint(edges, iters=2))
         assert "BroadcastHashJoin" in hinted
-        unhinted = _plan(
-            pagerank_fixedpoint(
-                edges, iters=2, broadcast_threshold=0, driver_max_edges=0
-            )
-        )
+        monkeypatch.setattr(graph, "NODE_BROADCAST_MAX_NODES", 0)
+        unhinted = _plan(pagerank_fixedpoint(edges, iters=2))
         assert "BroadcastHashJoin" not in unhinted
         assert "SortMergeJoin" in unhinted or "ShuffledHashJoin" in unhinted
     finally:

@@ -54,8 +54,9 @@ def _write_hourly_source(spark, src):
         "HDFSBackedStateStoreProvider",
         # the 100×-scale provider: state lives in local RocksDB SSTs,
         # not on the executor heap (r11 — VERDICT r10 task 7; the full
-        # 999k-group run is state_rocksdb_r11.json). rocksdbjni ships
-        # with pyspark; no protobuf needed, unlike transformWithState.
+        # 999k-group run is state_rocksdb_r11.json in git history, at
+        # fa59f28 and before). rocksdbjni ships with pyspark; no
+        # protobuf needed, unlike transformWithState.
         "org.apache.spark.sql.execution.streaming.state."
         "RocksDBStateStoreProvider",
     ],
