@@ -235,7 +235,7 @@ def editdistance_pairs(
             .filter(F.col("__n") > max_block)
             .select("pfx", "band")
         )
-        blocked = blocked.join(F.broadcast(hot), on=["pfx", "band"], how="left_anti")
+        blocked = blocked.join(hot, on=["pfx", "band"], how="left_anti")
     a = blocked.select(F.col(name_col).alias("name_a"), "pfx", "band")
     b = blocked.select(F.col(name_col).alias("name_b"), "pfx", "band")
     return (
@@ -359,7 +359,6 @@ def verify_jaccard(
     cand: DataFrame,
     postings: DataFrame,
     threshold: float,
-    broadcast_docs: bool = True,
     hash_nchars: int = 15,
 ) -> DataFrame:
     """Exact n-gram Jaccard for candidate (doc_a, doc_b) pairs from a
@@ -374,17 +373,13 @@ def verify_jaccard(
     AQE falls back to shuffling the FULL postings relation — measured
     at sf10 (500k docs): 1.8 GB of the dedup chain's 1.9 GB shuffle
     was exactly that, invisible at sf1 where the probe side stayed
-    broadcastable.
-
-    ``broadcast_docs``: the doc list is ids-only (≤ 2·|pairs| rows) —
-    bounded by the near-dup count, so broadcastable for every shipped
-    consumer (banded LSH + hot-bucket caps keep pairs ≈ O(dups)). A
-    caller whose candidate set can be corpus-sized passes False and
-    gets a plain semi-join (postings shuffle once on doc — the honest
-    cost when the pair set itself is corpus-scale). Deliberately NOT
-    decided by an eager count(): a build-time job per verify call
-    re-ordered the whole pipeline's materialization and measured
-    +17 s on the CC-backed catalog rows at sf0.1.
+    broadcastable. The doc list is ids-only and at most 2·|pairs| rows,
+    so its size is set by the near-dup count (banded LSH + hot-bucket
+    caps keep pairs ≈ O(dups)), not the corpus: it is broadcast onto the
+    postings, which never shuffle on doc. Deliberately not sized by an
+    eager count(): a job per verify call re-ordered the pipeline's
+    materialization (measured +8% on the CC-backed dedup rows at sf0.1;
+    an earlier layout measured +17 s).
 
     Both persists are lazy (filled at first materialization): cand
     fans out to the docs list and the pair join, needed to both verify
@@ -398,8 +393,7 @@ def verify_jaccard(
         .unionByName(cand.select(F.col("doc_b").alias("doc")))
         .distinct()
     )
-    if broadcast_docs:
-        docs = F.broadcast(docs)
+    docs = F.broadcast(docs)
     # r13 note (VERDICT r12 task 5): a candidate-local df≥2 prune of
     # the postings (drop shingles held by one candidate doc before the
     # pair joins) was implemented and MEASURED COUNTERPRODUCTIVE at
@@ -439,8 +433,8 @@ def verify_jaccard(
         [(needed, "h")]
         if coll.count() == 0
         else [
-            (needed.join(F.broadcast(coll), on="h", how="left_anti"), "h"),
-            (needed.join(F.broadcast(coll), on="h", how="left_semi"), "sg"),
+            (needed.join(coll, on="h", how="left_anti"), "h"),
+            (needed.join(coll, on="h", how="left_semi"), "sg"),
         ]
     )
     parts = []
@@ -827,7 +821,7 @@ def containment_pairs(
             .filter(F.col("__n") > max_bucket)
             .select("sg")
         )
-        ex = ex.join(F.broadcast(hot), on="sg", how="left_anti")
+        ex = ex.join(hot, on="sg", how="left_anti")
     a = ex.select(F.col("doc").alias("doc_a"), F.col("sz").alias("sz_a"), "sg")
     b = ex.select(F.col("doc").alias("doc_b"), F.col("sz").alias("sz_b"), "sg")
     return (

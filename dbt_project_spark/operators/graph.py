@@ -52,6 +52,23 @@ DRIVER_FIXPOINT_MAX_EDGES = 100_000
 NODE_BROADCAST_MAX_NODES = 10_000_000
 
 
+def _endpoints(edges: DataFrame) -> DataFrame:
+    """One ``node`` row per edge endpoint (src ∪ dst, with repeats)."""
+    return edges.select(F.col("src").alias("node")).unionAll(
+        edges.select(F.col("dst").alias("node"))
+    )
+
+
+def _node_side(nodes: DataFrame):
+    """The broadcast guard of the distributed node-table iterations:
+    count ``nodes`` once and return the function each round applies to
+    its nodes-sized join side — a broadcast while the count is at most
+    NODE_BROADCAST_MAX_NODES, else the frame unchanged (the planner and
+    AQE choose). The count also warms a persisted ``nodes``."""
+    small = nodes.count() <= NODE_BROADCAST_MAX_NODES
+    return lambda df: F.broadcast(df) if small else df
+
+
 def _node_rows_df(
     edges: DataFrame, src_col: str, rows: list[tuple], value_fields: list
 ) -> DataFrame:
@@ -194,8 +211,8 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     )
     n_edges = edges.agg(F.count(F.lit(1)).alias("n_edges"))
     return (
-        n_nodes.crossJoin(F.broadcast(n_edges))
-        .crossJoin(F.broadcast(tri))
+        n_nodes.crossJoin(n_edges)
+        .crossJoin(tri)
         .select("n_nodes", "n_edges", F.col("n_triangles").cast("bigint"))
     )
 
@@ -270,23 +287,15 @@ def pagerank_fixedpoint(
     es = bounded_collect(edges.select("src", "dst"), DRIVER_FIXPOINT_MAX_EDGES)
     if es is not None:
         return _pagerank_driver(edges, es, iters, scale, damping_pct)
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionAll(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
+    nodes = _endpoints(edges).distinct()
     outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("od"))
     n_nodes = nodes.agg(F.count(F.lit(1)).alias("n"))
     edges = persist_tracked(edges.join(outdeg, "src"))
-    nodes = persist_tracked(nodes.crossJoin(F.broadcast(n_nodes)))
+    nodes = persist_tracked(nodes.crossJoin(n_nodes))
     teleport_pct = 100 - damping_pct
 
-    # One scalar count decides the join strategy for every iteration;
-    # nodes is persisted, so this also warms the cache the loop reuses.
-    small_graph = nodes.count() <= NODE_BROADCAST_MAX_NODES
-
-    def _rank_side(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if small_graph else df
+    # One count decides the join strategy for every iteration.
+    side = _node_side(nodes)
 
     # Each ranks_k feeds exactly ONE downstream join
     # (contrib_{k+1}), so the lazy chain already executes each
@@ -299,7 +308,7 @@ def pagerank_fixedpoint(
     for _ in range(iters):
         contrib = (
             edges.join(
-                _rank_side(ranks.select("node", "r")),
+                side(ranks.select("node", "r")),
                 edges.src == F.col("node"),
             )
             .select("dst", F.expr("r div od").alias("part"))
@@ -307,7 +316,7 @@ def pagerank_fixedpoint(
             .agg(F.sum("part").alias("contrib"))
         )
         ranks = nodes.join(
-            _rank_side(contrib), nodes.node == contrib.dst, "left"
+            side(contrib), nodes.node == contrib.dst, "left"
         ).select(
             "node",
             "n",
@@ -394,16 +403,8 @@ def hits_fixedpoint(
     es = bounded_collect(edges.select("src", "dst"), DRIVER_FIXPOINT_MAX_EDGES)
     if es is not None:
         return _hits_driver(edges, es, iters, scale)
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionAll(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    nodes = persist_tracked(nodes)
-    small_graph = nodes.count() <= NODE_BROADCAST_MAX_NODES
-
-    def _side(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if small_graph else df
+    nodes = persist_tracked(_endpoints(edges).distinct())
+    side = _node_side(nodes)
 
     def _normalize(raw: DataFrame, key: str, col: str):
         """(key, raw) -> Checkpoint of (node, col) max-normalized.
@@ -421,7 +422,7 @@ def hits_fixedpoint(
         as soon as the checkpoint lands."""
         raw = persist_tracked(raw)
         mx = raw.agg(F.max("raw").alias("mx"))
-        out = raw.crossJoin(F.broadcast(mx)).select(
+        out = raw.crossJoin(mx).select(
             F.col(key).alias("node"),
             F.expr(f"CAST(raw AS DECIMAL(38,0)) * {scale} div mx")
             .cast("bigint")
@@ -436,7 +437,7 @@ def hits_fixedpoint(
     hub_cp = auth_cp = None
     for _ in range(iters):
         hraw = (
-            edges.join(_side(auth), edges.dst == auth.node)
+            edges.join(side(auth), edges.dst == auth.node)
             .groupBy("src")
             .agg(F.sum("a").alias("raw"))
         )
@@ -452,16 +453,16 @@ def hits_fixedpoint(
             auth_cp.release()
         hub_cp, hub = new_hub, new_hub.df
         araw = (
-            edges.join(_side(hub), edges.src == hub.node)
+            edges.join(side(hub), edges.src == hub.node)
             .groupBy("dst")
             .agg(F.sum("h").alias("raw"))
         )
         auth_cp = _normalize(araw, "dst", "a")
         auth = auth_cp.df
     out = (
-        nodes.join(_side(hub).withColumnRenamed("node", "hn"),
+        nodes.join(side(hub).withColumnRenamed("node", "hn"),
                    nodes.node == F.col("hn"), "left")
-        .join(_side(auth).withColumnRenamed("node", "an"),
+        .join(side(auth).withColumnRenamed("node", "an"),
               nodes.node == F.col("an"), "left")
     )
     return out.select(
@@ -530,10 +531,8 @@ def _shortest_paths(
     es = bounded_collect(edges, DRIVER_FIXPOINT_MAX_EDGES)
     if es is not None:
         return _bfs_sssp_driver(edges, es, source, iters, weighted)
-    ends = edges.select(F.col("src").alias("node")).unionAll(
-        edges.select(F.col("dst").alias("node"))
-    )
-    small_graph = ends.distinct().count() <= NODE_BROADCAST_MAX_NODES
+    ends = _endpoints(edges)
+    side = _node_side(ends.distinct())
     if source is None:
         source = ends.agg(F.min("node").alias("node"))
     zero = F.lit(0).cast("bigint") if weighted else F.lit(0)
@@ -541,8 +540,7 @@ def _shortest_paths(
     dist = source.select("node", zero.alias(val))
     rounds = RoundCache(_BFS_CHECKPOINT_EVERY)
     for _ in range(iters):
-        side = F.broadcast(dist) if small_graph else dist
-        nxt = edges.join(side, edges.src == dist.node).select(
+        nxt = edges.join(side(dist), edges.src == dist.node).select(
             F.col("dst").alias("node"), (dist[val] + step).alias(val)
         )
         new = dist.unionAll(nxt).groupBy("node").agg(F.min(val).alias(val))
@@ -713,8 +711,7 @@ def graph_diagnostics(edges: DataFrame) -> DataFrame:
 
     edges = persist_tracked(edges.select("src", "dst"))
     deg = persist_tracked(
-        edges.select(F.col("src").alias("node"))
-        .unionAll(edges.select(F.col("dst").alias("node")))
+        _endpoints(edges)
         .groupBy("node")
         .agg(F.count(F.lit(1)).cast("bigint").alias("d"))
     )
@@ -735,8 +732,8 @@ def graph_diagnostics(edges: DataFrame) -> DataFrame:
     )
     n_nodes = deg.agg(F.count(F.lit(1)).cast("bigint").alias("n_nodes"))
     return (
-        s.crossJoin(F.broadcast(rec))
-        .crossJoin(F.broadcast(n_nodes))
+        s.crossJoin(rec)
+        .crossJoin(n_nodes)
         .select(
             "n_nodes",
             F.col("m").alias("n_edges"),
@@ -819,16 +816,13 @@ def label_propagation(edges: DataFrame, iters: int = 4) -> DataFrame:
         ).repartition("node")
     )
     nodes = persist_tracked(adj.select("node").distinct())
-    small_graph = nodes.count() <= NODE_BROADCAST_MAX_NODES
-
-    def _lab_side(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if small_graph else df
+    side = _node_side(nodes)
 
     lab = nodes.select("node", F.col("node").alias("lab"))
     rounds = RoundCache(_BFS_CHECKPOINT_EVERY)
     for i in range(iters):
         ln = lab.select(F.col("node").alias("nbr"), F.col("lab").alias("nl"))
-        nbr = adj.join(_lab_side(ln), "nbr").select("node", "nl")
+        nbr = adj.join(side(ln), "nbr").select("node", "nl")
         cnt = nbr.groupBy("node", "nl").agg(F.count(F.lit(1)).alias("c"))
         # arg-max as a max_by aggregate (map-side partials), not a
         # rank window: key = c·1e12 − label picks the highest count,

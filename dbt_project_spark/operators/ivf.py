@@ -288,7 +288,7 @@ def build_ivf_index(
     )
     scored = (
         cand.filter(F.col("n_cand") > 1)
-        .join(F.broadcast(cn), on="cid")
+        .join(cn, on="cid")
         .withColumn("nv", l2_norm("embedding"))
         .withColumn(
             "s",
@@ -343,7 +343,7 @@ def probe_cells(
     from pyspark.sql import Window
 
     qs = (
-        queries.crossJoin(F.broadcast(cent))
+        queries.crossJoin(cent)
         .withColumn("s", F.round(cosine_similarity("qe", "ce"), 6))
         .select("query_id", "qe", "cid", _assign_key().alias("key"))
     )
@@ -601,7 +601,7 @@ def build_pq_index(
                 lambda x: F.round(x.cast("double") * KM_SCALE).cast("bigint"),
             ).alias("civ"),
         )
-        iv = cells.join(F.broadcast(centi), on="cid").select(
+        iv = cells.join(centi, on="cid").select(
             F.col("vec_id").alias("vid"),
             F.zip_with(
                 F.transform(

@@ -1,8 +1,18 @@
 """Join-strategy operators: broadcast dims, salted skew joins,
 bucketed range joins, and bucketed-table co-located joins.
 
+Join policy: Spark's planner and AQE choose each join's strategy, from
+size estimates and again from each finished shuffle stage's measured
+size. A forced broadcast cannot fall back (one that cannot be built
+fails the query), so the package forces one only behind a measured
+guard or a stated bound (``verify_jaccard``'s doc list, a dimension the
+caller names in ``broadcast_dim_join``); tests/test_join_policy.py
+holds the allow-list. A small side the
+planner cannot size is shown to it: ``literal_table``, ``at_most``.
+
 These encode the 100 TB join playbook:
-- dimension tables broadcast (no shuffle of the fact side);
+- dimension tables broadcast (no shuffle of the fact side) — by AQE,
+  or by ``broadcast_dim_join`` when the caller states it;
 - a skewed key salts the big side and explodes the small side —
   turning one straggler partition into n_salts even ones;
 - interval/range joins bucket the time axis so candidates are
@@ -14,8 +24,9 @@ These encode the 100 TB join playbook:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 
 def broadcast_dim_join(
@@ -23,8 +34,30 @@ def broadcast_dim_join(
 ) -> DataFrame:
     """Explicit broadcast join: dimension-ness is semantic knowledge
     (nation has 25 rows at ANY scale factor) that Spark's size
-    estimator can't always see through a plan."""
+    estimator can't always see through a plan. The caller vouches for
+    ``dim``'s size (in the catalog: a row per embedding dimension)."""
     return fact.join(F.broadcast(dim), on, how)
+
+
+def literal_table(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """Literal ``rows`` (DDL ``schema``) with a size the planner sees.
+    ``createDataFrame`` has none, so crossed with an unsized scan it plans
+    a CartesianProduct; one row exploded into structs is a few bytes."""
+    fields = DataType.fromDDL(schema).fields
+    structs = [
+        F.struct(*[F.lit(v).cast(f.dataType).alias(f.name) for v, f in zip(r, fields)])
+        for r in rows
+    ]
+    return spark.range(1).select(F.inline(F.array(*structs)))
+
+
+def at_most(df: DataFrame, max_rows: int) -> DataFrame:
+    """``df``, at most ``max_rows`` rows by construction (a key filter, a
+    top-k, a product of such), with the bound shown to the planner: a
+    filter or join is sized from its inputs, so a join against it shuffles
+    the other side (or plans a CartesianProduct) at scale; a LIMIT is
+    sized at ``max_rows`` rows and broadcast. It drops no row."""
+    return df.limit(max_rows)
 
 
 def salted_join(
@@ -186,7 +219,7 @@ def bloom_might_contain(
     JVM bit arithmetic in the scan stage, no shuffle."""
     from dbt_project_spark.functions.expressions import md5_int
 
-    out = probe.crossJoin(F.broadcast(bitmap))
+    out = probe.crossJoin(bitmap)
     cond = F.lit(True)
     for i in range(k_hashes):
         p = md5_int(F.concat(F.lit(f"{i}:"), F.col(key_col).cast("string"))) % m_bits

@@ -270,7 +270,7 @@ def assign_clusters(iv: DataFrame, cent: DataFrame) -> DataFrame:
 def probe_clusters(iv: DataFrame, cent: DataFrame, nprobe: int) -> DataFrame:
     """(vid, cid): each vector's ``nprobe`` nearest centroids (the IVF
     query-side recall dial)."""
-    scored = iv.crossJoin(F.broadcast(cent)).withColumn("key", _d2_key())
+    scored = iv.crossJoin(cent).withColumn("key", _d2_key())
     w = Window.partitionBy("vid").orderBy(F.asc("key"))
     return (
         scored.withColumn("rn", F.row_number().over(w))

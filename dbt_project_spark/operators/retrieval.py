@@ -68,7 +68,7 @@ def bm25_scored(docs: DataFrame, terms: tuple[str, ...]) -> DataFrame:
         )
     stats = d.agg(*aggs)
 
-    s = d.crossJoin(F.broadcast(stats))
+    s = d.crossJoin(stats)
     score_terms = []
     for i in range(len(terms)):
         idf6 = f"round(ln((n - df{i} + 0.5) / (df{i} + 0.5) + 1), 6)"

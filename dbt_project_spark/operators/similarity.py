@@ -71,8 +71,7 @@ def _bruteforce_topk_join(
     fallback for degenerate query sets (null/ragged/non-finite/
     zero-norm query vectors, mixed dims, or > _BF_MAX_QUERIES rows)."""
     sims = (
-        F.broadcast(queries)
-        .crossJoin(corpus)
+        queries.crossJoin(corpus)
         .filter(F.col(query_id) != F.col(corpus_id))
         .withColumn("cosine", F.round(cosine_similarity(qvec, cvec), 6))
     )
@@ -227,7 +226,7 @@ def bruteforce_topk(
 
     cand = corpus.select(corpus_id, cvec).mapInArrow(kernel, out_schema)
     scored = (
-        cand.join(F.broadcast(queries.select(query_id, qvec)), on=query_id)
+        cand.join(queries.select(query_id, qvec), on=query_id)
         .filter(F.col(query_id) != F.col(corpus_id))
         .withColumn("cosine", F.round(cosine_similarity(qvec, cvec), 6))
     )
@@ -763,8 +762,7 @@ def hyperplane_lsh_topk(
     qb = with_lsh_bucket(queries, qvec)
     cb = with_lsh_bucket(corpus, cvec)
     sims = (
-        F.broadcast(qb)
-        .join(cb, on="bucket")
+        qb.join(cb, on="bucket")
         .filter(F.col(query_id) != F.col(corpus_id))
         .withColumn("cosine", F.round(cosine_similarity(qvec, cvec), 6))
     )

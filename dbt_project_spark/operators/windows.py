@@ -152,8 +152,8 @@ def distributed_ntile(
     total = counts.agg(F.sum("__bn").cast("bigint").alias("__n"))
     wr = Window.partitionBy("__bkt").orderBy(*order_cols)
     ranked = (
-        tagged.join(F.broadcast(offs), "__bkt")
-        .crossJoin(F.broadcast(total))
+        tagged.join(offs, "__bkt")
+        .crossJoin(total)
         .withColumn("__r", (F.col("__off") + F.row_number().over(wr)).cast("bigint"))
     )
     # NTILE semantics: q = n div k rows per tile, the first n % k

@@ -30,6 +30,16 @@ from pyspark.sql import functions as F
 _REF_RE = re.compile(r"\{\{\s*(ref|source)\(\s*'([^']+)'\s*\)\s*\}\}")
 
 
+def _has_data(spark: SparkSession, path: str, schema) -> bool:
+    """Whether a target holds a data file, as Spark's listing sees them.
+    None (an empty batch writes only ``_SUCCESS``): a first run. One that
+    cannot be read raises on its read instead of being overwritten."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    if not jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
+        return False
+    return len(spark.read.schema(schema).parquet(path).inputFiles()) > 0
+
+
 class SchemaTestError(AssertionError):
     """A dbt-style schema test found violating rows."""
 
@@ -136,13 +146,12 @@ class Project:
             if m.partition_by is None:
                 raise ValueError(f"incremental model {m.name} needs partition_by")
             existing_max = None
-            try:
-                existing = self.spark.read.parquet(path)
-                existing_max = existing.agg(
-                    F.max(m.partition_by).alias("m")
-                ).collect()[0]["m"]
-            except Exception:  # first run: no target yet
-                existing = None
+            if _has_data(self.spark, path, df.schema):
+                existing_max = (
+                    self.spark.read.parquet(path)
+                    .agg(F.max(m.partition_by).alias("m"))
+                    .collect()[0]["m"]
+                )
             if existing_max is not None:
                 df = df.filter(F.col(m.partition_by) > F.lit(existing_max))
             (
@@ -174,11 +183,7 @@ class Project:
                 raise ValueError(
                     f"merge model {m.name} needs partition_by + unique_key"
                 )
-            try:
-                existing = self.spark.read.parquet(path)
-            except Exception:  # first run: plain partitioned write
-                existing = None
-            if existing is None:
+            if not _has_data(self.spark, path, df.schema):  # first run
                 df.write.mode("overwrite").partitionBy(m.partition_by).parquet(
                     path
                 )
@@ -187,7 +192,7 @@ class Project:
                     r[0]
                     for r in df.select(m.partition_by).distinct().collect()
                 ]  # partitions-sized driver list, like the high-water mark
-                survivors = existing.filter(
+                survivors = self.spark.read.parquet(path).filter(
                     F.col(m.partition_by).isin(affected)
                 ).join(
                     df.select(m.unique_key).distinct(),
@@ -219,6 +224,8 @@ class Project:
                     cp.release()
         else:
             raise ValueError(f"unknown materialization {m.materialized!r}")
+        if not _has_data(self.spark, path, df.schema):  # an empty batch: no schema on disk
+            return self.spark.read.schema(df.schema).parquet(path)
         return self.spark.read.parquet(path)
 
     def run(self, names: list[str] | None = None) -> dict[str, DataFrame]:

@@ -976,7 +976,7 @@ def hll_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("est"),
     )
     exact = ev.agg(F.countDistinct("user_id").alias("exact_month_users"))
-    return rolled.crossJoin(F.broadcast(exact)).select(
+    return rolled.crossJoin(exact).select(
         F.col("n_days").cast("bigint"),
         "exact_month_users",
         (
@@ -1069,7 +1069,7 @@ def theta_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
             0.05 * exact_col, F.lit(2.0)
         )
 
-    return est.crossJoin(F.broadcast(exact)).select(
+    return est.crossJoin(exact).select(
         F.col("exact_purchase").cast("bigint"),
         F.col("exact_error").cast("bigint"),
         F.col("exact_inter").cast("bigint"),
@@ -1142,12 +1142,12 @@ def rolling_distinct_users_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     offs = spark.range(ROLLING_WINDOW_DAYS).select(F.col("id").alias("k"))
     fan = (
-        ud.crossJoin(F.broadcast(offs))
+        ud.crossJoin(offs)
         .select("user_id", (F.col("ed") + F.col("k")).alias("rd"))
         .distinct()
     )
     r = (
-        fan.crossJoin(F.broadcast(b))
+        fan.crossJoin(b)
         .filter((F.col("rd") >= F.col("mind")) & (F.col("rd") <= F.col("maxd")))
         .groupBy("rd")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_users_7d"))
@@ -1441,12 +1441,12 @@ def stickiness_dau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = ud.agg(F.min("ed").alias("mind"), F.max("ed").alias("maxd"))
     offs = spark.range(MAU_WINDOW_DAYS).select(F.col("id").alias("k"))
     fan = (
-        ud.crossJoin(F.broadcast(offs))
+        ud.crossJoin(offs)
         .select("user_id", (F.col("ed") + F.col("k")).alias("rd"))
         .distinct()
     )
     mau = (
-        fan.crossJoin(F.broadcast(b))
+        fan.crossJoin(b)
         .filter((F.col("rd") >= F.col("mind")) & (F.col("rd") <= F.col("maxd")))
         .groupBy("rd")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_mau"))
@@ -1504,7 +1504,7 @@ def user_decay_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("unix_timestamp(ts) div 86400").cast("bigint").alias("ed"),
     )
     mx = e.agg(F.max("ed").alias("maxd"))
-    w = e.crossJoin(F.broadcast(mx)).select(
+    w = e.crossJoin(mx).select(
         "user_id",
         "value100",
         "ed",
@@ -1569,7 +1569,7 @@ def cumulative_reach_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     t = n.agg(F.sum("new_users").cast("bigint").alias("total"))
     wc = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
-    return n.crossJoin(F.broadcast(t)).select(
+    return n.crossJoin(t).select(
         "day",
         "new_users",
         F.sum("new_users").over(wc).cast("bigint").alias("cum_users"),
@@ -1702,7 +1702,7 @@ def capture_recapture_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("(min(ep) + max(ep)) div 2").cast("bigint").alias("m")
     )
     u = (
-        e.crossJoin(F.broadcast(mid))
+        e.crossJoin(mid)
         .groupBy("user_id")
         .agg(
             F.max(F.when(F.col("ep") < F.col("m"), 1).otherwise(0))

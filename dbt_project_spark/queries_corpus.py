@@ -20,6 +20,7 @@ from dbt_project_spark.operators.dedup import (
     shingles_col,
     tokens_col,
 )
+from dbt_project_spark.operators.joins import literal_table
 from dbt_project_spark.operators.text_clean import normalize_text
 from dbt_project_spark.queries_dedup import _minhash_oracle
 from dbt_project_spark.sources import load_table
@@ -74,7 +75,7 @@ def contamination_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.explode(shingles_col("__toks", CONTAM_N)).alias("g")
     )
     is_bench = F.col("doc_id") % BENCH_MOD == 0
-    bench = F.broadcast(grams.filter(is_bench).select("g").distinct())
+    bench = grams.filter(is_bench).select("g").distinct()
     corpus = grams.filter(~is_bench)
     szs = corpus.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
     hits = (
@@ -245,9 +246,6 @@ def corpus_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         docs.select("doc_id")
-        # no broadcast hint: the near-dup label table is usually tiny
-        # (AQE will broadcast it), but on a pathological corpus it can
-        # be corpus-sized — let the optimizer decide from stats.
         .join(labels, on="doc_id", how="left")
         .select(
             "doc_id",
@@ -366,7 +364,7 @@ def split_group_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_tokens").cast("bigint").alias("n_tokens"),
             F.countDistinct("cluster_id").cast("bigint").alias("n_clusters"),
         )
-        .crossJoin(F.broadcast(leak))
+        .crossJoin(leak)
         .select("split", "n_docs", "n_tokens", "n_clusters", "leak_pairs")
     )
 
@@ -437,7 +435,7 @@ def _bigram_doc_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         occ.join(bgc, "bg")
         .join(c1.withColumnRenamed("w", "w1"), "w1")
-        .crossJoin(F.broadcast(vv))
+        .crossJoin(vv)
         .select(
             "doc_id",
             "occ",
@@ -685,7 +683,7 @@ def dedup_cluster_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     t = sizes.agg(F.sum("sz").cast("bigint").alias("docs_in_clusters"))
     return (
-        sizes.crossJoin(F.broadcast(t))
+        sizes.crossJoin(t)
         .groupBy(F.col("sz").alias("cluster_size"), "docs_in_clusters")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_clusters"))
         .select(
@@ -795,7 +793,7 @@ def collocation_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         bc.filter(F.col("c12") >= PMI_MIN_PAIR)
         .join(c1.select(F.col("w").alias("w1"), F.col("c").alias("cx")), "w1")
         .join(c1.select(F.col("w").alias("w2"), F.col("c").alias("cy")), "w2")
-        .crossJoin(F.broadcast(tots))
+        .crossJoin(tots)
         .select(
             "w1",
             "w2",
@@ -897,7 +895,7 @@ def zipf_vocab_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("CAST(round(ln(f) * 1000000) AS BIGINT)").alias("y6"),
     )
     m = xy.agg(F.min("x6").alias("x0"), F.min("y6").alias("y0"))
-    s = xy.crossJoin(F.broadcast(m)).agg(
+    s = xy.crossJoin(m).agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum(F.col("x6") - F.col("x0")).cast("bigint").alias("sx"),
         F.sum(F.col("y6") - F.col("y0")).cast("bigint").alias("sy"),
@@ -1010,7 +1008,7 @@ def heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("CAST(round(ln(cv) * 1000000) AS BIGINT)").alias("y6"),
     )
     m = xy.agg(F.min("x6").alias("x0"), F.min("y6").alias("y0"))
-    s = xy.crossJoin(F.broadcast(m)).agg(
+    s = xy.crossJoin(m).agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum(F.col("x6") - F.col("x0")).cast("bigint").alias("sx"),
         F.sum(F.col("y6") - F.col("y0")).cast("bigint").alias("sy"),
@@ -1206,9 +1204,9 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .over(Window.orderBy(F.desc("f"), F.asc("tk")))
         .alias("r"),
     )
-    vs = spark.createDataFrame([(v,) for v in VOCAB_SIZES], "v int")
+    vs = literal_table(spark, [(v,) for v in VOCAB_SIZES], "v int")
     cov = (
-        rk.crossJoin(F.broadcast(vs))
+        rk.crossJoin(vs)
         .groupBy("v")
         .agg(
             F.sum(F.when(F.col("r") <= F.col("v"), F.col("f")).otherwise(0))
@@ -1217,7 +1215,7 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     tot = rk.agg(F.sum("f").cast("bigint").alias("t"))
-    return cov.crossJoin(F.broadcast(tot)).select(
+    return cov.crossJoin(tot).select(
         F.col("v").cast("bigint").alias("vocab_size"),
         F.col("t").alias("n_tokens_total"),
         F.col("c").alias("n_covered"),
@@ -1373,7 +1371,7 @@ def _bpe_loop(spark: SparkSession, sf_dir: str):
             )
         )
         vocab = (
-            vocab.join(F.broadcast(best), F.lit(True), "left")
+            vocab.join(best, F.lit(True), "left")
             .select(
                 "w",
                 "f",
@@ -1599,7 +1597,7 @@ def bpe_pack_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    packed = dt.join(F.broadcast(bucket_offsets), "bucket").withColumn(
+    packed = dt.join(bucket_offsets, "bucket").withColumn(
         "token_offset",
         (
             F.col("bucket_offset")
@@ -1688,7 +1686,7 @@ def corpus_novelty_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     nn = docs.agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
     b = (
         bg.join(firsts, "g")
-        .crossJoin(F.broadcast(nn))
+        .crossJoin(nn)
         .select(
             F.expr(
                 f"CAST(LEAST(doc_id * {NOVELTY_BUCKETS} div n_docs,"
@@ -1806,7 +1804,7 @@ def vocab_drift_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("vocab_b"),
     )
-    return j.crossJoin(F.broadcast(v)).select(
+    return j.crossJoin(v).select(
         "n_common",
         (F.col("n_a") - F.col("n_common")).alias("only_a"),
         (F.col("n_b") - F.col("n_common")).alias("only_b"),
@@ -1899,7 +1897,7 @@ def ngram_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("t9")
     )
     s = terms.agg(F.sum("t9").cast("bigint").alias("s9"))
-    return s.crossJoin(F.broadcast(n)).select(
+    return s.crossJoin(n).select(
         F.col("nb").alias("n_bigrams"),
         "n_distinct",
         F.expr("CAST((-s9) div nb AS BIGINT)").alias("h_cond_nano"),
@@ -2142,7 +2140,7 @@ def source_lm_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("nb").cast("bigint").alias("nbg"),
         F.sum("s9").cast("bigint").alias("s9g"),
     )
-    return per.crossJoin(F.broadcast(g)).select(
+    return per.crossJoin(g).select(
         "source",
         F.col("nb").alias("n_bigrams"),
         F.expr("CAST((-s9) div nb AS BIGINT)").alias("h_nano"),
@@ -2253,7 +2251,7 @@ def holdout_perplexity_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
             "left",
         )
         .join(ctx, "w1", "left")
-        .crossJoin(F.broadcast(voc))
+        .crossJoin(voc)
         .select(
             "tc",
             F.when(F.col("trc").isNull(), 1).otherwise(0).alias("unseen"),
@@ -2360,8 +2358,8 @@ def good_turing_unseen_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         grid.join(ff, "r", "left")
         .join(f2, "r", "left")
-        .crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(p0))
+        .crossJoin(tot)
+        .crossJoin(p0)
         .select(
             F.col("r").cast("bigint").alias("r"),
             F.coalesce(F.col("nr"), F.lit(0)).cast("bigint").alias("n_r"),
@@ -2448,7 +2446,7 @@ def source_distinctive_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         sw.filter(F.col("f") >= SDT_MIN_F)
         .join(st, "source")
         .join(gw, "w")
-        .crossJoin(F.broadcast(gt))
+        .crossJoin(gt)
         .select(
             "source",
             "w",

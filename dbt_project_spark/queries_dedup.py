@@ -25,6 +25,7 @@ from dbt_project_spark.operators.dedup import (
     minhash_lsh_pairs,
     simhash_signatures,
 )
+from dbt_project_spark.operators.joins import literal_table
 from dbt_project_spark.operators.similarity import embedding_lsh_pairs
 from dbt_project_spark.sources import load_table
 
@@ -1075,7 +1076,7 @@ def _sem_members(spark: SparkSession, sf_dir: str):
     cn = centd.withColumn("nc", l2_norm("ce"))
     multi = (
         cand.filter(F.col("n_cand") > 1)
-        .join(F.broadcast(cn), on="cid")
+        .join(cn, on="cid")
         .withColumn("nv", l2_norm("embedding"))
         .withColumn(
             "s",
@@ -1142,15 +1143,8 @@ def _sem_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     eb = mem.select(
         F.col("vec_id").alias("vec_b"), F.col("embedding").alias("eb")
     )
-    # Only the id-sized cpairs carries a broadcast hint (ADVICE r12):
-    # forcing the pairs+embeddings frame (~0.5 KB/row) would OOM the
-    # driver on a clique-heavy corpus where pairs go Θ(n²/K); after
-    # the hinted first join AQE sees the runtime size and still
-    # promotes an output-sized pairs+ea frame to broadcast, degrading
-    # gracefully to a shuffle join when it is genuinely large.
     return (
-        F.broadcast(cpairs)
-        .join(ea, "vec_a")
+        cpairs.join(ea, "vec_a")
         .join(eb, "vec_b")
         .withColumn("cosine", F.round(cosine_similarity("ea", "eb"), 6))
         .filter(F.col("cosine") >= EMB_STRICT_T)
@@ -1530,20 +1524,15 @@ def semantic_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     eb = mem.select(
         F.col("vec_id").alias("vec_b"), F.col("embedding").alias("eb")
     )
-    # Broadcast hint only on the id-sized cpairs (ADVICE r12, same
-    # reasoning as _sem_pairs: no forced broadcast of embedding rows).
     cosv = (
-        F.broadcast(cpairs)
-        .join(ea, "vec_a")
+        cpairs.join(ea, "vec_a")
         .join(eb, "vec_b")
         .withColumn("cosine", F.round(cosine_similarity("ea", "eb"), 6))
         .select("vec_a", "vec_b", "cosine")
     )
-    taus = spark.createDataFrame(
-        [(t,) for t in SEM_SWEEP_CENTI], "tau_centi bigint"
-    )
+    taus = literal_table(spark, [(t,) for t in SEM_SWEEP_CENTI], "tau_centi bigint")
     counts = (
-        cosv.crossJoin(F.broadcast(taus))
+        cosv.crossJoin(taus)
         .groupBy("tau_centi")
         .agg(
             F.sum(
@@ -1572,7 +1561,7 @@ def semantic_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("m")
     ).agg(F.sum(F.when(F.col("m") >= 2, 1).otherwise(0)).alias("nc"))
     return (
-        taus.crossJoin(F.broadcast(haspair))
+        taus.crossJoin(haspair)
         .filter(F.col("nc") > 0)
         .join(counts, "tau_centi", "left")
         .select(
@@ -2007,8 +1996,8 @@ def dedup_pair_transitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     wt = wedge.agg(F.count(F.lit(1)).cast("bigint").alias("n_wedges"))
     np = pairs.agg(F.count(F.lit(1)).cast("bigint").alias("n_pairs"))
     return (
-        np.crossJoin(F.broadcast(wt))
-        .crossJoin(F.broadcast(closed))
+        np.crossJoin(wt)
+        .crossJoin(closed)
         .select(
             "n_pairs",
             "n_wedges",
@@ -2096,8 +2085,8 @@ def minhash_vs_exact_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_both")
     )
     return (
-        n_exact.crossJoin(F.broadcast(n_lsh))
-        .crossJoin(F.broadcast(n_both))
+        n_exact.crossJoin(n_lsh)
+        .crossJoin(n_both)
         .select(
             "n_exact",
             "n_lsh",

@@ -269,7 +269,7 @@ def woe_iv_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("b").cast("bigint").alias("bt"),
     )
     terms = (
-        c.crossJoin(F.broadcast(t))
+        c.crossJoin(t)
         .where((F.col("g") > 0) & (F.col("b") > 0))
         .select(
             "bkt",
@@ -556,7 +556,7 @@ def quantile_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"percentile({_V100}, 0.86)").alias("__lo90"),
         F.expr(f"percentile({_V100}, 0.94)").alias("__hi90"),
     )
-    return est.crossJoin(F.broadcast(exact)).select(
+    return est.crossJoin(exact).select(
         "sample_k",
         "est_p50",
         "est_p90",
@@ -672,8 +672,8 @@ def join_size_sample_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        exact.crossJoin(F.broadcast(est))
-        .crossJoin(F.broadcast(d))
+        exact.crossJoin(est)
+        .crossJoin(d)
         .select(
             "exact_rows",
             F.expr("CAST(s * n_keys div sample_k AS BIGINT)").alias("est_rows"),
@@ -733,7 +733,7 @@ def incremental_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     cutoff = ev.agg(
         (F.max("ep") - F.lit(ROLLUP_INCR_DAYS * 86400)).alias("cut")
     )
-    ev = ev.crossJoin(F.broadcast(cutoff))
+    ev = ev.crossJoin(cutoff)
 
     def rollup(df: DataFrame) -> DataFrame:
         return df.groupBy("user_id", "event_type").agg(

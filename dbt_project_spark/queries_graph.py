@@ -170,7 +170,7 @@ def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
+        .join(s, li.l_suppkey == s.s_suppkey)
         .filter(F.col("s_nationkey") != F.col("c_nationkey"))
         .groupBy(
             F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst")
@@ -588,7 +588,7 @@ def _trade_edges_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
+        .join(s, li.l_suppkey == s.s_suppkey)
         .filter(F.col("s_nationkey") != F.col("c_nationkey"))
         .groupBy(
             F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst")
@@ -1369,7 +1369,7 @@ def trade_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = edges.agg(F.count(F.lit(1)).cast("bigint").alias("m"))
     mr = recip.agg(F.count(F.lit(1)).cast("bigint").alias("m_recip"))
     return (
-        m.crossJoin(F.broadcast(mr))
+        m.crossJoin(mr)
         .select(
             F.col("m").alias("n_edges"),
             F.col("m_recip").alias("n_reciprocated"),
@@ -1463,7 +1463,7 @@ def degree_powerlaw_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("CAST(round(ln(nd) * 1000000) AS BIGINT)").alias("y6"),
     )
     m = xy.agg(F.min("x6").alias("x0"), F.min("y6").alias("y0"))
-    s = xy.crossJoin(F.broadcast(m)).agg(
+    s = xy.crossJoin(m).agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum(F.col("x6") - F.col("x0")).cast("bigint").alias("sx"),
         F.sum(F.col("y6") - F.col("y0")).cast("bigint").alias("sy"),
@@ -1484,7 +1484,7 @@ def degree_powerlaw_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    return s.crossJoin(F.broadcast(counts)).select(
+    return s.crossJoin(counts).select(
         F.col("n").alias("n_points"),
         "n_nodes",
         "n_edges",

@@ -181,7 +181,7 @@ def merge_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("n_inserted"),
             )
         )
-        row = summary.crossJoin(F.broadcast(delta)).collect()[0]
+        row = summary.crossJoin(delta).collect()[0]
         return spark.createDataFrame(
             [tuple(row)],
             "n_rows bigint, n_partitions bigint, sum_price100 bigint, "

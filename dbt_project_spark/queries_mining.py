@@ -219,7 +219,7 @@ def weekday_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = d.groupBy("event_type").agg(
         F.sum("n").alias("nt"), F.sum("s").alias("st")
     )
-    return d.join(F.broadcast(t), "event_type").select(
+    return d.join(t, "event_type").select(
         "event_type",
         F.col("dow").cast("int"),
         "n",
@@ -436,7 +436,7 @@ def activity_bitmask_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     base = e.agg(F.min("d").alias("d0"))
     ud = (
-        e.crossJoin(F.broadcast(base))
+        e.crossJoin(base)
         .select("user_id", (F.col("d") - F.col("d0")).alias("off"))
         .distinct()
         .where((F.col("off") >= 0) & (F.col("off") <= 62))

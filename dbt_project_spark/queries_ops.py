@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dbt_project_spark.catalog import register
+from dbt_project_spark.operators.joins import literal_table
 from dbt_project_spark.sources import load_table
 
 _V100 = "CAST(round(value * 100, 0) AS BIGINT)"
@@ -83,7 +84,7 @@ def spc_pchart_error_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n").cast("bigint").alias("nt"),
         F.sum("x").cast("bigint").alias("et"),
     )
-    return d.crossJoin(F.broadcast(t)).select(
+    return d.crossJoin(t).select(
         "day",
         F.col("n").alias("n_events"),
         F.col("x").alias("n_errors"),
@@ -145,7 +146,7 @@ def profile_drift_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mid = e.agg(F.expr("(min(ep) + max(ep)) div 2").cast("bigint").alias("m"))
     return (
-        e.crossJoin(F.broadcast(mid))
+        e.crossJoin(mid)
         .groupBy(
             F.when(F.col("ep") < F.col("m"), "ref").otherwise("cur").alias(
                 "half"
@@ -247,7 +248,7 @@ def kaplan_meier_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     endd = u.agg(F.max("ld").alias("ed"))
     H = KM_CHURN_HORIZON_DAYS
-    lt = u.crossJoin(F.broadcast(endd)).select(
+    lt = u.crossJoin(endd).select(
         F.when(
             F.col("ed") - F.col("ld") > H, F.col("ld") - F.col("fd")
         )
@@ -265,7 +266,7 @@ def kaplan_meier_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("deaths") + F.col("censored")).cast("bigint").alias("nu")
     )
     wb = Window.orderBy("t").rowsBetween(Window.unboundedPreceding, -1)
-    r = g.crossJoin(F.broadcast(tot)).select(
+    r = g.crossJoin(tot).select(
         "t",
         "deaths",
         "censored",
@@ -433,10 +434,10 @@ def slo_burn_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_timestamp("ts").alias("ep"), "event_type"
     )
     mx = e.agg(F.max("ep").alias("m"))
-    w = spark.createDataFrame([(h,) for h in SLO_WINDOWS_H], "h int")
+    w = literal_table(spark, [(h,) for h in SLO_WINDOWS_H], "h int")
     c = (
-        e.crossJoin(F.broadcast(mx))
-        .crossJoin(F.broadcast(w))
+        e.crossJoin(mx)
+        .crossJoin(w)
         .filter(F.col("ep") > F.col("m") - F.col("h") * 3600)
         .groupBy("h")
         .agg(
@@ -518,7 +519,7 @@ def weibull_survival_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "t_day",
     )
     m = xy.agg(F.min("x6").alias("x0"), F.min("y6").alias("y0"))
-    s = xy.crossJoin(F.broadcast(m)).agg(
+    s = xy.crossJoin(m).agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum(F.col("x6") - F.col("x0")).cast("bigint").alias("sx"),
         F.sum(F.col("y6") - F.col("y0")).cast("bigint").alias("sy"),
@@ -533,7 +534,7 @@ def weibull_survival_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("t_day").cast("bigint").alias("min_t"),
         F.max("t_day").cast("bigint").alias("max_t"),
     )
-    return s.crossJoin(F.broadcast(rng)).select(
+    return s.crossJoin(rng).select(
         F.col("n").alias("n_points"),
         "min_t",
         "max_t",
@@ -736,7 +737,7 @@ def ingest_gap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("longest_gap_start_hr"),
     )
-    return rng.crossJoin(F.broadcast(gsum)).select(
+    return rng.crossJoin(gsum).select(
         F.col("n_present").alias("n_hours_present"),
         (F.col("h1") - F.col("h0") + 1)
         .cast("bigint")
@@ -944,7 +945,7 @@ def cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("sd_micro"),
     )
     wp = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
-    p = x.crossJoin(F.broadcast(m)).withColumn(
+    p = x.crossJoin(m).withColumn(
         "pf",
         F.sum(F.col("n") * 1_000_000 - F.col("mean_micro")).over(wp)
         .cast("bigint"),

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dbt_project_spark.catalog import register
+from dbt_project_spark.operators.joins import literal_table
 from dbt_project_spark.sources import load_table
 
 _EP = "CAST(floor(epoch(ts)) AS BIGINT)"
@@ -108,7 +109,7 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     top = stages.filter(F.col("stage") == "1_view").select(
         F.col("n_users").alias("top_users")
     )
-    return stages.crossJoin(F.broadcast(top)).select(
+    return stages.crossJoin(top).select(
         "stage",
         F.col("n_users").cast("bigint").alias("n_users"),
         (F.expr("n_users * 10000 div top_users").cast("bigint") / F.lit(100.0)).alias(
@@ -331,7 +332,7 @@ def linreg_value_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = ev.groupBy("event_type").agg(
         F.min("ep").alias("x0"), F.min("v100").alias("y0")
     )
-    j = ev.join(F.broadcast(m), "event_type").select(
+    j = ev.join(m, "event_type").select(
         "event_type",
         (F.col("ep") - F.col("x0")).alias("x"),
         (F.col("v100") - F.col("y0")).alias("y"),
@@ -445,7 +446,7 @@ def funnel_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     top = stages.filter(F.col("stage") == "1_view").select(
         F.col("n_users").alias("top_users")
     )
-    return stages.crossJoin(F.broadcast(top)).select(
+    return stages.crossJoin(top).select(
         "stage",
         F.col("n_users").cast("bigint").alias("n_users"),
         (
@@ -567,7 +568,7 @@ def ab_test_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .alias("chi2")
     )
-    return a.crossJoin(F.broadcast(c)).select(
+    return a.crossJoin(c).select(
         "arm",
         "n_users",
         "n_conv",
@@ -626,7 +627,7 @@ def cohort_revenue_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = m.filter(F.col("offset_m") == 0).select(
         "cohort_m", F.col("rev100").alias("base100")
     )
-    return m.join(F.broadcast(base), "cohort_m").select(
+    return m.join(base, "cohort_m").select(
         "cohort_m",
         "offset_m",
         (F.col("rev100") / 100.0).alias("revenue"),
@@ -696,7 +697,7 @@ def markov_next_event_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.select("user_id", "event_type", "epoch", "event_id")
         .withColumn("to_type", F.lead("event_type").over(w))
         .filter(F.col("to_type").isNotNull())
-        .crossJoin(F.broadcast(mid))
+        .crossJoin(mid)
     )
     train = (
         p.filter(F.col("epoch") < F.col("m"))
@@ -713,7 +714,7 @@ def markov_next_event_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").alias("from_type"), "to_type"
     )
     return (
-        test.join(F.broadcast(pred), "from_type")
+        test.join(pred, "from_type")
         .groupBy("from_type", "predicted_next")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_test"),
@@ -819,7 +820,7 @@ def user_lifecycle_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             (nx.user_id == a.user_id) & (F.col("nd") == F.date_add(a.d, 1)),
             "left_anti",
         )
-        .crossJoin(F.broadcast(mx))
+        .crossJoin(mx)
         .filter(F.date_add(a.d, 1) <= F.col("md"))
         .groupBy(F.date_add(a.d, 1).alias("d"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_churned"))
@@ -976,7 +977,7 @@ def cuped_variance_reduction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mid = e.agg(F.expr("(min(ep) + max(ep)) div 2").cast("bigint").alias("m"))
     u = (
-        e.crossJoin(F.broadcast(mid))
+        e.crossJoin(mid)
         .groupBy("user_id")
         .agg(
             F.sum(F.when(F.col("ep") < F.col("m"), F.col("v100")).otherwise(0))
@@ -1103,7 +1104,7 @@ def lift_chart_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mid = e.agg(F.expr("(min(ep) + max(ep)) div 2").cast("bigint").alias("m"))
     u = (
-        e.crossJoin(F.broadcast(mid))
+        e.crossJoin(mid)
         .groupBy("user_id")
         .agg(
             F.sum(F.when(F.col("ep") < F.col("m"), F.col("v100")).otherwise(0))
@@ -1138,7 +1139,7 @@ def lift_chart_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_buyers").cast("bigint").alias("bt"),
     )
     wc = Window.orderBy("decile").rowsBetween(Window.unboundedPreceding, 0)
-    return g.crossJoin(F.broadcast(t)).select(
+    return g.crossJoin(t).select(
         "decile",
         "n_users",
         "n_buyers",
@@ -1472,7 +1473,7 @@ def ab_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_users").cast("bigint").alias("nn"),
         F.sum("n_conv").cast("bigint").alias("cc"),
     )
-    m = a.crossJoin(F.broadcast(tot)).withColumn(
+    m = a.crossJoin(tot).withColumn(
         "v",
         F.expr(
             "CAST(2 * CAST(cc AS DECIMAL(38,0)) * (nn - cc) AS DOUBLE)"
@@ -2001,11 +2002,9 @@ def conversion_window_sensitivity(
 
     delta = persist_tracked(delta)
     base = delta.agg(F.count(F.lit(1)).cast("bigint").alias("n_signup"))
-    win = spark.createDataFrame(
-        [(h,) for h in CWS_HOURS], "wh bigint"
-    )
+    win = literal_table(spark, [(h,) for h in CWS_HOURS], "wh bigint")
     return (
-        win.crossJoin(F.broadcast(base))
+        win.crossJoin(base)
         .join(delta, F.lit(True), "left")
         .groupBy("wh", "n_signup")
         .agg(
@@ -2323,7 +2322,7 @@ def recency_churn_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("(min(ep) + max(ep)) div 2").cast("bigint").alias("m")
     )
     u = (
-        e.crossJoin(F.broadcast(mid))
+        e.crossJoin(mid)
         .groupBy("user_id")
         .agg(
             F.max(F.when(F.col("ep") < F.col("m"), F.col("ep")))

@@ -77,7 +77,7 @@ def drift_psi_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("(min(ep) + max(ep)) div 2").cast("bigint").alias("m")
     )
     c = (
-        e.crossJoin(F.broadcast(mid))
+        e.crossJoin(mid)
         .groupBy("event_type", "bkt")
         .agg(
             F.sum(F.when(F.col("ep") < F.col("m"), 1).otherwise(0))
@@ -93,7 +93,7 @@ def drift_psi_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("cur_n").cast("bigint").alias("cur_t"),
     )
     terms = (
-        c.join(F.broadcast(t), "event_type")
+        c.join(t, "event_type")
         .filter((F.col("ref_n") > 0) & (F.col("cur_n") > 0))
         .select(
             "event_type",
@@ -168,9 +168,9 @@ def chi2_type_weekday(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = o.agg(F.sum("obs").cast("bigint").alias("nt"))
     num = F.col("obs") * F.col("nt") - F.col("rt") * F.col("ct")
     terms = (
-        o.join(F.broadcast(r), "event_type")
-        .join(F.broadcast(c), "dow")
-        .crossJoin(F.broadcast(n))
+        o.join(r, "event_type")
+        .join(c, "dow")
+        .crossJoin(n)
         .select(
             F.round(
                 (num * 1.0 * num)
@@ -187,8 +187,8 @@ def chi2_type_weekday(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.sum("term9").cast("bigint") / 1_000_000_000.0, 6).alias("chi2")
     )
     return (
-        nr.crossJoin(F.broadcast(nc))
-        .crossJoin(F.broadcast(tot))
+        nr.crossJoin(nc)
+        .crossJoin(tot)
         .select(
             "n_rows",
             "n_cols",
@@ -250,7 +250,7 @@ def skew_key_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("cnt").cast("bigint").alias("max_cnt"),
     )
     t = b.agg(F.sum("n_rows").cast("bigint").alias("total"))
-    return b.crossJoin(F.broadcast(t)).select(
+    return b.crossJoin(t).select(
         "bucket",
         "n_keys",
         "n_rows",
@@ -312,7 +312,7 @@ def robust_value_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     med = e.groupBy("event_type").agg(
         F.expr("CAST(percentile(2 * v100, 0.5) AS BIGINT)").alias("med200")
     )
-    d = e.join(F.broadcast(med), "event_type").select(
+    d = e.join(med, "event_type").select(
         "event_type",
         "v100",
         F.abs(2 * F.col("v100") - F.col("med200")).alias("dev200"),
@@ -375,7 +375,7 @@ def _half_counts(spark: SparkSession, sf_dir: str):
     )
     mid = e.agg(F.expr("(min(ep) + max(ep)) div 2").cast("bigint").alias("m"))
     c = (
-        e.crossJoin(F.broadcast(mid))
+        e.crossJoin(mid)
         .groupBy("event_type", "v100")
         .agg(
             F.sum(F.when(F.col("ep") < F.col("m"), 1).otherwise(0))
@@ -450,7 +450,7 @@ def ks_test_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("ref_n").over(wv).alias("cum1"),
         F.sum("cur_n").over(wv).alias("cum2"),
     )
-    d = w.join(F.broadcast(t), "event_type").select(
+    d = w.join(t, "event_type").select(
         "event_type",
         "v100",
         "n1",
@@ -541,7 +541,7 @@ def mannwhitney_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("r1x2")
     )
     u_x2 = F.col("r1x2") - F.col("n1") * (F.col("n1") + 1)
-    return s.join(F.broadcast(t), "event_type").select(
+    return s.join(t, "event_type").select(
         "event_type",
         F.col("n1").alias("n_ref"),
         F.col("n2").alias("n_cur"),
@@ -605,7 +605,7 @@ def winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n"),
     )
     x20 = 20 * F.col("v100")
-    c = e.join(F.broadcast(b), "event_type").select(
+    c = e.join(b, "event_type").select(
         "event_type",
         "lo20",
         "hi20",
@@ -742,7 +742,7 @@ def entropy_type_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("ts", "yyyy-MM-dd").alias("day"), "event_type"
     ).agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     t = c.groupBy("day").agg(F.sum("n").cast("bigint").alias("nt"))
-    terms = c.join(F.broadcast(t), "day").select(
+    terms = c.join(t, "day").select(
         "day",
         F.round(
             (F.col("n") * 1.0 / F.col("nt"))
@@ -812,7 +812,7 @@ def benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("v100") > 0).select("digit")
     o = e.groupBy("digit").agg(F.count(F.lit(1)).cast("bigint").alias("n_obs"))
     t = o.agg(F.sum("n_obs").cast("bigint").alias("n"))
-    x = o.crossJoin(F.broadcast(t)).withColumn("p", F.expr(_BENFORD_CASE))
+    x = o.crossJoin(t).withColumn("p", F.expr(_BENFORD_CASE))
     terms = x.withColumn(
         "term9",
         F.round(
@@ -823,7 +823,7 @@ def benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("bigint"),
     )
     c = terms.agg(F.sum("term9").cast("bigint").alias("chi9"))
-    return terms.crossJoin(F.broadcast(c)).select(
+    return terms.crossJoin(c).select(
         "digit",
         "n_obs",
         F.round(F.col("n") * F.col("p"), 6).alias("expected"),
@@ -1094,7 +1094,7 @@ def bootstrap_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     bs = spark.range(BOOT_B).select(F.col("id").alias("b"))
-    fan = ev.crossJoin(F.broadcast(bs)).select(
+    fan = ev.crossJoin(bs).select(
         "b",
         "v",
         (
@@ -1137,8 +1137,8 @@ def bootstrap_mean_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("mean_micro"),
     )
     return (
-        full_m.crossJoin(F.broadcast(lo))
-        .crossJoin(F.broadcast(hi))
+        full_m.crossJoin(lo)
+        .crossJoin(hi)
         .select(
             "n_events",
             F.lit(BOOT_B).cast("bigint").alias("n_resamples"),
@@ -1262,16 +1262,17 @@ def simpson_slope_reversal(spark: SparkSession, sf_dir: str) -> DataFrame:
             "CASE WHEN num > 0 THEN 1 WHEN num < 0 THEN -1 ELSE 0 END"
         ).alias("sgn"),
     )
-    p = sl.filter(F.col("event_type") == "ALL").select(
-        F.col("sgn").alias("pooled_sgn"),
-        F.col("slope_micro").alias("pooled_slope_micro"),
-    )
-    return sl.crossJoin(F.broadcast(p)).select(
+    # the pooled row's values on every row: an unpartitioned window over
+    # the few-row slope table, not a cross join the planner cannot size
+    pooled = lambda c: F.max(  # noqa: E731
+        F.when(F.col("event_type") == "ALL", F.col(c))
+    ).over(Window.partitionBy())
+    return sl.select(
         "event_type",
         "n",
         "slope_micro",
-        "pooled_slope_micro",
-        F.when(F.col("sgn") * F.col("pooled_sgn") < 0, 1)
+        pooled("slope_micro").alias("pooled_slope_micro"),
+        F.when(F.col("sgn") * pooled("sgn") < 0, 1)
         .otherwise(0)
         .cast("bigint")
         .alias("sign_flip"),
@@ -1640,7 +1641,7 @@ def quantile_drift_qq(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("cur_n").over(w).alias("cc"),
     )
     ks = spark.range(1, 10).select(F.col("id").alias("k"))
-    rt = r.join(t, "event_type").crossJoin(F.broadcast(ks))
+    rt = r.join(t, "event_type").crossJoin(ks)
     refq = (
         rt.filter(F.col("cr") * 10 >= F.col("k") * F.col("n1"))
         .groupBy("event_type", "k")
@@ -1720,7 +1721,7 @@ def lorenz_curve_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("tot").cast("bigint").alias("grand"),
     )
-    d = r.crossJoin(F.broadcast(n)).select(
+    d = r.crossJoin(n).select(
         F.expr("(rk - 1) * 10 div n + 1").alias("decile"), "tot"
     )
     g = d.groupBy("decile").agg(
@@ -1733,7 +1734,7 @@ def lorenz_curve_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spend",
         F.sum("spend").over(Window.orderBy("decile")).alias("cum_spend"),
     )
-    return c.crossJoin(F.broadcast(n)).select(
+    return c.crossJoin(n).select(
         F.col("decile").cast("bigint").alias("decile"),
         "n_users",
         F.expr("CAST(spend * 1000000 div grand AS BIGINT)").alias(
@@ -1811,7 +1812,7 @@ def hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     terms = (
         top.filter(F.col("rk") <= HILL_K)
-        .crossJoin(F.broadcast(thr))
+        .crossJoin(thr)
         .select(
             F.expr(
                 "CAST(round(ln(CAST(v AS DOUBLE) / vk) * 1000000000)"
@@ -1823,7 +1824,7 @@ def hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("l9").cast("bigint").alias("s9"),
         F.count(F.lit(1)).cast("bigint").alias("k"),
     )
-    return s.crossJoin(F.broadcast(thr)).select(
+    return s.crossJoin(thr).select(
         F.col("k").alias("k_tail"),
         F.col("vk").alias("threshold_v100"),
         F.expr("CAST(s9 div k AS BIGINT)").alias("hill_gamma_nano"),
@@ -1901,7 +1902,7 @@ def wasserstein_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("CAST((MIN(ep) + MAX(ep)) div 2 AS BIGINT)").alias("m")
     )
     d = (
-        e.crossJoin(F.broadcast(mid))
+        e.crossJoin(mid)
         .groupBy("v100")
         .agg(
             F.sum(F.when(F.col("ep") < F.col("m"), 1).otherwise(0))
@@ -1925,7 +1926,7 @@ def wasserstein_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lead("v100").over(Window.orderBy("v100")).alias("nxt"),
     )
     s = (
-        c.crossJoin(F.broadcast(t))
+        c.crossJoin(t)
         .filter(F.col("nxt").isNotNull())
         .agg(
             F.sum(
@@ -1937,7 +1938,7 @@ def wasserstein_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        t.crossJoin(F.broadcast(s))
+        t.crossJoin(s)
         .select(
             F.col("nr").cast("bigint").alias("n_ref"),
             F.col("nc").cast("bigint").alias("n_cur"),

@@ -82,7 +82,7 @@ def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("freq"),
             F.sum(F.expr(_TP100)).alias("mon100"),
         )
-        .crossJoin(F.broadcast(ref))
+        .crossJoin(ref)
         .withColumn("rec_days", F.datediff("__ref", "__last").cast("bigint"))
         .drop("__ref", "__last")
     )
@@ -150,7 +150,7 @@ def abc_parts_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part")
     pr = (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+        li.join(p, li.l_partkey == p.p_partkey)
         .groupBy("p_brand", "p_partkey")
         .agg(F.sum(F.expr(_EP100)).alias("rev100"))
     )
@@ -273,9 +273,9 @@ def basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_partkey").alias("consequent"), F.col("cnt").alias("cnt_c")
     )
     return (
-        rules.join(F.broadcast(ia), "antecedent")
-        .join(F.broadcast(ic), "consequent")
-        .crossJoin(F.broadcast(n_orders))
+        rules.join(ia, "antecedent")
+        .join(ic, "consequent")
+        .crossJoin(n_orders)
         .select(
             "antecedent",
             "consequent",
@@ -328,7 +328,7 @@ def part_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("prev_min").isNull() | (F.col("msize") < F.col("prev_min")))
         .select("price100", F.col("msize").alias("p_size"))
     )
-    return p.join(F.broadcast(sky), ["price100", "p_size"]).select(
+    return p.join(sky, ["price100", "p_size"]).select(
         "p_partkey",
         (F.col("price100") / 100.0).alias("retail_price"),
         F.col("p_size").cast("bigint"),
@@ -418,8 +418,8 @@ def bloom_semijoin_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.sum("ep100").cast("bigint") / 100.0).alias("exact_revenue"),
     )
     return (
-        n_keys.crossJoin(F.broadcast(n_cand))
-        .crossJoin(F.broadcast(n_exact))
+        n_keys.crossJoin(n_cand)
+        .crossJoin(n_exact)
         .select("n_build_keys", "n_candidate_rows", "n_exact_rows", "exact_revenue")
     )
 
@@ -456,9 +456,9 @@ def pct_of_parent_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = load_table(spark, sf_dir, "nation")
     r = load_table(spark, sf_dir, "region")
     nr = (
-        li.join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        li.join(s, li.l_suppkey == s.s_suppkey)
+        .join(n, s.s_nationkey == n.n_nationkey)
+        .join(r, n.n_regionkey == r.r_regionkey)
         .groupBy(F.col("r_name").alias("region"), F.col("n_name").alias("nation"))
         .agg(F.sum(F.expr(_EP100)).alias("rev100"))
     )
@@ -547,7 +547,7 @@ def part_demand_xyz(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("q").cast("bigint").alias("sx"),
         F.sum(F.col("q") * F.col("q")).cast("bigint").alias("sxx"),
     )
-    c = s.crossJoin(F.broadcast(w)).select(
+    c = s.crossJoin(w).select(
         "l_partkey",
         "weeks_active",
         F.expr(
@@ -623,7 +623,7 @@ def revenue_hhi_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_groups"),
         F.max("rev").cast("bigint").alias("max_rev"),
     )
-    s = r.crossJoin(F.broadcast(t)).select(
+    s = r.crossJoin(t).select(
         F.expr("CAST(rev * 1000 div total AS BIGINT)").alias("share_milli")
     )
     hhi = s.agg(
@@ -631,7 +631,7 @@ def revenue_hhi_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("hhi_permille_sq")
     )
-    return t.crossJoin(F.broadcast(hhi)).select(
+    return t.crossJoin(hhi).select(
         "n_groups",
         F.col("total").alias("total_cents"),
         F.expr("CAST(max_rev * 1000000 div total AS BIGINT)").alias(
@@ -779,7 +779,7 @@ def price_elasticity_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "p_partkey", F.expr(_PP100).alias("price100")
     )
     d = (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+        li.join(p, li.l_partkey == p.p_partkey)
         .groupBy("l_partkey")
         .agg(
             F.expr("CAST(round(SUM(l_quantity)) AS BIGINT)").alias("qty"),
@@ -791,7 +791,7 @@ def price_elasticity_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("CAST(round(ln(qty) * 1000000) AS BIGINT)").alias("y6"),
     )
     m = xy.agg(F.min("x6").alias("x0"), F.min("y6").alias("y0"))
-    s = xy.crossJoin(F.broadcast(m)).agg(
+    s = xy.crossJoin(m).agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum(F.col("x6") - F.col("x0")).cast("bigint").alias("sx"),
         F.sum(F.col("y6") - F.col("y0")).cast("bigint").alias("sy"),
@@ -889,7 +889,7 @@ def segment_migration_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mid = o.agg(F.expr("(min(ep) + max(ep)) div 2").cast("bigint").alias("m"))
     u = (
-        o.crossJoin(F.broadcast(mid))
+        o.crossJoin(mid)
         .groupBy("c")
         .agg(
             F.sum(F.when(F.col("ep") < F.col("m"), F.col("cents")).otherwise(0))
@@ -929,8 +929,8 @@ def segment_migration_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     c1 = _cutoffs("s1", "lo1", "hi1")
     c2 = _cutoffs("s2", "lo2", "hi2")
     seg = (
-        u.crossJoin(F.broadcast(c1))
-        .crossJoin(F.broadcast(c2))
+        u.crossJoin(c1)
+        .crossJoin(c2)
         .select(
             F.when(F.col("s1") == 0, "none")
             .when(F.col("s1") <= F.col("lo1"), "low")
@@ -948,7 +948,7 @@ def segment_migration_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         seg.groupBy("seg_from", "seg_to")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_customers"))
-        .crossJoin(F.broadcast(t))
+        .crossJoin(t)
         .select(
             "seg_from",
             "seg_to",
@@ -1037,7 +1037,7 @@ def revenue_bridge_pvm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mid = li.agg(F.expr("(min(ep) + max(ep)) div 2").cast("bigint").alias("m"))
     pp = (
-        li.crossJoin(F.broadcast(mid))
+        li.crossJoin(mid)
         .groupBy("p")
         .agg(
             F.sum(F.when(F.col("ep") < F.col("m"), F.col("cents")).otherwise(0))
@@ -1166,11 +1166,11 @@ def price_index_laspeyres(spark: SparkSession, sf_dir: str) -> DataFrame:
     py = persist_tracked(py)
     y0 = py.agg(F.min("y").alias("b"))
     base = (
-        py.crossJoin(F.broadcast(y0))
+        py.crossJoin(y0)
         .filter(F.col("y") == F.col("b"))
         .select(F.col("pk"), F.col("e").alias("e0"), F.col("q").alias("q0"))
     )
-    j = py.join(F.broadcast(base), "pk").filter(
+    j = py.join(base, "pk").filter(
         (F.col("q") > 0) & (F.col("q0") > 0)
     )
     terms = j.groupBy("y").agg(

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from dbt_project_spark.catalog import register
 from dbt_project_spark.functions.expressions import cosine_similarity
 from dbt_project_spark.operators.dedup import tokens_col
+from dbt_project_spark.operators.joins import at_most, literal_table
 from dbt_project_spark.operators.retrieval import bm25_oracle_cte, bm25_scored
 from dbt_project_spark.sources import load_table
 
@@ -109,7 +110,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     nn = docs.agg(F.count(F.lit(1)).alias("n"))
     sc = (
         tf.join(dfq, "term")
-        .crossJoin(F.broadcast(nn))
+        .crossJoin(nn)
         .withColumn(
             "tfidf",
             F.round(
@@ -204,12 +205,12 @@ def rrf_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.row_number().over(wl).alias("lrank")
     )
 
-    qv = emb.filter(F.col("vec_id") == RRF_QUERY_VEC).select(
+    qv = at_most(emb.filter(F.col("vec_id") == RRF_QUERY_VEC), 1).select(  # key
         F.col("embedding").alias("qe")
     )
     vs = (
         emb.filter(F.col("vec_id") != RRF_QUERY_VEC)
-        .crossJoin(F.broadcast(qv))
+        .crossJoin(qv)
         .select(
             F.col("vec_id").alias("doc_id"),
             F.round(cosine_similarity("embedding", "qe"), 6).alias("cosine"),
@@ -322,8 +323,8 @@ def bm25_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dbt_project_spark.caching import persist_tracked
 
     rel = persist_tracked(rel)
-    disc = spark.createDataFrame(
-        [(i + 1, d) for i, d in enumerate(_DISC9)], "rk bigint, disc9 bigint"
+    disc = literal_table(
+        spark, [(i + 1, d) for i, d in enumerate(_DISC9)], "rk bigint, disc9 bigint"
     )
     scored = bm25_scored(docs, BM25_TERMS)
     w = Window.orderBy(F.desc("bm25"), "doc_id")
@@ -334,7 +335,7 @@ def bm25_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dcg = (
         sys_rk.join(rel, "doc_id")
-        .join(F.broadcast(disc), "rk")
+        .join(disc, "rk")
         .agg(
             F.sum(F.col("rel") * F.col("disc9")).cast("bigint").alias("dcg9"),
             F.sum(F.when(F.col("rel") > 0, 1).otherwise(0))
@@ -348,11 +349,11 @@ def bm25_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(NDCG_K)
         .select("rel", F.row_number().over(wi).cast("bigint").alias("rk"))
     )
-    idcg = ideal.join(F.broadcast(disc), "rk").agg(
+    idcg = ideal.join(disc, "rk").agg(
         F.sum(F.col("rel") * F.col("disc9")).cast("bigint").alias("idcg9")
     )
     return (
-        dcg.crossJoin(F.broadcast(idcg))
+        dcg.crossJoin(idcg)
         .select(
             F.lit(NDCG_K).cast("bigint").alias("k"),
             "n_rel_at_k",
@@ -430,12 +431,12 @@ def ranker_agreement_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.row_number().over(wl).alias("lrank")
     ).filter(F.col("lrank") <= max(RA_KS))
     e = load_table(spark, sf_dir, "embeddings")
-    qv = e.filter(F.col("vec_id") == RRF_QUERY_VEC).select(
+    qv = at_most(e.filter(F.col("vec_id") == RRF_QUERY_VEC), 1).select(  # key
         F.col("embedding").alias("qe")
     )
     vs = (
         e.filter(F.col("vec_id") != RRF_QUERY_VEC)
-        .crossJoin(F.broadcast(qv))
+        .crossJoin(qv)
         .withColumn(
             "cosine", F.round(cosine_similarity("embedding", "qe"), 6)
         )
@@ -446,10 +447,9 @@ def ranker_agreement_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(wv).alias("vrank"),
     ).filter(F.col("vrank") <= max(RA_KS))
     b = lr.join(vr, "doc_id")
-    ks = spark.createDataFrame([(k,) for k in RA_KS], "k bigint")
+    ks = literal_table(spark, [(k,) for k in RA_KS], "k bigint")
     ov = (
-        F.broadcast(ks)
-        .join(
+        ks.join(
             b,
             (b.lrank <= ks.k) & (b.vrank <= ks.k),
             "left",
@@ -541,12 +541,12 @@ def ranker_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.row_number().over(wl).alias("lrank")
     ).filter(F.col("lrank") <= KT_K)
     e = load_table(spark, sf_dir, "embeddings")
-    qv = e.filter(F.col("vec_id") == RRF_QUERY_VEC).select(
+    qv = at_most(e.filter(F.col("vec_id") == RRF_QUERY_VEC), 1).select(  # key
         F.col("embedding").alias("qe")
     )
     vs = (
         e.filter(F.col("vec_id") != RRF_QUERY_VEC)
-        .crossJoin(F.broadcast(qv))
+        .crossJoin(qv)
         .withColumn(
             "cosine", F.round(cosine_similarity("embedding", "qe"), 6)
         )
@@ -556,7 +556,7 @@ def ranker_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("doc_id"),
         F.row_number().over(wv).alias("vrank"),
     ).filter(F.col("vrank") <= KT_K)
-    b = lr.join(vr, "doc_id")
+    b = at_most(lr.join(vr, "doc_id"), KT_K)  # lr is a top-KT_K
     a = b.select(
         F.col("doc_id").alias("d_a"),
         F.col("lrank").alias("l_a"),
@@ -568,7 +568,7 @@ def ranker_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vrank").alias("v_c"),
     )
     pairs = a.join(
-        F.broadcast(c), F.col("d_a") < F.col("d_c")
+        c, F.col("d_a") < F.col("d_c")
     ).select(
         F.when(
             (F.col("l_a") - F.col("l_c")) * (F.col("v_a") - F.col("v_c"))
@@ -584,7 +584,7 @@ def ranker_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("conc").cast("bigint").alias("concordant"),
     )
     return (
-        ncom.crossJoin(F.broadcast(agg))
+        ncom.crossJoin(agg)
         .select(
             "n_common",
             "n_pairs",
@@ -720,13 +720,13 @@ def query_expansion_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("term")
     )
     qt = ex.unionByName(
-        spark.createDataFrame([(t,) for t in BM25_TERMS], "term string")
+        literal_table(spark, [(t,) for t in BM25_TERMS], "term string")
     )
     st = tk.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum(F.size("toks")).cast("bigint").alias("sdl"),
     )
-    dt = tk.crossJoin(F.broadcast(qt)).select(
+    dt = tk.crossJoin(qt).select(
         "doc_id",
         F.size("toks").alias("dl"),
         "term",
@@ -738,8 +738,8 @@ def query_expansion_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("bigint").alias("df"))
     )
     sc = (
-        dt.join(F.broadcast(dfq), "term")
-        .crossJoin(F.broadcast(st))
+        dt.join(dfq, "term")
+        .crossJoin(st)
         .select(
             "doc_id",
             F.expr(
@@ -770,7 +770,7 @@ def query_expansion_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "score_micro",
     )
     return ranked.join(
-        F.broadcast(s25), ranked.doc_id == F.col("sdoc"), "left"
+        s25, ranked.doc_id == F.col("sdoc"), "left"
     ).select(
         "rank",
         "doc_id",
@@ -888,7 +888,7 @@ def bm25_param_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum((F.col(f"tf{i}") > 0).cast("bigint")).alias(f"df{i}")
         )
     st = d.agg(*aggs)
-    scored = d.crossJoin(F.broadcast(st))
+    scored = d.crossJoin(st)
     from dbt_project_spark.caching import persist_tracked
 
     scored = persist_tracked(scored)

@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dbt_project_spark.catalog import register
+from dbt_project_spark.operators.joins import at_most
 from dbt_project_spark.operators.similarity import (
     LSH_W,
     bruteforce_topk,
@@ -88,7 +89,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
     )
     c = e.select(F.col("vec_id").alias("neighbor_id"), "embedding")
-    return hyperplane_lsh_topk(q, c, TOPK)
+    return hyperplane_lsh_topk(at_most(q, NQUERIES), c, TOPK)  # vec_id: key
 
 
 def _cos_ranked_sql(pairs: str, suffix: str, k: int) -> str:
@@ -159,7 +160,7 @@ def ann_recall_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     c = e.select(F.col("vec_id").alias("neighbor_id"), "embedding")
     bf = bruteforce_topk(q, c, TOPK).select("query_id", "neighbor_id")
-    lsh = hyperplane_lsh_topk(q, c, TOPK).select(
+    lsh = hyperplane_lsh_topk(at_most(q, NQUERIES), c, TOPK).select(
         F.col("query_id").alias("lq"), F.col("neighbor_id").alias("ln")
     )
     m = (
@@ -265,15 +266,17 @@ def ann_recall_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("long"),
         ).alias("code"),
     )
-    qa = codes.filter(F.col("vec_id") < NQUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("code").alias("qa")
+    qa = at_most(  # vec_id is the key: NQUERIES rows
+        codes.filter(F.col("vec_id") < NQUERIES).select(
+            F.col("vec_id").alias("query_id"), F.col("code").alias("qa")
+        ),
+        NQUERIES,
     )
     qb = codes.select(
         F.col("vec_id").alias("neighbor_id"), F.col("code").alias("qb")
     )
     idot = (
-        F.broadcast(qa)
-        .join(qb, F.col("neighbor_id") != F.col("query_id"))
+        qa.join(qb, F.col("neighbor_id") != F.col("query_id"))
         .select(
             "query_id",
             "neighbor_id",

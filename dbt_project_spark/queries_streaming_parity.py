@@ -117,8 +117,7 @@ def _serve_ann_batch(spark: SparkSession, sf_dir: str, qdf: DataFrame) -> DataFr
     cent, cells, _k, nprobe = load_ivf_index(spark, sf_dir)
     probes = probe_cells(qdf, cent, nprobe)
     scored = (
-        F.broadcast(probes)
-        .join(cells, on="cid")
+        probes.join(cells, on="cid")
         .filter(F.col("vec_id") != F.col("query_id"))
         .withColumn("cosine", F.round(cosine_similarity("qe", "embedding"), 6))
         .select("query_id", F.col("vec_id").alias("neighbor_id"), "cosine")

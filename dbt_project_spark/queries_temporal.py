@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dbt_project_spark.catalog import register
+from dbt_project_spark.operators.joins import literal_table
 from dbt_project_spark.queries_product import TIER_LOW_MAX, TIER_MID_MAX
 from dbt_project_spark.sources import load_table
 
@@ -819,11 +820,11 @@ def attribution_markov_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     prows = bounded_collect(p, _MK_DRIVER_MAX)
     if prows is not None:
         return _markov_removal_driver(spark, prows)
-    variants = spark.createDataFrame(
-        [("base",)] + [(c,) for c in MK_CHANNELS], "variant string"
+    variants = literal_table(
+        spark, [("base",)] + [(c,) for c in MK_CHANNELS], "variant string"
     )
     tp = persist_tracked(
-        p.crossJoin(F.broadcast(variants))
+        p.crossJoin(variants)
         .filter(~((F.col("variant") != "base") & (F.col("src") == F.col("variant"))))
         .select(
             "variant",
@@ -896,7 +897,7 @@ def attribution_markov_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     re = (
         res.filter(F.col("variant") != "base")
-        .crossJoin(F.broadcast(base))
+        .crossJoin(base)
         .select(
             F.col("variant").alias("channel"),
             F.col("bv").alias("base_conv_micro"),
@@ -909,7 +910,7 @@ def attribution_markov_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot_re = re.agg(
         F.sum("removal_effect_micro").cast("bigint").alias("s")
     )
-    return re.crossJoin(F.broadcast(tot_re)).select(
+    return re.crossJoin(tot_re).select(
         "channel",
         "base_conv_micro",
         "removed_conv_micro",

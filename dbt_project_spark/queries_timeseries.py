@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dbt_project_spark.catalog import register
+from dbt_project_spark.operators.joins import literal_table
 from dbt_project_spark.sources import load_table
 
 _V100 = "CAST(round(value * 100, 0) AS BIGINT)"
@@ -545,7 +546,7 @@ def ts_acf_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("x").cast("bigint").alias("sx"),
     )
     d = persist_tracked(
-        s.crossJoin(F.broadcast(tot)).select(
+        s.crossJoin(tot).select(
             "h",
             (F.col("n") * F.col("x") - F.col("sx"))
             .cast("decimal(38,0)")
@@ -556,7 +557,7 @@ def ts_acf_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     lags = spark.range(1, ACF_MAX_LAG + 1).select(F.col("id").alias("k"))
     d2 = d.select(F.col("h").alias("h2"), F.col("dev").alias("dev2"))
     num = (
-        d.crossJoin(F.broadcast(lags))
+        d.crossJoin(lags)
         .join(d2, F.col("h2") == F.col("h") + F.col("k"))
         .groupBy("k")
         .agg(
@@ -564,7 +565,7 @@ def ts_acf_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
         )
     )
-    return num.crossJoin(F.broadcast(den)).select(
+    return num.crossJoin(den).select(
         F.col("k").cast("bigint").alias("lag"),
         "n_pairs",
         F.expr(
@@ -652,7 +653,7 @@ def ts_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     wcum = Window.orderBy("ed").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
-    c = s.crossJoin(F.broadcast(tot)).withColumn(
+    c = s.crossJoin(tot).withColumn(
         "cum",
         F.sum(F.col("n") * F.col("x") - F.col("sx")).over(wcum),
     )
@@ -663,7 +664,7 @@ def ts_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("ed", "n", F.abs("cum").alias("peak"))
     )
     cp_b = cp.select(F.col("ed").alias("cp_ed"), "n", "peak")
-    sides = s.crossJoin(F.broadcast(cp_b.select("cp_ed"))).agg(
+    sides = s.crossJoin(cp_b.select("cp_ed")).agg(
         F.sum(F.when(F.col("ed") <= F.col("cp_ed"), F.col("x")))
         .cast("bigint")
         .alias("xb"),
@@ -677,7 +678,7 @@ def ts_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("na"),
     )
-    return cp_b.crossJoin(F.broadcast(sides)).select(
+    return cp_b.crossJoin(sides).select(
         F.date_format(
             F.timestamp_seconds(F.col("cp_ed") * 86400), "yyyy-MM-dd"
         ).alias("cp_day"),
@@ -769,7 +770,7 @@ def ts_decompose_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             " ELSE SUM(total - trend) div COUNT(*) END AS BIGINT)"
         ).alias("seasonal")
     )
-    return tr.join(F.broadcast(se), "wd").select(
+    return tr.join(se, "wd").select(
         F.date_format("day", "yyyy-MM-dd").alias("day"),
         F.col("total").alias("total_cents"),
         F.col("trend").alias("trend_cents"),
@@ -1051,9 +1052,9 @@ def mk_trend_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("CAST(round(percentile(2 * sl, 0.5)) AS BIGINT)").alias("med2")
     )
     return (
-        nn.crossJoin(F.broadcast(mk))
-        .crossJoin(F.broadcast(ties))
-        .crossJoin(F.broadcast(sen))
+        nn.crossJoin(mk)
+        .crossJoin(ties)
+        .crossJoin(sen)
         .select(
             F.col("n").alias("n_days"),
             "n_pairs",
@@ -1251,7 +1252,7 @@ def dft_weekly_power(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("x").cast("bigint").alias("sx"),
     )
-    dev = s.crossJoin(F.broadcast(t)).select(
+    dev = s.crossJoin(t).select(
         (F.col("d") % 7).alias("k"),
         (F.col("n") * F.col("x") - F.col("sx")).alias("dv"),
         "n",
@@ -1264,7 +1265,7 @@ def dft_weekly_power(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("fs"),
     )
-    return t.crossJoin(F.broadcast(proj)).select(
+    return t.crossJoin(proj).select(
         F.col("n").alias("n_days"),
         "fc",
         "fs",
@@ -1578,8 +1579,8 @@ def dft_power_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fr = spark.range(1, DFT_HARMONICS + 1).select(F.col("id").alias("f"))
     dev = (
-        s.crossJoin(F.broadcast(t))
-        .crossJoin(F.broadcast(fr))
+        s.crossJoin(t)
+        .crossJoin(fr)
         .select(
             "f",
             ((F.col("f") * F.col("d")) % 7).alias("k"),
@@ -1594,7 +1595,7 @@ def dft_power_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("fs"),
     )
-    return proj.crossJoin(F.broadcast(t)).select(
+    return proj.crossJoin(t).select(
         F.col("f").cast("bigint").alias("f"),
         F.col("n").alias("n_days"),
         "fc",
@@ -1782,13 +1783,13 @@ def forecast_backtest_coverage(
     mid = r.agg(
         F.expr("(min(day) + max(day)) div 2").cast("bigint").alias("m")
     )
-    rm = r.crossJoin(F.broadcast(mid))
+    rm = r.crossJoin(mid)
     trn = rm.filter(F.col("day") < F.col("m")).select("resid")
     trn = persist_tracked(trn)
     tc = trn.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     cum = trn.select(
         "resid", F.row_number().over(Window.orderBy("resid")).alias("rk")
-    ).crossJoin(F.broadcast(tc))
+    ).crossJoin(tc)
     lo = cum.filter(F.col("rk") * 10 >= F.col("n")).agg(
         F.min("resid").alias("lo")
     )
@@ -1797,8 +1798,8 @@ def forecast_backtest_coverage(
     )
     tst = rm.filter(F.col("day") >= F.col("m")).select("resid")
     cov = (
-        tst.crossJoin(F.broadcast(lo))
-        .crossJoin(F.broadcast(hi))
+        tst.crossJoin(lo)
+        .crossJoin(hi)
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_test"),
             F.sum(
@@ -1816,7 +1817,7 @@ def forecast_backtest_coverage(
             F.min("hi").cast("bigint").alias("band_hi_cents"),
         )
     )
-    return tc.crossJoin(F.broadcast(cov)).select(
+    return tc.crossJoin(cov).select(
         F.col("n").alias("n_train"),
         "n_test",
         "band_lo_cents",
@@ -1883,7 +1884,7 @@ def ts_variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dbt_project_spark.caching import persist_tracked
 
     d = persist_tracked(d)
-    lg = spark.createDataFrame([(q,) for q in VR_LAGS], "q bigint")
+    lg = literal_table(spark, [(q,) for q in VR_LAGS], "q bigint")
     a = d.select("day", "y")
     b = d.select(F.col("day").alias("bday"), F.col("y").alias("by"))
     df = (
@@ -1907,8 +1908,9 @@ def ts_variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
             / (F.col("n") - 1.0)
         ).alias("var"),
     )
-    base = v.filter(F.col("q") == 1).select(F.col("var").alias("v1"))
-    return v.crossJoin(F.broadcast(base)).select(
+    # An ungrouped aggregate, so the planner sees the 1-row side.
+    base = v.agg(F.max(F.when(F.col("q") == 1, F.col("var"))).alias("v1"))
+    return v.crossJoin(base).select(
         F.col("q").cast("bigint").alias("q"),
         F.col("n").alias("n_diffs"),
         F.when(F.col("v1") == 0, F.lit(None))
@@ -2022,7 +2024,7 @@ def seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("sea"),
         )
     )
-    r = det.join(F.broadcast(sea), "dow").select(
+    r = det.join(sea, "dow").select(
         "det", (F.col("det") - F.col("sea")).alias("resid")
     )
     v = r.agg(

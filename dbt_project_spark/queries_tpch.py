@@ -6,8 +6,10 @@ semi-joins, and top-N. Monetary arithmetic uses fixed-point integers
 (price/discount/tax carry exactly 2 decimals) so sums are exact and
 order-independent — bit-identical to the ANSI oracle.
 
-Scale notes (100 TB): region/nation/supplier/part are dimension
-tables → explicit ``broadcast()`` (no shuffle of the fact side);
+Scale notes (100 TB): Spark broadcasts the dimension tables
+(region/nation/supplier, and part while it is small — it has 200k×SF
+rows) from their file sizes, or from measured stage sizes under AQE,
+so the fact side does not shuffle;
 orders⋈lineitem and customer⋈orders are co-partitioned shuffle joins
 on their keys, which AQE can re-plan (incl. skew splitting). Top-N is
 ``orderBy().limit(n)`` — Spark runs TakeOrderedAndProject, a per-
@@ -172,11 +174,9 @@ def tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1997-01-01")
     )
     li = _lineitem(spark, sf_dir)
-    supp = F.broadcast(load_table(spark, sf_dir, "supplier"))
-    nation = F.broadcast(load_table(spark, sf_dir, "nation"))
-    region = F.broadcast(
-        load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    )
+    supp = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
@@ -237,13 +237,13 @@ def tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Volume shipping between nation pair, by year (TPC-H Q7 shape)."""
     nation = load_table(spark, sf_dir, "nation")
-    sn = F.broadcast(nation.select(
+    sn = nation.select(
         F.col("n_nationkey").alias("s_nkey"), F.col("n_name").alias("supp_nation")
-    ))
-    cn = F.broadcast(nation.select(
+    )
+    cn = nation.select(
         F.col("n_nationkey").alias("c_nkey"), F.col("n_name").alias("cust_nation")
-    ))
-    supp = F.broadcast(load_table(spark, sf_dir, "supplier"))
+    )
+    supp = load_table(spark, sf_dir, "supplier")
     li = _lineitem(spark, sf_dir).filter(
         (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1998-01-01")
     )
@@ -290,16 +290,14 @@ def tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """National market share within a region (TPC-H Q8 shape)."""
     nation = load_table(spark, sf_dir, "nation")
-    cn = F.broadcast(nation.select(
+    cn = nation.select(
         F.col("n_nationkey").alias("c_nkey"), F.col("n_regionkey").alias("c_rkey")
-    ))
-    sn = F.broadcast(nation.select(
-        F.col("n_nationkey").alias("s_nkey"), F.col("n_name").alias("supp_nation")
-    ))
-    region = F.broadcast(
-        load_table(spark, sf_dir, "region").filter(F.col("r_name") == "AMERICA")
     )
-    supp = F.broadcast(load_table(spark, sf_dir, "supplier"))
+    sn = nation.select(
+        F.col("n_nationkey").alias("s_nkey"), F.col("n_name").alias("supp_nation")
+    )
+    region = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "AMERICA")
+    supp = load_table(spark, sf_dir, "supplier")
     orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1998-01-01")
     )
@@ -345,7 +343,7 @@ def tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Returned-item reporting: top-20 lost revenue (TPC-H Q10 shape)."""
     cust = load_table(spark, sf_dir, "customer")
-    nation = F.broadcast(load_table(spark, sf_dir, "nation"))
+    nation = load_table(spark, sf_dir, "nation")
     orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1996-04-01")
     )
@@ -375,7 +373,7 @@ def tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Promotion effect: conditional agg over broadcast join (Q14)."""
-    part = F.broadcast(load_table(spark, sf_dir, "part"))
+    part = load_table(spark, sf_dir, "part")
     li = _lineitem(spark, sf_dir).filter(
         (F.col("l_shipdate") >= "1996-09-01") & (F.col("l_shipdate") < "1996-10-01")
     )
@@ -485,9 +483,9 @@ def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(_revenue10000()).alias("total10000")
     )
     mx = revenue0.agg(F.max("total10000").alias("m"))
-    supp = F.broadcast(load_table(spark, sf_dir, "supplier"))
+    supp = load_table(spark, sf_dir, "supplier")
     return (
-        revenue0.join(F.broadcast(mx), revenue0.total10000 == F.col("m"))
+        revenue0.join(mx, revenue0.total10000 == F.col("m"))
         .join(supp, F.col("supplier_no") == F.col("s_suppkey"))
         .select(
             "s_suppkey",
@@ -517,9 +515,7 @@ def tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     avg_qty = li.groupBy(F.col("l_partkey").alias("pk")).agg(
         (F.sum("qty") / (F.count(F.lit(1)) * F.lit(5.0))).alias("fifth_avg")
     )
-    part = F.broadcast(
-        load_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#1")
-    )
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#1")
     return (
         li.join(part, li.l_partkey == part.p_partkey)
         .join(avg_qty, li.l_partkey == avg_qty.pk)
@@ -554,7 +550,7 @@ def tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_shipdate"
     )
-    supp = F.broadcast(load_table(spark, sf_dir, "supplier"))
+    supp = load_table(spark, sf_dir, "supplier")
     orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderstatus") == "F"
     )
@@ -613,7 +609,7 @@ def tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     avg_bal = cust.filter(F.col("c_acctbal") > 0.0).agg(
         F.avg("c_acctbal").alias("ab")
     )
-    eligible = cust.join(F.broadcast(avg_bal), F.col("c_acctbal") > F.col("ab"))
+    eligible = cust.join(avg_bal, F.col("c_acctbal") > F.col("ab"))
     orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1997-01-01") & (F.col("o_orderdate") < "1998-01-01")
     )
@@ -657,11 +653,9 @@ def tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(F.min((F.col("ep100") / F.col("qty")).cast("double")).alias("unit100"))
     # NOTE: ep100/qty is exact-int ÷ exact-int in double — bit-stable.
     best = price.groupBy("pk").agg(F.min("unit100").alias("best100"))
-    part = F.broadcast(
-        load_table(spark, sf_dir, "part").filter(F.col("p_size") >= 40)
-    )
-    supp = F.broadcast(load_table(spark, sf_dir, "supplier"))
-    nation = F.broadcast(load_table(spark, sf_dir, "nation"))
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_size") >= 40)
+    supp = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation")
     return (
         price.join(best, (price.pk == best.pk) & (price.unit100 == best.best100))
         .drop(best.pk)
@@ -699,13 +693,13 @@ def tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     by supplier nation and order year, for parts matching a name
     pattern."""
     li = _lineitem(spark, sf_dir)
-    part = F.broadcast(
+    part = (
         load_table(spark, sf_dir, "part")
         .filter(F.col("p_name").like("%widget%"))
         .withColumn("rp100", F.round(F.col("p_retailprice") * 100, 0).cast("bigint"))
     )
-    supp = F.broadcast(load_table(spark, sf_dir, "supplier"))
-    nation = F.broadcast(load_table(spark, sf_dir, "nation"))
+    supp = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation")
     orders = load_table(spark, sf_dir, "orders")
     profit = _revenue10000() - F.col("rp100") * F.col("qty") * F.lit(80)
     return (
@@ -740,10 +734,8 @@ def tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     traded value within one nation exceeds 0.1% of that nation's total
     — scalar aggregate subquery as a broadcast cross-filter."""
     li = _lineitem(spark, sf_dir)
-    supp = F.broadcast(load_table(spark, sf_dir, "supplier"))
-    nation = F.broadcast(
-        load_table(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_5")
-    )
+    supp = load_table(spark, sf_dir, "supplier")
+    nation = load_table(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_5")
     pv = (
         li.join(supp, li.l_suppkey == supp.s_suppkey)
         .join(nation, supp.s_nationkey == nation.n_nationkey)
@@ -752,7 +744,7 @@ def tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     thresh = pv.agg((F.sum("val10000") * F.lit(0.001)).cast("double").alias("t"))
     return (
-        pv.join(F.broadcast(thresh), F.col("val10000") > F.col("t"))
+        pv.join(thresh, F.col("val10000") > F.col("t"))
         .select(
             F.col("l_partkey").alias("ps_partkey"),
             (F.col("val10000") / F.lit(10000.0)).alias("value"),
@@ -807,7 +799,7 @@ def tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Part-supplier relationship count (TPC-H Q16 shape): distinct
     suppliers per part attribute combo, from observed lineitem pairs
     (partsupp stand-in)."""
-    part = F.broadcast(
+    part = (
         load_table(spark, sf_dir, "part").filter(
             (F.col("p_brand") != "Brand#3")
             & F.col("p_size").isin(10, 20, 30, 40, 50)
@@ -835,7 +827,7 @@ def tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Discounted revenue over an OR-of-ANDs predicate (TPC-H Q19
     shape) — the disjunctive-pushdown stressor."""
     li = _lineitem(spark, sf_dir)
-    part = F.broadcast(load_table(spark, sf_dir, "part"))
+    part = load_table(spark, sf_dir, "part")
     j = li.join(part, li.l_partkey == part.p_partkey)
     cond = (
         ((F.col("p_brand") == "Brand#1") & F.col("l_quantity").between(1, 11) & F.col("p_size").between(1, 5))
@@ -868,9 +860,7 @@ def tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1997-01-01")
     )
-    part = F.broadcast(
-        load_table(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO")
-    )
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO")
     shipped = (
         li.join(part, li.l_partkey == part.p_partkey)
         .groupBy("l_suppkey")

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from dbt_project_spark.catalog import register
 from dbt_project_spark.operators.dedup import tokens_col
+from dbt_project_spark.operators.joins import literal_table
 from dbt_project_spark.sources import load_table
 
 _TOKS = "regexp_extract_all(lower(text), '[a-z0-9]+')"
@@ -91,7 +92,7 @@ def seq_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     packed = (
-        docs.join(F.broadcast(bucket_offsets), on="bucket")
+        docs.join(bucket_offsets, on="bucket")
         .withColumn(
             "token_offset",
             (F.col("bucket_offset") + F.coalesce(F.sum("n_tokens").over(w), F.lit(0)))
@@ -426,7 +427,7 @@ def corpus_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_sources = avail.agg(F.count(F.lit(1)).alias("n_sources"))
     per = MIX_BUDGET_TOKENS
     plan = (
-        avail.crossJoin(F.broadcast(n_sources))
+        avail.crossJoin(n_sources)
         .withColumn("target_tokens", F.expr(f"{per} div n_sources").cast("bigint"))
         .withColumn(
             "keep_thr",
@@ -440,7 +441,7 @@ def corpus_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("source", "avail_tokens", "target_tokens", "keep_thr")
     )
     kept = (
-        t.join(F.broadcast(plan), on="source")
+        t.join(plan, on="source")
         .filter(md5_int("text") % 10000 < F.col("keep_thr"))
         .groupBy("source")
         .agg(
@@ -617,7 +618,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lam = (
         raw.join(tgt, "b", "left")
-        .crossJoin(F.broadcast(tots))
+        .crossJoin(tots)
         .select(
             "b",
             F.expr(
@@ -629,7 +630,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     docw = (
-        bt.join(F.broadcast(lam), "b")
+        bt.join(lam, "b")
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_toks"),
@@ -771,7 +772,7 @@ def _nb_model(spark: SparkSession, sf_dir: str):
     prior = (
         train.groupBy(F.col("lang").alias("c"))
         .agg(F.countDistinct("doc_id").cast("bigint").alias("nd"))
-        .crossJoin(F.broadcast(ntr))
+        .crossJoin(ntr)
         .select(
             "c",
             F.round(
@@ -812,13 +813,13 @@ def _nb_predict(
     """Score a bucket stream (doc_id, lang, b) against the model:
     (doc_id, true_lang, pred_lang), argmax by the exact integer key."""
     score = (
-        bt.join(F.broadcast(lam), "b")
+        bt.join(lam, "b")
         .groupBy("doc_id", F.col("lang").alias("true_lang"), "c", "rk")
         .agg(F.sum("lam9").cast("bigint").alias("s9"))
     )
     keyed = (
-        score.join(F.broadcast(prior), "c")
-        .crossJoin(F.broadcast(nc))
+        score.join(prior, "c")
+        .crossJoin(nc)
         .select(
             "doc_id",
             "true_lang",
@@ -966,7 +967,7 @@ def moore_lewis_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(
             c1t.withColumnRenamed("w", "w1"), "w1", "left"
         )
-        .crossJoin(F.broadcast(vv))
+        .crossJoin(vv)
         .select(
             "bg",
             (
@@ -1151,7 +1152,7 @@ def negative_sampling_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
         Window.unboundedPreceding, 0
     )
     d = (
-        pw.crossJoin(F.broadcast(tot))
+        pw.crossJoin(tot)
         .withColumn("rank", F.row_number().over(w_rk).cast("bigint"))
         .withColumn(
             "p_micro", F.expr("CAST(fp6 * 1000000 div t AS BIGINT)")
@@ -1259,13 +1260,13 @@ def nb_margin_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     bt, lam, prior, nc = _nb_model(spark, sf_dir)
     test = bt.filter(F.col("doc_id") % NB_TEST_MOD == 0)
     score = (
-        test.join(F.broadcast(lam), "b")
+        test.join(lam, "b")
         .groupBy("doc_id", F.col("lang").alias("true_lang"), "c", "rk")
         .agg(F.sum("lam9").cast("bigint").alias("s9"))
     )
     keyed = (
-        score.join(F.broadcast(prior), "c")
-        .crossJoin(F.broadcast(nc))
+        score.join(prior, "c")
+        .crossJoin(nc)
         .select(
             "doc_id",
             "true_lang",
@@ -1381,7 +1382,7 @@ def source_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_tokens").cast("bigint").alias("tn"),
         F.sum("rt").cast("bigint").alias("tr"),
     )
-    return r.crossJoin(F.broadcast(tot)).select(
+    return r.crossJoin(tot).select(
         "source",
         "n_docs",
         "n_tokens",
@@ -1455,11 +1456,9 @@ def pack_padding_waste_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("tk")
     ).filter(F.col("tk") > 0)
-    b = spark.createDataFrame(
-        [(bb,) for bb in PACK_BUDGETS], "budget bigint"
-    )
+    b = literal_table(spark, [(bb,) for bb in PACK_BUDGETS], "budget bigint")
     g = (
-        d.crossJoin(F.broadcast(b))
+        d.crossJoin(b)
         .groupBy("budget")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -1574,7 +1573,7 @@ def stratified_kfold_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("n_strata"),
     )
-    return g.crossJoin(F.broadcast(t)).select(
+    return g.crossJoin(t).select(
         F.col("fold").cast("bigint").alias("fold"),
         "n_docs",
         "n_tokens",
@@ -1774,8 +1773,8 @@ def nb_mcc_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         pk.agg(F.expr("SUM(CAST(p AS DECIMAL(38,0)) * p)").alias("sp2"))
     )
     return (
-        tots.crossJoin(F.broadcast(tp))
-        .crossJoin(F.broadcast(s2))
+        tots.crossJoin(tp)
+        .crossJoin(s2)
         .select(
             F.col("n").alias("n_test"),
             F.col("tr").alias("n_correct"),

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from dbt_project_spark.catalog import register
 from dbt_project_spark.functions.expressions import cosine_similarity, l2_norm
+from dbt_project_spark.operators.joins import at_most, broadcast_dim_join
 from dbt_project_spark.sources import load_table
 
 IVF_TOPK = 5
@@ -200,8 +201,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     probes = probe_cells(queries, cent, nprobe)
     scored = (
-        F.broadcast(probes)
-        .join(cells, on="cid")
+        probes.join(cells, on="cid")
         .filter(F.col("vec_id") != F.col("query_id"))
         .withColumn("cosine", F.round(cosine_similarity("qe", "embedding"), 6))
         .select("query_id", F.col("vec_id").alias("neighbor_id"), "cosine")
@@ -603,10 +603,10 @@ def pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.slice("iv", m * sub + 1, sub).alias("iv"),
         )
         lm = q_sub.crossJoin(
-            F.broadcast(books.filter(F.col("m") == m).select("cid", "civ"))
+            books.filter(F.col("m") == m).select("cid", "civ")
         ).select("qid", F.lit(m).alias("m"), "cid", ld2.alias("ld2"))
         lut = lm if lut is None else lut.unionByName(lm)
-    parts = codes.join(F.broadcast(lut), on=["m", "cid"]).select(
+    parts = codes.join(lut, on=["m", "cid"]).select(
         "qid", "vid", "ld2"
     )
     ad = (
@@ -705,12 +705,14 @@ def _ivfpq_adc(spark: SparkSession, sf_dir: str, nq: int) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
     )
     probes = probe_cells(queries, ccent, nprobe).select("query_id", "cid")
-    cand = (
-        F.broadcast(probes)
-        .join(cells.select("vec_id", "cid"), on="cid")
+    # counted: a filled cache carries its measured size, so the planner
+    # broadcasts the nq·nprobe·n/K candidates onto the codes while small
+    cand = persist_tracked(
+        probes.join(cells.select("vec_id", "cid"), on="cid")
         .filter(F.col("vec_id") != F.col("query_id"))
         .select(F.col("query_id").alias("qid"), F.col("vec_id").alias("vid"))
     )
+    cand.count()
     # PQ codebooks + corpus codes come from the PERSISTED index (one
     # training/encoding pass per corpus — operators/ivf.build_pq_index;
     # bit-identical to inline training, which is what the oracle
@@ -733,17 +735,13 @@ def _ivfpq_adc(spark: SparkSession, sf_dir: str, nq: int) -> DataFrame:
             F.slice("iv", m * sub + 1, sub).alias("iv"),
         )
         lm = q_sub.crossJoin(
-            F.broadcast(books.filter(F.col("m") == m).select("cid", "civ"))
+            books.filter(F.col("m") == m).select("cid", "civ")
         ).select("qid", F.lit(m).alias("m"), "cid", ld2.alias("ld2"))
         lut = lm if lut is None else lut.unionByName(lm)
-    # Broadcast the candidate list (nq·nprobe·n/K ≈ nq·nprobe·√n rows
-    # of three ids — bounded by the probe contract, 620 MB-class codes
-    # shuffles are not): codes then stream scan→BHJ→BHJ→partial agg
-    # with no exchange until the (qid, vid) group-by of shortlist-
-    # sized partials (r12, guide §3.1).
+    lut = at_most(lut, nq * PQ_M * PQ_K)  # per query, subspace and code
     parts = (
-        codes.join(F.broadcast(cand), on="vid")
-        .join(F.broadcast(lut), on=["qid", "m", "cid"])
+        codes.join(cand, on="vid")
+        .join(lut, on=["qid", "m", "cid"])
         .select("qid", "vid", "ld2")
     )
     return (
@@ -1080,7 +1078,7 @@ def _rpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = probe_cells(queries, ccent, nprobe)
     qres = persist_tracked(
         probes.join(
-            F.broadcast(centi.select(F.col("cid"), F.col("civ"))),
+            centi.select(F.col("cid"), F.col("civ")),
             on="cid",
         ).select(
             "query_id",
@@ -1088,8 +1086,9 @@ def _rpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.zip_with(to_int("qe"), "civ", lambda a, b: a - b).alias("iv"),
         )
     )
-    cand = (
-        F.broadcast(probes.select("query_id", "cid"))
+    # counted for a measured size, as in _ivfpq_adc
+    cand = persist_tracked(
+        probes.select("query_id", "cid")
         .join(cells.select("vec_id", "cid"), on="cid")
         .filter(F.col("vec_id") != F.col("query_id"))
         .select(
@@ -1098,6 +1097,7 @@ def _rpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("cid").cast("bigint").alias("cell"),
         )
     )
+    cand.count()
     parts = None
     ld2 = F.aggregate(
         F.zip_with("iv", "civ", lambda a, b: (a - b) * (a - b)),
@@ -1110,17 +1110,15 @@ def _rpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id", "cell", F.slice("iv", m * sub + 1, sub).alias("iv")
         )
         lm = q_sub.crossJoin(
-            F.broadcast(books.filter(F.col("m") == m).select("cid", "civ"))
+            books.filter(F.col("m") == m).select("cid", "civ")
         ).select(
             "query_id", "cell", F.lit(m).alias("m"), "cid", ld2.alias("ld2")
         )
         lut = lm if lut is None else lut.unionByName(lm)
-    # Same broadcast shape as _ivfpq_adc (r12): stream the corpus
-    # codes through two broadcast hash joins instead of shuffling them
-    # by vid for a sort-merge against the tiny candidate list.
+    lut = at_most(lut, PQANN_NQ * nprobe * PQ_M * PQ_K)
     parts = (
-        codes.join(F.broadcast(cand), on="vid")
-        .join(F.broadcast(lut), on=["query_id", "cell", "m", "cid"])
+        codes.join(cand, on="vid")
+        .join(lut, on=["query_id", "cell", "m", "cid"])
         .select("query_id", "vid", "ld2")
     )
     return parts.groupBy("query_id", "vid").agg(
@@ -1335,7 +1333,7 @@ def ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.expr("CAST(sz AS DECIMAL(38,0)) * sz")).alias("s2"),
     )
     return (
-        sizes.crossJoin(F.broadcast(g))
+        sizes.crossJoin(g)
         .groupBy(
             (F.length(F.bin("sz")) - 1).cast("bigint").alias("size_log2"),
             "s2",
@@ -1465,8 +1463,7 @@ def ann_probe_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     for p in settings:
         probes = probe_cells(queries, cent, p)
         topk = (
-            F.broadcast(probes)
-            .join(cells, on="cid")
+            probes.join(cells, on="cid")
             .filter(F.col("vec_id") != F.col("query_id"))
             .withColumn(
                 "cosine", F.round(cosine_similarity("qe", "embedding"), 6)
@@ -1658,10 +1655,12 @@ def ann_ivfpq_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("query_id").orderBy(
         F.asc("ad2"), F.asc("neighbor_id")
     )
-    short = (
+    bound = PQANN_NQ * PQANN_REFINE_R  # the shortlist, vectors attached
+    short = at_most(
         adc.withColumn("rk0", F.row_number().over(w))
         .filter(F.col("rk0") <= PQANN_REFINE_R)
-        .select("query_id", "neighbor_id")
+        .select("query_id", "neighbor_id"),
+        bound,
     )
     from dbt_project_spark.functions.expressions import cosine_similarity
 
@@ -1670,15 +1669,8 @@ def ann_ivfpq_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = e.select(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ce")
     )
-    # Broadcast the nq·4k-row shortlist through BOTH vector-attach
-    # joins (r12, VERDICT r11 item 4): un-hinted, the planner's
-    # unknown size estimate for the windowed shortlist picked
-    # sort-merge and shuffled the full embeddings table TWICE — 620 MB
-    # at sf100 — to attach vectors to 200 rows. Broadcast-hash keeps
-    # the corpus scan shuffle-free; the re-rank carries embeddings
-    # only inside shortlist-sized rows.
     rc = (
-        F.broadcast(F.broadcast(short).join(q, "query_id"))
+        at_most(short.join(q, "query_id"), bound)
         .join(c, "neighbor_id")
         .withColumn("cosine", F.round(cosine_similarity("qe", "ce"), 6))
     )
@@ -1850,15 +1842,17 @@ def _pca_iterate(spark: SparkSession, sf_dir: str):
     )
 
     cc = persist_tracked(
-        comp.join(F.broadcast(means), "d").select(
+        broadcast_dim_join(comp, means, "d").select(
             "vec_id", "d", (F.col("c") - F.col("md")).alias("c")
         )
     )
+    # means and every v have one row per embedding dimension, at any
+    # corpus size; a checkpointed v carries no size the planner can use
     v = means.select("d", F.lit(1000000).cast("bigint").alias("v"))
     iterates, mx = [], None
     for _ in range(PCA_ITERS):
         dot = (
-            cc.join(F.broadcast(v), "d")
+            broadcast_dim_join(cc, v, "d")
             .groupBy("vec_id")
             .agg(F.sum(F.col("c") * F.col("v")).cast("bigint").alias("dot"))
         )
@@ -1878,10 +1872,8 @@ def _pca_iterate(spark: SparkSession, sf_dir: str):
         # be superseded mid-loop — but the tracked handle frees the
         # blocks deterministically at the next release_tracked instead
         # of waiting on a GC/ContextCleaner race.
-        wmx = local_checkpoint_tracked(
-            w.crossJoin(F.broadcast(round_mx))
-        ).df
-        mx = wmx.select("mx").distinct()
+        wmx = local_checkpoint_tracked(w.crossJoin(round_mx)).df
+        mx = wmx.agg(F.max("mx").alias("mx"))
         v = wmx.select(
             "d",
             F.expr("CAST((w * 1000000) div mx AS BIGINT)").alias("v"),
@@ -1934,16 +1926,13 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         iterates[-1]
         .select(F.col("d").alias("dim"), F.col("v").alias("v_micro"))
-        .crossJoin(F.broadcast(lam))
+        .crossJoin(lam)
         .crossJoin(
-            F.broadcast(
-                al.select(
-                    F.round(
-                        F.col("num")
-                        / (F.sqrt(F.col("na")) * F.sqrt(F.col("nb"))),
-                        6,
-                    ).alias("align")
-                )
+            al.select(
+                F.round(
+                    F.col("num") / (F.sqrt(F.col("na")) * F.sqrt(F.col("nb"))),
+                    6,
+                ).alias("align")
             )
         )
     )
@@ -2011,7 +2000,7 @@ def pca_explained_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     cc, iterates, _ = _pca_iterate(spark, sf_dir)
     v = iterates[-1]
     pr = (
-        cc.join(F.broadcast(v), "d")
+        broadcast_dim_join(cc, v, "d")
         .groupBy("vec_id")
         .agg(F.sum(F.col("c") * F.col("v")).cast("bigint").alias("dot"))
     )
@@ -2025,8 +2014,8 @@ def pca_explained_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pn = pr.agg(F.expr("SUM(CAST(dot AS DECIMAL(38,0)) * dot)").alias("psq"))
     return (
-        tv.crossJoin(F.broadcast(vn))
-        .crossJoin(F.broadcast(pn))
+        tv.crossJoin(vn)
+        .crossJoin(pn)
         .select(
             F.col("n").alias("n_vecs"),
             "dim",
@@ -2093,7 +2082,7 @@ def embedding_pca_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     cc, iterates, _ = _pca_iterate(spark, sf_dir)
     v = iterates[-1]
     pr = (
-        cc.join(F.broadcast(v), "d")
+        broadcast_dim_join(cc, v, "d")
         .groupBy("vec_id")
         .agg(F.sum(F.col("c") * F.col("v")).cast("bigint").alias("dot"))
     )
@@ -2104,7 +2093,7 @@ def embedding_pca_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("md")
     )
     top = (
-        pr.crossJoin(F.broadcast(mu))
+        pr.crossJoin(mu)
         .select("vec_id", F.abs(F.col("dot") - F.col("md")).alias("dev"))
         .orderBy(F.desc("dev"), "vec_id")
         .limit(PCA_OUT_K)

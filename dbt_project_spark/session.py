@@ -6,6 +6,11 @@ UTC session timezone (determinism across machines), Arrow enabled for
 the few Pandas-UDF paths, and shuffle partitions sized from the
 environment rather than hardcoded.
 
+Join strategy is left to Spark: ``autoBroadcastJoinThreshold`` stays at
+its default and AQE re-plans each join from its finished shuffle stages'
+measured sizes. A broadcast is forced only behind a measured guard (see
+operators/joins.py).
+
 Stream state defaults. Every state store instance costs a fixed load
 and commit per micro-batch, whatever rows it holds, so a small stream's
 batch latency is set by how many instances it touches. A stream-stream

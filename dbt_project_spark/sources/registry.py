@@ -28,10 +28,6 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Tables small enough (at any realistic SF) to broadcast in joins.
-DIM_TABLES = {"region", "nation", "supplier", "part"}
-
-
 def ensure_runtime_confs(spark: SparkSession) -> None:
     """Set the non-static confs the engine depends on.
 

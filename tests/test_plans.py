@@ -145,3 +145,60 @@ def test_merge_materialization_upserts_by_key(spark, tmp_path):
     }
     # d2 partition was not rewritten
     assert sorted(os.listdir(str(tmp_path / "facts" / "day=d2"))) == d2_files
+
+
+def test_incremental_unreadable_target_raises_and_keeps_history(spark, tmp_path):
+    """An existing incremental target that cannot be read must fail the
+    run, not pass for a first run: a first run overwrites the target,
+    which would replace its whole history with the new batch."""
+    import os
+
+    target = str(tmp_path / "wh")
+    day1 = spark.createDataFrame([("2024-01-01", 1, 5.0)], ["d", "k", "v"])
+    day2 = spark.createDataFrame([("2024-01-02", 3, 7.0)], ["d", "k", "v"])
+
+    def run(ev):
+        p = Project(spark, {"ev": ev}, target_dir=target)
+        p.sql_model(
+            "inc", "SELECT d, k, v FROM {{ source('ev') }}",
+            materialized="incremental", partition_by="d",
+        )
+        return p.ref("inc")
+
+    run(day1)
+    root = tmp_path / "wh" / "inc"
+    data = sorted(root.rglob("*.parquet"))
+    assert data
+    for f in data:  # a corrupt footer in every data file
+        f.write_bytes(b"not a parquet file")
+    before = {str(f): f.read_bytes() for f in root.rglob("*") if f.is_file()}
+
+    with pytest.raises(Exception):
+        run(day1.union(day2))
+    after = {str(f): f.read_bytes() for f in root.rglob("*") if f.is_file()}
+    assert after == before
+    assert os.path.isdir(root / "d=2024-01-01")
+
+
+@pytest.mark.parametrize("materialized", ["incremental", "merge"])
+def test_empty_first_batch_then_data(spark, tmp_path, materialized):
+    """An empty batch leaves a target with no data file (a partitioned
+    write of 0 rows writes only _SUCCESS). Both that run and the next,
+    non-empty one must succeed, the next one as a first run."""
+    target = str(tmp_path / "wh")
+    day1 = spark.createDataFrame([("2024-01-01", 1, 5.0)], ["d", "k", "v"])
+
+    def run(ev):
+        p = Project(spark, {"ev": ev}, target_dir=target)
+
+        @p.model("m", materialized=materialized, partition_by="d",
+                 unique_key="k")
+        def _m(proj):
+            return proj.source("ev")
+
+        return p.ref("m")
+
+    assert run(day1.limit(0)).count() == 0
+    assert not list((tmp_path / "wh" / "m").rglob("*.parquet"))
+    rows = run(day1).collect()
+    assert [(str(r["d"]), r["k"], r["v"]) for r in rows] == [("2024-01-01", 1, 5.0)]
