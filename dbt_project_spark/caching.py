@@ -24,15 +24,28 @@ CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND). A query result built on a
 checkpoint is therefore valid only until the NEXT catalog entry is
 built — see ``catalog.register``. Double-unpersist (some operators
 release their own per-round intermediates eagerly) is a no-op.
+
+Builders that write files (dbt targets, connector round trips, stream
+sources and sinks, a per-call index) take their directory from
+``scratch_dir`` and return the lazy plan over those files.
+``release_tracked`` deletes every scratch directory, so the same
+lifetime holds: a result read from scratch files is valid until the
+next catalog entry is built. Directories still registered when the
+process exits are deleted then.
 """
 
 from __future__ import annotations
+
+import atexit
+import shutil
+import tempfile
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Row
 
 _TRACKED: list[DataFrame] = []
 _CHECKPOINTS: list["Checkpoint"] = []
+_SCRATCH: list[str] = []
 
 
 def persist_tracked(
@@ -42,6 +55,23 @@ def persist_tracked(
     df = df.persist(level)
     _TRACKED.append(df)
     return df
+
+
+def scratch_dir(prefix: str) -> str:
+    """A new local directory for a builder's files, deleted by the next
+    ``release_tracked`` (or at process exit)."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    _SCRATCH.append(path)
+    return path
+
+
+def _remove_scratch() -> None:
+    for path in _SCRATCH:
+        shutil.rmtree(path, ignore_errors=True)
+    _SCRATCH.clear()
+
+
+atexit.register(_remove_scratch)
 
 
 def unpersist_tracked(df: DataFrame) -> None:
@@ -193,9 +223,10 @@ class RoundCache:
 
 
 def release_tracked() -> int:
-    """Unpersist every tracked DataFrame AND free every tracked
-    checkpoint's blocks; returns how many were live."""
-    n = len(_TRACKED) + len(_CHECKPOINTS)
+    """Unpersist every tracked DataFrame, free every tracked
+    checkpoint's blocks and delete every scratch directory; returns how
+    many were live."""
+    n = len(_TRACKED) + len(_CHECKPOINTS) + len(_SCRATCH)
     for df in _TRACKED:
         try:
             df.unpersist()
@@ -205,6 +236,7 @@ def release_tracked() -> int:
     for handle in _CHECKPOINTS:
         handle.release()
     _CHECKPOINTS.clear()
+    _remove_scratch()
     return n
 
 

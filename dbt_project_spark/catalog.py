@@ -32,10 +32,13 @@ def register(name: str, oracle: str | None = None):
     checkpoint-backed plans (the iterative operators: BFS/SSSP/LPA/
     k-core/CC/BPE/markov) are UNRECOMPUTABLE afterwards — re-executing
     them raises CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND rather than
-    recomputing. So a catalog result DataFrame is valid only until the
-    next catalog entry is built: materialize (collect/write/compare)
-    query N fully before calling query N+1. Every shipped consumer
-    (driver gate, oracle_check, bench, CLI) already does."""
+    recomputing. It also deletes the scratch directories builders
+    write their files into (``caching.scratch_dir``), and a result read
+    from those files fails afterwards. So a catalog result DataFrame is
+    valid only until the next catalog entry is built: materialize
+    (collect/write/compare) query N fully before calling query N+1.
+    Every shipped consumer (driver gate, oracle_check, bench, CLI)
+    already does."""
 
     def deco(fn):
         @functools.wraps(fn)

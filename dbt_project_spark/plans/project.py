@@ -140,18 +140,22 @@ class Project:
         if self.target_dir is None:
             raise ValueError(f"model {m.name}: table/incremental needs target_dir")
         path = f"{self.target_dir}/{m.name}"
+        schema, cols = df.schema, df.columns
+
+        def target() -> DataFrame:
+            # Read with the model's schema, in its column order: inferred
+            # partition values change type ('2024-01-01' reads as DATE)
+            # and move last, and an empty target reads as 0 rows.
+            return self.spark.read.schema(schema).parquet(path).select(*cols)
+
         if m.materialized == "table":
             df.write.mode("overwrite").parquet(path)
         elif m.materialized == "incremental":
             if m.partition_by is None:
                 raise ValueError(f"incremental model {m.name} needs partition_by")
             existing_max = None
-            if _has_data(self.spark, path, df.schema):
-                existing_max = (
-                    self.spark.read.parquet(path)
-                    .agg(F.max(m.partition_by).alias("m"))
-                    .collect()[0]["m"]
-                )
+            if _has_data(self.spark, path, schema):
+                existing_max = target().agg(F.max(m.partition_by)).first()[0]
             if existing_max is not None:
                 df = df.filter(F.col(m.partition_by) > F.lit(existing_max))
             (
@@ -183,7 +187,7 @@ class Project:
                 raise ValueError(
                     f"merge model {m.name} needs partition_by + unique_key"
                 )
-            if not _has_data(self.spark, path, df.schema):  # first run
+            if not _has_data(self.spark, path, schema):  # first run
                 df.write.mode("overwrite").partitionBy(m.partition_by).parquet(
                     path
                 )
@@ -192,7 +196,7 @@ class Project:
                     r[0]
                     for r in df.select(m.partition_by).distinct().collect()
                 ]  # partitions-sized driver list, like the high-water mark
-                survivors = self.spark.read.parquet(path).filter(
+                survivors = target().filter(
                     F.col(m.partition_by).isin(affected)
                 ).join(
                     df.select(m.unique_key).distinct(),
@@ -224,9 +228,7 @@ class Project:
                     cp.release()
         else:
             raise ValueError(f"unknown materialization {m.materialized!r}")
-        if not _has_data(self.spark, path, df.schema):  # an empty batch: no schema on disk
-            return self.spark.read.schema(df.schema).parquet(path)
-        return self.spark.read.parquet(path)
+        return target()
 
     def run(self, names: list[str] | None = None) -> dict[str, DataFrame]:
         for name in names or list(self.models):

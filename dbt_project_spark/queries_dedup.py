@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from dbt_project_spark.caching import scratch_dir
 from dbt_project_spark.catalog import register
 from dbt_project_spark.operators.dedup import (
     MINHASH_A,
@@ -215,16 +216,10 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     restricted to pairs with ≥1 new side: proves incremental == full
     recompute on exactly the pairs a batch run owes.
     """
-    import os
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents")
     old = docs.filter(F.col("doc_id") % NEW_MOD != 0)
     new = docs.filter(F.col("doc_id") % NEW_MOD == 0)
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    index_dir = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_mh_index_{tag}"
-    )
+    index_dir = scratch_dir("spark_graft_mh_index_")
     build_minhash_index(old, "doc_id", "text", index_dir)
     pairs = incremental_minhash_pairs(
         spark, new, "doc_id", "text", index_dir, JACCARD_T

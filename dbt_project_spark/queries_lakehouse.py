@@ -22,12 +22,11 @@ partitions), not O(table).
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dbt_project_spark.caching import scratch_dir
 from dbt_project_spark.catalog import register
 from dbt_project_spark.sources import load_table
 
@@ -136,59 +135,48 @@ def merge_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dbt_project_spark.plans.project import Project
 
     base, batch = _order_snapshots(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="merge_upsert_")
-    try:
-        for snap in (base, batch):
-            proj = Project(spark, sources={}, target_dir=tmp)
+    tmp = scratch_dir("merge_upsert_")
+    for snap in (base, batch):
+        proj = Project(spark, sources={}, target_dir=tmp)
 
-            @proj.model(
-                "orders_current",
-                materialized="merge",
-                partition_by="ym",
-                unique_key="order_id",
-            )
-            def _orders_current(p, _df=snap):
-                return _df
+        @proj.model(
+            "orders_current",
+            materialized="merge",
+            partition_by="ym",
+            unique_key="order_id",
+        )
+        def _orders_current(p, _df=snap):
+            return _df
 
-            proj.run(["orders_current"])
-        final = spark.read.parquet(os.path.join(tmp, "orders_current"))
-        key = F.concat_ws(
-            "|",
-            F.col("order_id").cast("string"),
-            F.col("status"),
-            F.col("price100").cast("string"),
+        final = proj.run(["orders_current"])["orders_current"]
+    key = F.concat_ws(
+        "|",
+        F.col("order_id").cast("string"),
+        F.col("status"),
+        F.col("price100").cast("string"),
+    )
+    summary = final.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+        F.countDistinct("ym").cast("bigint").alias("n_partitions"),
+        F.sum("price100").cast("bigint").alias("sum_price100"),
+        F.sum(md5_int(key)).cast("bigint").alias("row_checksum"),
+    )
+    delta = (
+        batch.join(
+            base.select("order_id", F.lit(1).alias("__in_base")),
+            on="order_id",
+            how="left",
         )
-        summary = final.agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            F.countDistinct("ym").cast("bigint").alias("n_partitions"),
-            F.sum("price100").cast("bigint").alias("sum_price100"),
-            F.sum(md5_int(key)).cast("bigint").alias("row_checksum"),
+        .agg(
+            F.sum(F.when(F.col("__in_base").isNotNull(), 1).otherwise(0))
+            .cast("bigint")
+            .alias("n_updated"),
+            F.sum(F.when(F.col("__in_base").isNull(), 1).otherwise(0))
+            .cast("bigint")
+            .alias("n_inserted"),
         )
-        delta = (
-            batch.join(
-                base.select("order_id", F.lit(1).alias("__in_base")),
-                on="order_id",
-                how="left",
-            )
-            .agg(
-                F.sum(
-                    F.when(F.col("__in_base").isNotNull(), 1).otherwise(0)
-                )
-                .cast("bigint")
-                .alias("n_updated"),
-                F.sum(F.when(F.col("__in_base").isNull(), 1).otherwise(0))
-                .cast("bigint")
-                .alias("n_inserted"),
-            )
-        )
-        row = summary.crossJoin(delta).collect()[0]
-        return spark.createDataFrame(
-            [tuple(row)],
-            "n_rows bigint, n_partitions bigint, sum_price100 bigint, "
-            "row_checksum bigint, n_updated bigint, n_inserted bigint",
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    )
+    return summary.crossJoin(delta)
 
 
 _EVO_CUT = "1996-01-01"  # run-2 batches (with the new column) start here
@@ -262,37 +250,26 @@ def schema_evolution_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderpriority").alias("prio"),  # the drifted-in column
         yr.alias("yr"),
     )
-    tmp = tempfile.mkdtemp(prefix="schema_evo_")
-    try:
-        path = os.path.join(tmp, "orders_evolved")
-        early.write.mode("overwrite").partitionBy("yr").parquet(path)
-        late.write.mode("append").partitionBy("yr").parquet(path)
-        merged = spark.read.option("mergeSchema", "true").parquet(path)
-        key = F.concat_ws(
-            "|",
-            F.col("order_id").cast("string"),
-            F.col("status"),
-            F.col("price100").cast("string"),
-            F.col("prio"),
+    path = os.path.join(scratch_dir("schema_evo_"), "orders_evolved")
+    early.write.mode("overwrite").partitionBy("yr").parquet(path)
+    late.write.mode("append").partitionBy("yr").parquet(path)
+    merged = spark.read.option("mergeSchema", "true").parquet(path)
+    key = F.concat_ws(
+        "|",
+        F.col("order_id").cast("string"),
+        F.col("status"),
+        F.col("price100").cast("string"),
+        F.col("prio"),
+    )
+    return (
+        merged.withColumn("prio", F.coalesce("prio", F.lit("UNKNOWN")))
+        .groupBy(F.col("yr").cast("string").alias("yr"), "prio")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+            F.sum("price100").cast("bigint").alias("sum_price100"),
+            F.sum(md5_int(key)).cast("bigint").alias("row_checksum"),
         )
-        out = (
-            merged.withColumn("prio", F.coalesce("prio", F.lit("UNKNOWN")))
-            .groupBy(F.col("yr").cast("string").alias("yr"), "prio")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-                F.sum("price100").cast("bigint").alias("sum_price100"),
-                F.sum(md5_int(key)).cast("bigint").alias("row_checksum"),
-            )
-        )
-        # years×priorities-sized (≤ ~40 rows at any SF) — collected so
-        # the temp dir can be deleted before returning.
-        return spark.createDataFrame(
-            [tuple(r) for r in out.collect()],
-            "yr string, prio string, n_rows bigint, sum_price100 bigint, "
-            "row_checksum bigint",
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    )
 
 
 _INC_CUT = "2024-01-20"  # run-1 high-water mark (events span Jan 1-30)
@@ -327,13 +304,8 @@ def incremental_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from dbt_project_spark.plans.project import Project
 
-    # day is a DATE throughout the model: the partition directory
-    # values (day=2024-01-05) are re-inferred as DateType when the
-    # target is read back for the high-water MAX, so a string model
-    # column would make that comparison cross-type. The final output
-    # casts to string to match the oracle's strftime.
     ev = load_table(spark, sf_dir, "events").select(
-        F.to_date("ts").alias("day"),
+        F.date_format("ts", "yyyy-MM-dd").alias("day"),
         "event_type",
         F.round(F.col("value") * 100, 0).cast("bigint").alias("v100"),
     )
@@ -344,7 +316,7 @@ def incremental_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("v100").cast("bigint").alias("sum_v100"),
         )
 
-    cut = F.lit(_INC_CUT).cast("date")
+    cut = F.lit(_INC_CUT)
     first = ev.filter(F.col("day") <= cut)
     tampered = ev.withColumn(
         "v100",
@@ -352,33 +324,15 @@ def incremental_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("v100")
         ),
     )
-    tmp = tempfile.mkdtemp(prefix="incremental_rollup_")
-    try:
-        for src in (first, tampered):
-            proj = Project(spark, sources={}, target_dir=tmp)
+    tmp = scratch_dir("incremental_rollup_")
+    for src in (first, tampered):
+        proj = Project(spark, sources={}, target_dir=tmp)
 
-            @proj.model(
-                "events_daily", materialized="incremental",
-                partition_by="day",
-            )
-            def _events_daily(p, _df=_rollup(src)):
-                return _df
+        @proj.model(
+            "events_daily", materialized="incremental", partition_by="day",
+        )
+        def _events_daily(p, _df=_rollup(src)):
+            return _df
 
-            proj.run(["events_daily"])
-        final = spark.read.parquet(os.path.join(tmp, "events_daily"))
-        # day comes back as the partition directory column: re-select
-        # to pin column order and types; the rows are collected so the
-        # temp dir can be deleted before returning.
-        out = final.select(
-            F.col("day").cast("string"),
-            "event_type",
-            F.col("n_events").cast("bigint"),
-            F.col("sum_v100").cast("bigint"),
-        )
-        return spark.createDataFrame(
-            [tuple(r) for r in out.collect()],
-            "day string, event_type string, n_events bigint, "
-            "sum_v100 bigint",
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        final = proj.run(["events_daily"])["events_daily"]
+    return final

@@ -12,9 +12,12 @@ into one optimized plan, so the model boundaries cost nothing):
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dbt_project_spark.caching import scratch_dir
 from dbt_project_spark.catalog import register
 from dbt_project_spark.plans import Project
 from dbt_project_spark.plans.project import accepted_values, not_null, unique
@@ -414,6 +417,48 @@ def rapid_repeat_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _roundtrip_integrity(
+    spark: SparkSession, sf_dir: str, fmt: str, options: dict
+) -> DataFrame:
+    """The events table written in ``fmt`` (with ``options`` on both
+    the writer and the reader) and read back with an explicit schema,
+    as one row: checksums over the round-tripped rows, and the
+    exceptAll diff against the original as rows_lost/rows_gained."""
+    from dbt_project_spark.functions.expressions import md5_int
+
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_id", "ts", "user_id", "event_type", "value", "props"
+    )
+    path = os.path.join(scratch_dir(f"{fmt}_roundtrip_"), "events")
+    ts_fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
+    opts = {**options, "timestampFormat": ts_fmt}
+    ev.write.format(fmt).options(**opts).save(path)
+    back = spark.read.schema(ev.schema).format(fmt).options(**opts).load(path)
+    # Coalesce each component to an explicit sentinel BEFORE
+    # concatenating (ADVICE r06): concat_ws silently skips NULL
+    # fields while the oracle's || would NULL the whole key, so a
+    # NULL event_type/props would checksum different row sets on
+    # the two engines. With sentinels both sides hash the same key.
+    key = F.concat_ws(
+        "|",
+        F.coalesce(F.col("event_id").cast("string"), F.lit("<NULL>")),
+        F.coalesce(F.col("event_type"), F.lit("<NULL>")),
+        F.coalesce(F.date_format("ts", ts_fmt), F.lit("<NULL>")),
+        F.coalesce(F.col("props"), F.lit("<NULL>")),
+    )
+    chk = back.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+        F.sum(F.round(F.col("value") * 100, 0).cast("bigint"))
+        .cast("bigint")
+        .alias("sum_v100"),
+        F.sum("user_id").cast("bigint").alias("sum_user"),
+        F.sum(md5_int(key)).cast("bigint").alias("row_checksum"),
+    )
+    lost = ev.exceptAll(back).agg(F.count(F.lit(1)).alias("rows_lost"))
+    gained = back.exceptAll(ev).agg(F.count(F.lit(1)).alias("rows_gained"))
+    return chk.crossJoin(lost).crossJoin(gained)
+
+
 @register(
     "csv_roundtrip_integrity",
     oracle="""
@@ -454,67 +499,7 @@ def csv_roundtrip_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel, CSV splits by 128 MB chunks), two map-side-combinable
     checksum aggregates, and a distributed anti-diff; no windows, no
     driver state beyond the 1-row summary."""
-    import os
-    import shutil
-    import tempfile
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value", "props"
-    )
-    tmp = tempfile.mkdtemp(prefix="csv_roundtrip_")
-    try:
-        path = os.path.join(tmp, "events_csv")
-        fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-        ev.write.option("header", "true").option(
-            "timestampFormat", fmt
-        ).csv(path)
-        back = (
-            spark.read.schema(ev.schema)
-            .option("header", "true")
-            .option("timestampFormat", fmt)
-            .csv(path)
-        )
-        from dbt_project_spark.functions.expressions import md5_int
-
-        # Coalesce each component to an explicit sentinel BEFORE
-        # concatenating (ADVICE r06): concat_ws silently skips NULL
-        # fields while the oracle's || would NULL the whole key, so a
-        # NULL event_type/props would checksum different row sets on
-        # the two engines. With sentinels both sides hash the same key.
-        key = F.concat_ws(
-            "|",
-            F.coalesce(F.col("event_id").cast("string"), F.lit("<NULL>")),
-            F.coalesce(F.col("event_type"), F.lit("<NULL>")),
-            F.coalesce(F.date_format("ts", fmt), F.lit("<NULL>")),
-            F.coalesce(F.col("props"), F.lit("<NULL>")),
-        )
-        chk = back.agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            F.sum(F.round(F.col("value") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("sum_v100"),
-            F.sum("user_id").cast("bigint").alias("sum_user"),
-            F.sum(md5_int(key)).cast("bigint").alias("row_checksum"),
-        )
-        lost = ev.exceptAll(back).count()
-        gained = back.exceptAll(ev).count()
-        row = chk.collect()[0]
-        return spark.createDataFrame(
-            [
-                (
-                    row["n_rows"],
-                    row["sum_v100"],
-                    row["sum_user"],
-                    row["row_checksum"],
-                    lost,
-                    gained,
-                )
-            ],
-            "n_rows bigint, sum_v100 bigint, sum_user bigint, "
-            "row_checksum bigint, rows_lost bigint, rows_gained bigint",
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    return _roundtrip_integrity(spark, sf_dir, "csv", {"header": "true"})
 
 
 @register(
@@ -549,61 +534,4 @@ def jsonl_roundtrip_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     this exercises nested escaping), checksums run over the
     round-tripped rows against the oracle's parquet-direct aggregates,
     and exceptAll lost/gained counts pin exact multiset equality."""
-    import os
-    import shutil
-    import tempfile
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value", "props"
-    )
-    tmp = tempfile.mkdtemp(prefix="jsonl_roundtrip_")
-    try:
-        path = os.path.join(tmp, "events_jsonl")
-        fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-        ev.write.option("timestampFormat", fmt).json(path)
-        back = (
-            spark.read.schema(ev.schema)
-            .option("timestampFormat", fmt)
-            .json(path)
-        )
-        from dbt_project_spark.functions.expressions import md5_int
-
-        # Coalesce each component to an explicit sentinel BEFORE
-        # concatenating (ADVICE r06): concat_ws silently skips NULL
-        # fields while the oracle's || would NULL the whole key, so a
-        # NULL event_type/props would checksum different row sets on
-        # the two engines. With sentinels both sides hash the same key.
-        key = F.concat_ws(
-            "|",
-            F.coalesce(F.col("event_id").cast("string"), F.lit("<NULL>")),
-            F.coalesce(F.col("event_type"), F.lit("<NULL>")),
-            F.coalesce(F.date_format("ts", fmt), F.lit("<NULL>")),
-            F.coalesce(F.col("props"), F.lit("<NULL>")),
-        )
-        chk = back.agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            F.sum(F.round(F.col("value") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("sum_v100"),
-            F.sum("user_id").cast("bigint").alias("sum_user"),
-            F.sum(md5_int(key)).cast("bigint").alias("row_checksum"),
-        )
-        lost = ev.exceptAll(back).count()
-        gained = back.exceptAll(ev).count()
-        row = chk.collect()[0]
-        return spark.createDataFrame(
-            [
-                (
-                    row["n_rows"],
-                    row["sum_v100"],
-                    row["sum_user"],
-                    row["row_checksum"],
-                    lost,
-                    gained,
-                )
-            ],
-            "n_rows bigint, sum_v100 bigint, sum_user bigint, "
-            "row_checksum bigint, rows_lost bigint, rows_gained bigint",
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    return _roundtrip_integrity(spark, sf_dir, "json", {})

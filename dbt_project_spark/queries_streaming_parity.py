@@ -16,23 +16,18 @@ oracle states the invariant the reference's reconciliation asserts:
 every input is served exactly once and the streamed rows equal the
 batch rows — so any parity break (dropped micro-batch, double-served
 file, nondeterministic scoring) flips row values and fails the hash.
-
-All diff counts are computed eagerly here; the returned DataFrame is
-in-memory, so the temp stream/checkpoint dirs are deleted before
-returning.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from dbt_project_spark.caching import scratch_dir
 from dbt_project_spark.catalog import register
 from dbt_project_spark.sources import load_table
 
@@ -49,7 +44,7 @@ def _run_file_stream(
 ) -> DataFrame:
     """Write each batch as one parquet dir under a file-stream source,
     run foreachBatch(serve)→parquet sink with availableNow, and return
-    the collected sink rows as an eager in-memory DataFrame."""
+    the sink's rows."""
     src = os.path.join(tmp, "src")
     out = os.path.join(tmp, "out")
     for i, b in enumerate(batches):
@@ -75,8 +70,7 @@ def _run_file_stream(
         raise RuntimeError(
             "availableNow parity stream did not finish within 300s"
         )
-    got = spark.read.parquet(out)
-    return spark.createDataFrame(got.collect(), got.schema)
+    return spark.read.parquet(out)
 
 
 def _parity_summary(
@@ -154,24 +148,20 @@ def serving_parity_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
     )
     half = _N_ANN_QUERIES // 2
-    tmp = tempfile.mkdtemp(prefix="parity_ann_")
-    try:
-        streamed = _run_file_stream(
-            spark,
-            [
-                queries.filter(F.col("query_id") < half),
-                queries.filter(F.col("query_id") >= half),
-            ],
-            lambda b: _serve_ann_batch(b.sparkSession, sf_dir, b),
-            queries.schema,
-            tmp,
-        )
-        batch = _serve_ann_batch(spark, sf_dir, queries)
-        return _parity_summary(
-            spark, "ann_ivf_online", streamed, batch, queries.count()
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    streamed = _run_file_stream(
+        spark,
+        [
+            queries.filter(F.col("query_id") < half),
+            queries.filter(F.col("query_id") >= half),
+        ],
+        lambda b: _serve_ann_batch(b.sparkSession, sf_dir, b),
+        queries.schema,
+        scratch_dir("parity_ann_"),
+    )
+    batch = _serve_ann_batch(spark, sf_dir, queries)
+    return _parity_summary(
+        spark, "ann_ivf_online", streamed, batch, queries.count()
+    )
 
 
 @register(
@@ -217,23 +207,19 @@ def serving_parity_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         _bt, blam, bprior, bnc = _nb_model(ss, sf_dir)
         return _nb_predict(nb_bucketize(batch_df), blam, bprior, bnc)
 
-    tmp = tempfile.mkdtemp(prefix="parity_nb_")
-    try:
-        streamed = _run_file_stream(
-            spark,
-            [
-                incoming.filter(F.col("doc_id") <= mid),
-                incoming.filter(F.col("doc_id") > mid),
-            ],
-            _serve,
-            incoming.schema,
-            tmp,
-        )
-        return _parity_summary(
-            spark, "nb_langid_online", streamed, batch, incoming.count()
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    streamed = _run_file_stream(
+        spark,
+        [
+            incoming.filter(F.col("doc_id") <= mid),
+            incoming.filter(F.col("doc_id") > mid),
+        ],
+        _serve,
+        incoming.schema,
+        scratch_dir("parity_nb_"),
+    )
+    return _parity_summary(
+        spark, "nb_langid_online", streamed, batch, incoming.count()
+    )
 
 
 @register(
@@ -272,40 +258,36 @@ def serving_parity_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     events = load_table(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="parity_win_")
+    tmp = scratch_dir("parity_win_")
+    src = os.path.join(tmp, "src")
+    # 4 time-ranged files → 4 triggers; unbounded watermark keeps
+    # every event (update mode needs no eviction for correctness)
+    events.repartitionByRange(4, "ts").write.parquet(src)
+    run_update_distribution(
+        spark,
+        src,
+        state_dir=os.path.join(tmp, "state"),
+        out_dir=os.path.join(tmp, "out"),
+        checkpoint_dir=os.path.join(tmp, "ckpt"),
+        width_sec=300,
+        key_col="event_type",
+        watermark="3650 days",
+        # r13: state here is |5-min windows × event types| rows —
+        # bounded and volume-independent — so 8 state partitions
+        # (not the batch shuffle width) bounds the per-trigger
+        # state-store commit/snapshot fixed cost at ANY event
+        # volume; each partition holds a trivially small slice.
+        state_shuffle_partitions=8,
+    )
+    streamed = read_current_distribution(spark, os.path.join(tmp, "out"))
+    # persist: n_inputs below + both exceptAll diffs re-executed
+    # this agg 3× (_parity_summary reads this cache, releases none).
+    batch = windowed_count_distribution(
+        events, "ts", 300, ["event_type"]
+    ).persist()
     try:
-        src = os.path.join(tmp, "src")
-        # 4 time-ranged files → 4 triggers; unbounded watermark keeps
-        # every event (update mode needs no eviction for correctness)
-        events.repartitionByRange(4, "ts").write.parquet(src)
-        run_update_distribution(
-            spark,
-            src,
-            state_dir=os.path.join(tmp, "state"),
-            out_dir=os.path.join(tmp, "out"),
-            checkpoint_dir=os.path.join(tmp, "ckpt"),
-            width_sec=300,
-            key_col="event_type",
-            watermark="3650 days",
-            # r13: state here is |5-min windows × event types| rows —
-            # bounded and volume-independent — so 8 state partitions
-            # (not the batch shuffle width) bounds the per-trigger
-            # state-store commit/snapshot fixed cost at ANY event
-            # volume; each partition holds a trivially small slice.
-            state_shuffle_partitions=8,
+        return _parity_summary(
+            spark, "windowed_dist_online", streamed, batch, batch.count()
         )
-        final = read_current_distribution(spark, os.path.join(tmp, "out"))
-        streamed = spark.createDataFrame(final.collect(), final.schema)
-        # persist: n_inputs below + both exceptAll diffs re-executed
-        # this agg 3× (_parity_summary reads this cache, releases none).
-        batch = windowed_count_distribution(
-            events, "ts", 300, ["event_type"]
-        ).persist()
-        try:
-            return _parity_summary(
-                spark, "windowed_dist_online", streamed, batch, batch.count()
-            )
-        finally:
-            batch.unpersist()
     finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        batch.unpersist()

@@ -750,6 +750,7 @@ def _nb_model(spark: SparkSession, sf_dir: str):
     the latter three are the broadcastable model; scoring any
     document stream against them is `_nb_predict`."""
     from dbt_project_spark.caching import persist_tracked
+    from dbt_project_spark.operators.joins import at_most
 
     docs = load_table(spark, sf_dir, "documents")
     bt = persist_tracked(nb_bucketize(docs))
@@ -783,7 +784,7 @@ def _nb_model(spark: SparkSession, sf_dir: str):
             .alias("p9"),
         )
     )
-    bk = bt.select("b").distinct()
+    bk = at_most(bt.select("b").distinct(), NB_B)  # buckets are b % NB_B
     nc = cls.agg(F.count(F.lit(1)).cast("bigint").alias("ncls"))
     lam = (
         cls.crossJoin(bk)

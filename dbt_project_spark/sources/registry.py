@@ -11,7 +11,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
 
 TABLES = (
     "region",
@@ -46,20 +45,25 @@ def ensure_runtime_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
 
 
+def ts_as_micros(df: DataFrame) -> DataFrame:
+    """``df`` with a nanos-as-long ``ts`` as a µs timestamp.
+
+    The driver's events.ts is parquet TIMESTAMP(NANOS), read as int64
+    ns under nanosAsLong (integer div: double division would lose
+    precision at 1e18 ns magnitudes). Re-written copies (sfgen bench
+    data) already carry a µs timestamp and pass through unchanged."""
+    if dict(df.dtypes).get("ts") != "bigint":
+        return df
+    return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one registry table from an sf dir (parquet)."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     ensure_runtime_confs(spark)
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events" and isinstance(df.schema["ts"].dataType, LongType):
-        # The driver's events.ts is parquet TIMESTAMP(NANOS) → read as
-        # int64 ns under nanosAsLong; convert to a µs timestamp
-        # (integer div — double division would lose precision at 1e18
-        # ns magnitudes). Re-written copies (sfgen bench data) already
-        # carry a µs timestamp and skip this.
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return df
+    return ts_as_micros(df) if name == "events" else df
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names=TABLES) -> dict[str, DataFrame]:

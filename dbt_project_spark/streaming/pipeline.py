@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 
 from dbt_project_spark.caching import persist_tracked, unpersist_tracked
 from dbt_project_spark.functions.expressions import engagement_score
-from dbt_project_spark.sources.registry import ensure_runtime_confs
+from dbt_project_spark.sources.registry import ensure_runtime_confs, ts_as_micros
 
 # The frame the last ``micro_batch_analytics`` call persisted.
 _held_batch: DataFrame | None = None
@@ -171,9 +171,7 @@ def run_file_stream_pipeline(
     (parquet stands in for the reference's JDBC tables)."""
     ensure_runtime_confs(spark)
     static = spark.read.parquet(source_dir)
-    raw = spark.readStream.schema(static.schema).parquet(source_dir)
-    if dict(raw.dtypes).get("ts") == "bigint":  # nanos-as-long source
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    raw = ts_as_micros(spark.readStream.schema(static.schema).parquet(source_dir))
     pv, sd, tp = split_event_streams(raw)
     joined = join_metric_streams(pv, sd, tp)
 

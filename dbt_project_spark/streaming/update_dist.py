@@ -31,7 +31,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dbt_project_spark.streaming.pipeline import ensure_runtime_confs
+from dbt_project_spark.sources.registry import ensure_runtime_confs, ts_as_micros
 
 
 def _latest_version(dir_: str) -> int | None:
@@ -151,9 +151,7 @@ def _run_update_distribution(
     reader = spark.readStream.schema(static.schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    raw = reader.parquet(source_dir)
-    if dict(raw.dtypes).get("ts") == "bigint":  # nanos-as-long source
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    raw = ts_as_micros(reader.parquet(source_dir))
 
     counts = (
         raw.withWatermark("ts", watermark)

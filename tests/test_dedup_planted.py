@@ -37,15 +37,19 @@ DOCS = [
 ]
 
 
-@pytest.fixture(scope="module")
-def dedup_dir(spark, tmp_path_factory):
+def _plant(spark, tmp_path_factory, docs) -> str:
     d = str(tmp_path_factory.mktemp("dedup_planted") / "dpsf")
-    rows = [(i, t, "en", "plant", len(t)) for i, t in DOCS]
+    rows = [(i, t, "en", "plant", len(t)) for i, t in docs]
     spark.createDataFrame(
         rows,
         "doc_id bigint, text string, lang string, source string, n_chars bigint",
     ).coalesce(1).write.parquet(os.path.join(d, "documents.parquet"))
     return d
+
+
+@pytest.fixture(scope="module")
+def dedup_dir(spark, tmp_path_factory):
+    return _plant(spark, tmp_path_factory, DOCS)
 
 
 def _pairs(fam: list[int]) -> set[tuple[int, int]]:
@@ -105,18 +109,39 @@ def test_dedup_simhash_planted(spark, dedup_dir):
         assert 0 <= r["simhash"] < 2**SIMHASH_BITS
 
 
-def test_dedup_incremental_planted(spark, dedup_dir):
-    got = {
+def _incremental(df) -> dict:
+    return {
         (r["doc_a"], r["doc_b"]): (r["jaccard"], r["pair_kind"])
-        for r in QUERIES["dedup_incremental"](spark, dedup_dir).collect()
+        for r in df.collect()
     }
+
+
+def _want_incremental() -> dict:
     new = {10, 20, 30, 40}
-    want = {}
-    for a, b in ALL_PAIRS:
-        if a in new or b in new:
-            kind = "new_new" if a in new and b in new else "new_old"
-            want[(a, b)] = (1.0, kind)
+    return {
+        (a, b): (1.0, "new_new" if a in new and b in new else "new_old")
+        for a, b in ALL_PAIRS
+        if a in new or b in new
+    }
+
+
+def test_dedup_incremental_planted(spark, dedup_dir):
+    got = _incremental(QUERIES["dedup_incremental"](spark, dedup_dir))
     # family X gives (1,10),(2,10),(3,10); Y gives (4,20),(5,20);
     # Z is entirely new: (30,40) is the new_new pair
-    assert got == want
+    assert got == _want_incremental()
     assert got[(30, 40)][1] == "new_new"
+
+
+def test_dedup_incremental_index_per_call(spark, dedup_dir, tmp_path_factory):
+    """Two builds over data dirs with the same basename keep their own
+    index: the second, built before the first is collected, must not
+    replace the files the first one's plan reads."""
+    from dbt_project_spark.queries_dedup import dedup_incremental
+
+    other = _plant(spark, tmp_path_factory, [(1, TY), (10, TY), (2, T6), (30, TZ)])
+    assert os.path.basename(other) == os.path.basename(dedup_dir)
+    first = dedup_incremental(spark, dedup_dir)
+    second = dedup_incremental(spark, other)
+    assert _incremental(first) == _want_incremental()
+    assert _incremental(second) == {(1, 10): (1.0, "new_old")}

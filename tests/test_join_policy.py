@@ -171,12 +171,18 @@ def test_queries_fall_back_without_broadcast(spark, name):
 # AQE keeps its default threshold for measured sizes.
 _SCALED = {"spark.sql.autoBroadcastJoinThreshold": "4096"}
 # cross joins against literal tables (literal_table) and key- or
-# top-k-bounded sides (at_most)
+# top-k-bounded sides (at_most); the nb_* rows and
+# serving_parity_classifier cross the classes with _nb_model's
+# at-most-NB_B buckets
 SMALL_SIDE_QUERIES = (
     "slo_burn_rate",
     "vocab_coverage_curve",
     "ranker_agreement_topk",
     "ann_recall_quantized",
+    "nb_lang_classifier",
+    "nb_margin_calibration",
+    "nb_mcc_score",
+    "serving_parity_classifier",
 )
 
 
@@ -192,17 +198,50 @@ def test_scaled_conf_plans_cartesian_for_unsized_side(spark):
     assert "CartesianProduct" in df._jdf.queryExecution().executedPlan().toString()
 
 
+def _executed_plans(spark, run):
+    """``run()``'s return value, and the physical plans of every SQL
+    execution it starts: the returned frame's and those a builder runs
+    itself (its writes, its counts, the micro-batches of a stream it
+    drives), each as AQE last updated it."""
+    jsc = spark.sparkContext._jsc.sc()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        jsc.listenerBus().waitUntilEmpty()
+        lst = store.executionsList()
+        return [lst.apply(i) for i in range(lst.size())]
+
+    seen = {e.executionId() for e in executions()}
+    with _confs(spark, {"spark.sql.maxPlanStringLength": str(8 << 20)}):
+        out = run()
+    plans = [
+        e.physicalPlanDescription()
+        for e in executions()
+        if e.executionId() not in seen
+    ]
+    assert plans and not any(" more characters" in p for p in plans)
+    return out, plans
+
+
 @pytest.mark.parametrize("name", SMALL_SIDE_QUERIES)
 def test_small_sides_stay_broadcast_at_scale(spark, name):
     """With table scans over the static threshold, a cross join against a
     side the planner can size still plans a broadcast nested loop join,
     not a CartesianProduct that rescans the big side once per partition
-    of the small one."""
+    of the small one — in every plan the query runs, builder jobs
+    included."""
     load_all()
-    with _confs(spark, _SCALED):
+
+    def run():
         df = QUERIES[name](spark, SF_SMOKE)
         df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "isFinalPlan=true" in plan
-    assert "CartesianProduct" not in plan, plan
-    assert "BroadcastNestedLoopJoin" in plan, plan
+        return df
+
+    with _confs(spark, _SCALED):
+        df, plans = _executed_plans(spark, run)
+    final = df._jdf.queryExecution().executedPlan().toString()
+    if "AdaptiveSparkPlan" in final:  # not a one-row literal summary
+        assert "isFinalPlan=true" in final
+    plans.append(final)
+    assert not [p for p in plans if "CartesianProduct" in p]
+    assert any("BroadcastNestedLoopJoin" in p for p in plans), plans

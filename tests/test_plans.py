@@ -181,6 +181,37 @@ def test_incremental_unreadable_target_raises_and_keeps_history(spark, tmp_path)
 
 
 @pytest.mark.parametrize("materialized", ["incremental", "merge"])
+def test_materialized_model_keeps_its_schema(spark, tmp_path, materialized):
+    """A run returns the model's own columns, order and types: the
+    string partition column stays a string in its place, on the first
+    run and on the next, rather than coming back as an inferred DATE
+    moved last."""
+    target = str(tmp_path / "wh")
+    ddl = "d string, k bigint, v double"
+    day1 = spark.createDataFrame([("2024-01-01", 1, 5.0)], ddl)
+    day2 = spark.createDataFrame([("2024-01-02", 3, 7.0)], ddl)
+
+    def run(ev):
+        p = Project(spark, {"ev": ev}, target_dir=target)
+
+        @p.model("m", materialized=materialized, partition_by="d",
+                 unique_key="k")
+        def _m(proj):
+            return proj.source("ev")
+
+        return p.run(["m"])["m"]
+
+    first = run(day1)
+    assert first.dtypes == day1.dtypes
+    assert [tuple(r) for r in first.collect()] == [("2024-01-01", 1, 5.0)]
+    later = run(day1.union(day2))
+    assert later.dtypes == day1.dtypes
+    assert sorted(tuple(r) for r in later.collect()) == [
+        ("2024-01-01", 1, 5.0), ("2024-01-02", 3, 7.0)
+    ]
+
+
+@pytest.mark.parametrize("materialized", ["incremental", "merge"])
 def test_empty_first_batch_then_data(spark, tmp_path, materialized):
     """An empty batch leaves a target with no data file (a partitioned
     write of 0 rows writes only _SUCCESS). Both that run and the next,
