@@ -83,6 +83,46 @@ def _bruteforce_topk_join(
     )
 
 
+def ann_queries(e: DataFrame, n: int) -> DataFrame:
+    """(query_id, qe): the query set of an ANN search over ``e``
+    (vec_id, embedding) — the vectors with vec_id < n."""
+    return e.filter(F.col("vec_id") < n).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
+    )
+
+
+def ann_corpus(e: DataFrame) -> DataFrame:
+    """(neighbor_id, embedding): the corpus side of an ANN search."""
+    return e.select(F.col("vec_id").alias("neighbor_id"), "embedding")
+
+
+def recall_at_k(exact: DataFrame, approx: DataFrame, k: int) -> DataFrame:
+    """(query_id, k, n_matched, recall): per query of ``exact``, how
+    many of its (query_id, neighbor_id) rows ``approx`` also holds, and
+    that count over k rounded to 6 places. ``exact`` is the true top-k,
+    ``approx`` the index's; a query missing from ``approx`` matches 0."""
+    hits = approx.select(
+        F.col("query_id").alias("_aq"), F.col("neighbor_id").alias("_an")
+    )
+    m = (
+        exact.select("query_id", "neighbor_id")
+        .join(
+            hits,
+            (F.col("_aq") == F.col("query_id"))
+            & (F.col("_an") == F.col("neighbor_id")),
+            "left",
+        )
+        .groupBy("query_id")
+        .agg(F.count("_an").cast("bigint").alias("n_matched"))
+    )
+    return m.select(
+        "query_id",
+        F.lit(k).cast("bigint").alias("k"),
+        "n_matched",
+        F.round(F.col("n_matched") * 1.0 / k, 6).alias("recall"),
+    )
+
+
 def bruteforce_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -249,11 +289,12 @@ def with_lsh_bucket(df: DataFrame, vec: str = "embedding") -> DataFrame:
     return df.withColumn("bucket", bucket.cast("int"))
 
 
-def lsh_table_weights(ntables: int, nbits: int, dim: int = LSH_DIM) -> list[list[list[float]]]:
+def lsh_table_weights(ntables: int, nbits: int) -> list[list[list[float]]]:
     """Deterministic hyperplanes for banded LSH: ``ntables`` tables of
-    ``nbits`` hyperplanes each (same LCG stream as ``LSH_W``, so the
-    literal matrix is reproducible in the oracle SQL)."""
-    flat = _lcg_weights(ntables * nbits, dim)
+    ``nbits`` hyperplanes each, ``LSH_DIM`` wide (same LCG stream as
+    ``LSH_W``, so the literal matrix is reproducible in the oracle
+    SQL)."""
+    flat = _lcg_weights(ntables * nbits, LSH_DIM)
     return [flat[t * nbits : (t + 1) * nbits] for t in range(ntables)]
 
 
@@ -616,7 +657,6 @@ def cell_local_candidate_pairs(
     cid: str = "cid",
     vid: str = "vec_id",
     vec: str = "embedding",
-    block_bytes: int = _CELL_PAIR_BLOCK_BYTES,
 ) -> DataFrame:
     """(cid, vec_a, vec_b): within-cell candidate pairs whose exact
     ROUNDED cosine can reach ``threshold`` — SemDeDup's cluster-then-
@@ -644,8 +684,9 @@ def cell_local_candidate_pairs(
     of one dense matrix (a NaN-valued cosine is never finite, so every
     pair touching one is kept — the exact conservative semantics the
     old two-branch code implemented), and the cosine matrix is
-    computed in row blocks of ≤ ``block_bytes`` scratch instead of one
-    dense n_g×n_g allocation, so a hot cell cannot OOM its task. BLAS
+    computed in row blocks of ≤ ``_CELL_PAIR_BLOCK_BYTES`` scratch
+    instead of one dense n_g×n_g allocation, so a hot cell cannot OOM
+    its task. BLAS
     row-blocking can move a pair's float64 cosine by ~d·ε (≪ 1e-12);
     the prune slack (1e-6 + 1e-9) absorbs it — the exact SQL verify
     re-scores every survivor, so composition stays bit-identical.
@@ -656,6 +697,7 @@ def cell_local_candidate_pairs(
     vid_t = mem.schema[vid].dataType.simpleString()
     out_schema = f"{cid} {cid_t}, vec_a {vid_t}, vec_b {vid_t}"
     thr = threshold - _COS_PRUNE_SLACK
+    block_bytes = _CELL_PAIR_BLOCK_BYTES
 
     def per_cell(tbl):
         import numpy as np

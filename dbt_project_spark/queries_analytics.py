@@ -760,11 +760,12 @@ def kmv_user_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round((k - 1) * F.lit(4294967296.0) / F.col("theta"), 6)
     )
     est = per_type.withColumn("est", est_expr)
-    est_p = est.filter(F.col("event_type") == "purchase").select(
-        F.col("est").alias("est_purchase_users")
-    )
-    est_e = est.filter(F.col("event_type") == "error").select(
-        F.col("est").alias("est_error_users")
+    # event_type is per_type's key: one row each, picked in one aggregate
+    # (NULL for a type without events, as the oracle's scalar subquery)
+    pick = lambda t: F.max(F.when(F.col("event_type") == t, F.col("est")))
+    est_pe = est.agg(
+        pick("purchase").alias("est_purchase_users"),
+        pick("error").alias("est_error_users"),
     )
     ur = (
         hashed.select("h")
@@ -782,10 +783,9 @@ def kmv_user_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = pur.intersect(err).agg(
         F.count(F.lit(1)).alias("exact_overlap")
     )
-    # four 1-row relations — declarative assembly, no driver round-trip
+    # three 1-row relations — declarative assembly, no driver round-trip
     return (
-        est_p.crossJoin(est_e)
-        .crossJoin(est_u)
+        est_pe.crossJoin(est_u)
         .crossJoin(exact)
         .withColumn(
             "est_overlap",

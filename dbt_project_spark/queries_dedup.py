@@ -1033,7 +1033,7 @@ def _sem_members(spark: SparkSession, sf_dir: str):
     centroids. Shared by dedup_semantic and dedup_semantic_recall."""
     from dbt_project_spark.operators.ivf import load_ivf_index
 
-    cent, cells, _k, _np = load_ivf_index(spark, sf_dir)
+    cent, cells, _meta = load_ivf_index(spark, sf_dir)
     centd = cent.select(
         "cid", F.expr("transform(ce, x -> cast(x as double))").alias("ce")
     )

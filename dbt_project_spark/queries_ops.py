@@ -554,6 +554,38 @@ def weibull_survival_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _daily_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(event_type, n, s, q): per event type, the count n, sum s and
+    sum of squares q of its daily event counts over every day that has
+    any event — the oracles' types × days spine, zero-filled. A zero
+    day adds nothing to s or q, so only n needs the spine: it is the
+    number of distinct days (a NULL day included, as in the spine),
+    the same for every type. A NULL type or day never matches the
+    spine's equi-join, so their events add nothing either."""
+    e = load_table(spark, sf_dir, "events").select(
+        "event_type", F.expr("unix_timestamp(ts) div 86400").alias("d")
+    )
+    x = e.groupBy("event_type", "d").agg(
+        F.count(F.lit(1)).cast("bigint").alias("c")
+    )
+    n = (
+        x.select("d")
+        .distinct()
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+    )
+    on_spine = F.col("event_type").isNotNull() & F.col("d").isNotNull()
+    c = F.when(on_spine, F.col("c")).otherwise(F.lit(0))
+    return (
+        x.groupBy("event_type")
+        .agg(
+            F.sum(c).cast("bigint").alias("s"),
+            F.sum(c * c).cast("bigint").alias("q"),
+        )
+        .crossJoin(n)  # one row: a global aggregate
+        .select("event_type", "n", "s", "q")
+    )
+
+
 @register(
     "count_overdispersion",
     oracle=f"""
@@ -590,37 +622,16 @@ def count_overdispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
     under-alarm and a negative-binomial model is due. The one-table
     answer to 'can I trust my rate alerts?'.
 
-    Exactness: zero-days enter via the day-spine cross join (types ×
-    distinct days — tiny); moments are exact BIGINTs, the dispersion
+    Exactness: zero-days count in n and add nothing to the sums (see
+    ``_daily_moments``); moments are exact BIGINTs, the dispersion
     the cleared-form (n·q − s²)·1e6 // ((n−1)·s) in
     DECIMAL(38,0)/HUGEINT (n·q outgrows BIGINT at 10⁹-event days),
     and the overdispersion verdict is the EXACT integer inequality
     n·q − s² > (n−1)·s — never a float.
 
     Scale shape: one map-side-combinable (type, day) count, a
-    spine-sized fill, a |types|-row moment rollup."""
-    e = load_table(spark, sf_dir, "events").select(
-        "event_type", F.expr("unix_timestamp(ts) div 86400").alias("d")
-    )
-    days = e.select("d").distinct()
-    types = e.select("event_type").distinct()
-    x = e.groupBy("event_type", "d").agg(
-        F.count(F.lit(1)).cast("bigint").alias("c")
-    )
-    c = (
-        types.crossJoin(days)
-        .join(x, ["event_type", "d"], "left")
-        .select(
-            "event_type",
-            "d",
-            F.coalesce(F.col("c"), F.lit(0)).cast("bigint").alias("c"),
-        )
-    )
-    m = c.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("c").cast("bigint").alias("s"),
-        F.sum(F.col("c") * F.col("c")).cast("bigint").alias("q"),
-    )
+    |types|-row moment rollup."""
+    m = _daily_moments(spark, sf_dir)
     return m.select(
         "event_type",
         F.col("n").alias("n_days"),
@@ -798,35 +809,15 @@ def negbin_moment_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     variance does not exceed the mean emit NULLs — Poisson is fine
     there, and the NULL is the verdict.
 
-    Exactness: same zero-filled day spine and exact moments as
+    Exactness: same zero-filled daily series and exact moments as
     count_overdispersion; r ships as an exact
     HUGEINT/DECIMAL(38,0) num/den PAIR — r = s²(n−1) / (n·(vnum −
     vden)) with vnum = n·q − s², vden = (n−1)·s, all integer — and
     p = vden/vnum as a truncating micro ratio. No floats.
 
     Scale shape: identical to count_overdispersion (one counts pass,
-    spine fill, |types|-row rollup)."""
-    e = load_table(spark, sf_dir, "events").select(
-        "event_type", F.expr("unix_timestamp(ts) div 86400").alias("d")
-    )
-    days = e.select("d").distinct()
-    types = e.select("event_type").distinct()
-    x = e.groupBy("event_type", "d").agg(
-        F.count(F.lit(1)).cast("bigint").alias("c")
-    )
-    c = (
-        types.crossJoin(days)
-        .join(x, ["event_type", "d"], "left")
-        .select(
-            "event_type",
-            F.coalesce(F.col("c"), F.lit(0)).cast("bigint").alias("c"),
-        )
-    )
-    m = c.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("c").cast("bigint").alias("s"),
-        F.sum(F.col("c") * F.col("c")).cast("bigint").alias("q"),
-    )
+    |types|-row rollup)."""
+    m = _daily_moments(spark, sf_dir)
     f = m.select(
         "event_type",
         "n",

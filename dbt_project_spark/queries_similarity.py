@@ -12,8 +12,11 @@ from dbt_project_spark.catalog import register
 from dbt_project_spark.operators.joins import at_most
 from dbt_project_spark.operators.similarity import (
     LSH_W,
+    ann_corpus,
+    ann_queries,
     bruteforce_topk,
     hyperplane_lsh_topk,
+    recall_at_k,
 )
 from dbt_project_spark.sources import load_table
 
@@ -48,11 +51,7 @@ _COS_FLAT = """
 def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-10 for the 5 query vectors."""
     e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < NQUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-    c = e.select(F.col("vec_id").alias("neighbor_id"), "embedding")
-    return bruteforce_topk(q, c, TOPK)
+    return bruteforce_topk(ann_queries(e, NQUERIES), ann_corpus(e), TOPK)
 
 
 def _lsh_bucket_sql(vec: str) -> str:
@@ -85,11 +84,8 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle: shared literal hyperplanes, sign-bit bucket, score
     within bucket only)."""
     e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < NQUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-    c = e.select(F.col("vec_id").alias("neighbor_id"), "embedding")
-    return hyperplane_lsh_topk(at_most(q, NQUERIES), c, TOPK)  # vec_id: key
+    q = at_most(ann_queries(e, NQUERIES), NQUERIES)  # vec_id: key
+    return hyperplane_lsh_topk(q, ann_corpus(e), TOPK)
 
 
 def _cos_ranked_sql(pairs: str, suffix: str, k: int) -> str:
@@ -155,30 +151,9 @@ def ann_recall_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     index-drift monitor.
     """
     e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < NQUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-    c = e.select(F.col("vec_id").alias("neighbor_id"), "embedding")
-    bf = bruteforce_topk(q, c, TOPK).select("query_id", "neighbor_id")
-    lsh = hyperplane_lsh_topk(at_most(q, NQUERIES), c, TOPK).select(
-        F.col("query_id").alias("lq"), F.col("neighbor_id").alias("ln")
-    )
-    m = (
-        bf.join(
-            lsh,
-            (F.col("lq") == F.col("query_id"))
-            & (F.col("ln") == F.col("neighbor_id")),
-            "left",
-        )
-        .groupBy("query_id")
-        .agg(F.count("ln").cast("bigint").alias("n_matched"))
-    )
-    return m.select(
-        "query_id",
-        F.lit(TOPK).cast("bigint").alias("k"),
-        "n_matched",
-        F.round(F.col("n_matched") * 1.0 / TOPK, 6).alias("recall"),
-    )
+    q, c = ann_queries(e, NQUERIES), ann_corpus(e)
+    lsh = hyperplane_lsh_topk(at_most(q, NQUERIES), c, TOPK)
+    return recall_at_k(bruteforce_topk(q, c, TOPK), lsh, TOPK)
 
 
 # ---------------------------------------------------------------------------
@@ -292,33 +267,11 @@ def ann_recall_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     wq = Window.partitionBy("query_id").orderBy(
         F.desc("d"), F.asc("neighbor_id")
     )
-    top_q = (
-        idot.withColumn("rank", F.row_number().over(wq))
-        .filter(F.col("rank") <= TOPK)
-        .select("query_id", "neighbor_id")
+    top_q = idot.withColumn("rank", F.row_number().over(wq)).filter(
+        F.col("rank") <= TOPK
     )
-    q = e.filter(F.col("vec_id") < NQUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-    c = e.select(F.col("vec_id").alias("neighbor_id"), "embedding")
-    top_bf = bruteforce_topk(q, c, TOPK).select("query_id", "neighbor_id")
-    m = (
-        top_bf.join(
-            top_q.withColumnRenamed("neighbor_id", "nq"),
-            (top_bf.query_id == top_q.query_id)
-            & (top_bf.neighbor_id == F.col("nq")),
-            "left",
-        )
-        .drop(top_q.query_id)
-        .groupBy("query_id")
-        .agg(F.count("nq").cast("bigint").alias("n_matched"))
-    )
-    return m.select(
-        "query_id",
-        F.lit(TOPK).cast("bigint").alias("k"),
-        "n_matched",
-        F.round(F.col("n_matched") * 1.0 / TOPK, 6).alias("recall"),
-    )
+    top_bf = bruteforce_topk(ann_queries(e, NQUERIES), ann_corpus(e), TOPK)
+    return recall_at_k(top_bf, top_q, TOPK)
 
 
 # ---------------------------------------------------------------------------
@@ -373,38 +326,12 @@ def ann_recall_truncated_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a projection inside codegen.
     """
     e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < NQUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-    c = e.select(F.col("vec_id").alias("neighbor_id"), "embedding")
-    top_bf = bruteforce_topk(q, c, TOPK).select("query_id", "neighbor_id")
+    top_bf = bruteforce_topk(ann_queries(e, NQUERIES), ann_corpus(e), TOPK)
     tr = e.select(
         "vec_id", F.slice("embedding", 1, TRUNC_DIMS).alias("embedding")
     )
-    qt = tr.filter(F.col("vec_id") < NQUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-    ct = tr.select(F.col("vec_id").alias("neighbor_id"), "embedding")
-    top_tr = bruteforce_topk(qt, ct, TOPK).select(
-        "query_id", F.col("neighbor_id").alias("nt")
-    )
-    m = (
-        top_bf.join(
-            top_tr,
-            (top_bf.query_id == top_tr.query_id)
-            & (top_bf.neighbor_id == F.col("nt")),
-            "left",
-        )
-        .drop(top_tr.query_id)
-        .groupBy("query_id")
-        .agg(F.count("nt").cast("bigint").alias("n_matched"))
-    )
-    return m.select(
-        "query_id",
-        F.lit(TOPK).cast("bigint").alias("k"),
-        "n_matched",
-        F.round(F.col("n_matched") * 1.0 / TOPK, 6).alias("recall"),
-    )
+    top_tr = bruteforce_topk(ann_queries(tr, NQUERIES), ann_corpus(tr), TOPK)
+    return recall_at_k(top_bf, top_tr, TOPK)
 
 
 # ---------------------------------------------------------------------------

@@ -25,7 +25,6 @@ import os
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import Window
 
 from dbt_project_spark.caching import scratch_dir
 from dbt_project_spark.catalog import register
@@ -101,29 +100,6 @@ def _parity_summary(
     )
 
 
-def _serve_ann_batch(spark: SparkSession, sf_dir: str, qdf: DataFrame) -> DataFrame:
-    """Batch serving of an arbitrary query-vector set against the
-    persisted IVF index — ann_ivf_topk's dataflow parameterized by the
-    streamed micro-batch (queries_vectors.py ann_ivf_topk)."""
-    from dbt_project_spark.functions.expressions import cosine_similarity
-    from dbt_project_spark.operators.ivf import load_ivf_index, probe_cells
-
-    cent, cells, _k, nprobe = load_ivf_index(spark, sf_dir)
-    probes = probe_cells(qdf, cent, nprobe)
-    scored = (
-        probes.join(cells, on="cid")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("cosine", F.round(cosine_similarity("qe", "embedding"), 6))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "cosine")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= _TOPK)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
 @register(
     "serving_parity_ann",
     oracle=f"""
@@ -142,11 +118,19 @@ def serving_parity_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     index must return row-for-row the batch serving path's top-k, and
     every query must yield exactly k rows. Parity:
     comparision.sql:65-79 applied to spark_streaming_new.py's
-    stream-serving topology."""
+    stream-serving topology. The index is opened once, here; both
+    paths serve from it with ``ivf_search`` (ann_ivf_topk's
+    dataflow)."""
+    from dbt_project_spark.operators.ivf import ivf_search, load_ivf_index
+    from dbt_project_spark.operators.similarity import ann_queries
+
     e = load_table(spark, sf_dir, "embeddings")
-    queries = e.filter(F.col("vec_id") < _N_ANN_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
+    cent, cells, meta = load_ivf_index(spark, sf_dir, e)
+
+    def _serve(qdf: DataFrame) -> DataFrame:
+        return ivf_search(qdf, cent, cells, meta["nprobe"], _TOPK)
+
+    queries = ann_queries(e, _N_ANN_QUERIES)
     half = _N_ANN_QUERIES // 2
     streamed = _run_file_stream(
         spark,
@@ -154,11 +138,11 @@ def serving_parity_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             queries.filter(F.col("query_id") < half),
             queries.filter(F.col("query_id") >= half),
         ],
-        lambda b: _serve_ann_batch(b.sparkSession, sf_dir, b),
+        _serve,
         queries.schema,
         scratch_dir("parity_ann_"),
     )
-    batch = _serve_ann_batch(spark, sf_dir, queries)
+    batch = _serve(queries)
     return _parity_summary(
         spark, "ann_ivf_online", streamed, batch, queries.count()
     )
@@ -182,7 +166,9 @@ def serving_parity_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     the train split) must produce exactly one prediction per doc,
     identical to the batch scoring path. Parity: comparision.sql:65-79
     applied to the train-offline/score-online topology
-    (spark_streaming_new.py:142-249)."""
+    (spark_streaming_new.py:142-249). The model is trained once, here,
+    and every micro-batch scores against it."""
+    from dbt_project_spark.caching import persist_tracked
     from dbt_project_spark.queries_training import (
         NB_TEST_MOD,
         _nb_model,
@@ -195,6 +181,8 @@ def serving_parity_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     incoming = docs.filter(F.col("doc_id") % NB_TEST_MOD == 0)
     bt, lam, prior, nc = _nb_model(spark, sf_dir)
+    # the batch path and every micro-batch score against these
+    lam, prior, nc = (persist_tracked(t) for t in (lam, prior, nc))
     batch = _nb_predict(
         bt.filter(F.col("doc_id") % NB_TEST_MOD == 0), lam, prior, nc
     )
@@ -203,9 +191,7 @@ def serving_parity_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).collect()[0][0]
 
     def _serve(batch_df: DataFrame) -> DataFrame:
-        ss = batch_df.sparkSession
-        _bt, blam, bprior, bnc = _nb_model(ss, sf_dir)
-        return _nb_predict(nb_bucketize(batch_df), blam, bprior, bnc)
+        return _nb_predict(nb_bucketize(batch_df), lam, prior, nc)
 
     streamed = _run_file_stream(
         spark,

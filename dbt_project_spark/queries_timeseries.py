@@ -1012,13 +1012,19 @@ def mk_trend_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dbt_project_spark.caching import persist_tracked
 
     s = persist_tracked(s)
+    # counted: a filled cache carries its measured size, so the planner
+    # broadcasts the days side of the pair join (a range join, which
+    # can only broadcast or rescan)
+    s.count()
     a = s.select(F.col("d").alias("da"), F.col("x").alias("xa"))
     b = s.select(F.col("d").alias("db"), F.col("x").alias("xb"))
     p = a.join(b, F.col("db") > F.col("da")).select(
         (F.col("db") - F.col("da")).alias("dd"),
         (F.col("xb") - F.col("xa")).alias("dx"),
     )
-    p = persist_tracked(p)
+    # one aggregate over the pairs: a percentile's partial buffer is
+    # sized by its input, and a cross join against that side alone
+    # plans a CartesianProduct once measured
     mk = p.agg(
         F.sum(
             F.when(F.col("dx") > 0, 1).when(F.col("dx") < 0, -1).otherwise(0)
@@ -1026,6 +1032,11 @@ def mk_trend_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("s_stat"),
         F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
+        F.expr(
+            "CAST(round(percentile(2 * CASE WHEN dx < 0"
+            " THEN -(abs(dx) * 1000000 div dd)"
+            " ELSE dx * 1000000 div dd END, 0.5)) AS BIGINT)"
+        ).alias("med2"),
     )
     ties = (
         s.groupBy("x")
@@ -1043,18 +1054,9 @@ def mk_trend_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     nn = s.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    sen = p.select(
-        F.expr(
-            "CASE WHEN dx < 0 THEN -(abs(dx) * 1000000 div dd)"
-            " ELSE dx * 1000000 div dd END"
-        ).alias("sl")
-    ).agg(
-        F.expr("CAST(round(percentile(2 * sl, 0.5)) AS BIGINT)").alias("med2")
-    )
     return (
-        nn.crossJoin(mk)
+        mk.crossJoin(nn)
         .crossJoin(ties)
-        .crossJoin(sen)
         .select(
             F.col("n").alias("n_days"),
             "n_pairs",

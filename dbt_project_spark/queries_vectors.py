@@ -15,8 +15,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dbt_project_spark.catalog import register
-from dbt_project_spark.functions.expressions import cosine_similarity, l2_norm
+from dbt_project_spark.functions.expressions import l2_norm
 from dbt_project_spark.operators.joins import at_most, broadcast_dim_join
+from dbt_project_spark.operators.similarity import (
+    ann_corpus,
+    ann_queries,
+    bruteforce_topk,
+    recall_at_k,
+)
 from dbt_project_spark.sources import load_table
 
 IVF_TOPK = 5
@@ -192,25 +198,12 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors — the deterministic stand-in the oracle replays;
     ``ivf_train_centroids`` is the k-means trainer for real
     deployments (tests/test_kmeans.py measures the recall win)."""
-    from dbt_project_spark.operators.ivf import load_ivf_index, probe_cells
+    from dbt_project_spark.operators.ivf import ivf_search, load_ivf_index
 
     e = load_table(spark, sf_dir, "embeddings")
-    cent, cells, _k, nprobe = load_ivf_index(spark, sf_dir, e)
-    queries = e.filter(F.col("vec_id") < NQUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-    probes = probe_cells(queries, cent, nprobe)
-    scored = (
-        probes.join(cells, on="cid")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn("cosine", F.round(cosine_similarity("qe", "embedding"), 6))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "cosine")
-    )
-    wr = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(wr).cast("int"))
-        .filter(F.col("rank") <= IVF_TOPK)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    cent, cells, meta = load_ivf_index(spark, sf_dir, e)
+    return ivf_search(
+        ann_queries(e, NQUERIES), cent, cells, meta["nprobe"], IVF_TOPK
     )
 
 
@@ -242,11 +235,7 @@ def ivf_build_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator watches for skewed cells (a hot cell turns every probe
     that hits it into a scan). vid_sum is the exact membership
     checksum so the oracle hash-gates cell CONTENTS, not just sizes."""
-    from dbt_project_spark.operators.ivf import (
-        build_ivf_index,
-        ivf_index_dir,
-        load_ivf_index,
-    )
+    from dbt_project_spark.operators.ivf import build_ivf_index, ivf_index_dir
     import os
 
     e = load_table(spark, sf_dir, "embeddings")
@@ -486,10 +475,13 @@ def pq_train_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # path). The persisted codes carry each winner's exact integer d2
     # (kernel-computed, bit-identical to MIN(key) div KM_KEY_M), so
     # the codebook report is a codes-sized aggregate.
-    from dbt_project_spark.operators.ivf import load_pq_index
+    from dbt_project_spark.operators.ivf import build_ivf_index, load_pq_index
 
     e = load_table(spark, sf_dir, "embeddings")
-    books, codes = load_pq_index(spark, sf_dir, PQ_M, PQ_K, PQ_ITERS, e)
+    coarse = build_ivf_index(spark, sf_dir, e)
+    books, codes, _dim = load_pq_index(
+        spark, sf_dir, coarse, PQ_M, PQ_K, PQ_ITERS, e
+    )
     cell = codes.groupBy("m", "cid").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("d2").cast("bigint").alias("d2_sum"),
@@ -511,6 +503,39 @@ def pq_train_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 PQANN_NQ = 5  # query vectors (vec_id < 5, the similarity-family set)
 PQANN_K = 10
+
+
+def _query_int_vectors(e: DataFrame, nq: int) -> DataFrame:
+    """(qid, iv): the nq query vectors as scaled BIGINTs, persisted —
+    every subspace's LUT reads them."""
+    from dbt_project_spark.caching import persist_tracked
+    from dbt_project_spark.operators.kmeans import int_vectors
+
+    q_iv = int_vectors(e.filter(F.col("vec_id") < nq), "vec_id", "embedding")
+    return persist_tracked(q_iv).select(F.col("vid").alias("qid"), "iv")
+
+
+def _adc_lut(
+    q_iv: DataFrame, books: DataFrame, sub: int, keys: list[str]
+) -> DataFrame:
+    """(*keys, m, cid, ld2): the ADC lookup table — for each row of
+    ``q_iv`` (*keys, iv), each subspace m and each of its codes, the
+    exact integer squared distance from the row's m-th sub-vector
+    (``sub`` wide) to the code's sub-centroid in ``books``."""
+    ld2 = F.aggregate(
+        F.zip_with("iv", "civ", lambda a, b: (a - b) * (a - b)),
+        F.lit(0).cast("bigint"),
+        lambda acc, x: acc + x,
+    )
+    lut = None
+    for m in range(PQ_M):
+        lm = (
+            q_iv.select(*keys, F.slice("iv", m * sub + 1, sub).alias("iv"))
+            .crossJoin(books.filter(F.col("m") == m).select("cid", "civ"))
+            .select(*keys, F.lit(m).alias("m"), "cid", ld2.alias("ld2"))
+        )
+        lut = lm if lut is None else lut.unionByName(lm)
+    return lut
 
 
 def _pq_ann_oracle() -> str:
@@ -572,40 +597,18 @@ def pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     over each query's candidate list. The corpus is scanned for
     encoding once per subspace; nothing is ever queries×corpus×dim.
     """
-    from dbt_project_spark.caching import persist_tracked
-    from dbt_project_spark.operators.kmeans import (
-        assign_clusters,
-        int_vectors,
-        kmeans_fit,
-    )
+    from dbt_project_spark.operators.ivf import build_ivf_index, load_pq_index
 
     e = load_table(spark, sf_dir, "embeddings")
     # codes/codebooks from the persisted PQ index (r05 — trained and
     # encoded once per corpus; identical to the inline chain the
     # oracle replays); only the query LUTs are computed here.
-    from dbt_project_spark.operators.ivf import load_pq_index
-
-    books, codes = load_pq_index(spark, sf_dir, PQ_M, PQ_K, PQ_ITERS, e)
-    dim = e.select(F.min(F.size("embedding")).alias("d")).first()["d"]
-    sub = dim // PQ_M
-    q_iv = persist_tracked(
-        int_vectors(e.filter(F.col("vec_id") < PQANN_NQ), "vec_id", "embedding")
+    coarse = build_ivf_index(spark, sf_dir, e)
+    books, codes, dim = load_pq_index(
+        spark, sf_dir, coarse, PQ_M, PQ_K, PQ_ITERS, e
     )
-    ld2 = F.aggregate(
-        F.zip_with("iv", "civ", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-    lut = None
-    for m in range(PQ_M):
-        q_sub = q_iv.select(
-            F.col("vid").alias("qid"),
-            F.slice("iv", m * sub + 1, sub).alias("iv"),
-        )
-        lm = q_sub.crossJoin(
-            books.filter(F.col("m") == m).select("cid", "civ")
-        ).select("qid", F.lit(m).alias("m"), "cid", ld2.alias("ld2"))
-        lut = lm if lut is None else lut.unionByName(lm)
+    q_iv = _query_int_vectors(e, PQANN_NQ)
+    lut = _adc_lut(q_iv, books, dim // PQ_M, ["qid"])
     parts = codes.join(lut, on=["m", "cid"]).select(
         "qid", "vid", "ld2"
     )
@@ -697,14 +700,12 @@ def _ivfpq_adc(spark: SparkSession, sf_dir: str, nq: int) -> DataFrame:
         load_pq_index,
         probe_cells,
     )
-    from dbt_project_spark.operators.kmeans import int_vectors
 
     e = load_table(spark, sf_dir, "embeddings")
-    ccent, cells, _k, nprobe = load_ivf_index(spark, sf_dir, e)
-    queries = e.filter(F.col("vec_id") < nq).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-    probes = probe_cells(queries, ccent, nprobe).select("query_id", "cid")
+    ccent, cells, coarse = load_ivf_index(spark, sf_dir, e)
+    probes = probe_cells(
+        ann_queries(e, nq), ccent, coarse["nprobe"]
+    ).select("query_id", "cid")
     # counted: a filled cache carries its measured size, so the planner
     # broadcasts the nq·nprobe·n/K candidates onto the codes while small
     cand = persist_tracked(
@@ -716,29 +717,15 @@ def _ivfpq_adc(spark: SparkSession, sf_dir: str, nq: int) -> DataFrame:
     # PQ codebooks + corpus codes come from the PERSISTED index (one
     # training/encoding pass per corpus — operators/ivf.build_pq_index;
     # bit-identical to inline training, which is what the oracle
-    # replays). Only the queries' LUTs are computed here.
-    books, codes = load_pq_index(spark, sf_dir, PQ_M, PQ_K, PQ_ITERS, e)
-    dim = e.select(F.min(F.size("embedding")).alias("d")).first()["d"]
-    sub = dim // PQ_M
-    q_iv = persist_tracked(
-        int_vectors(e.filter(F.col("vec_id") < nq), "vec_id", "embedding")
+    # replays). Only the queries' LUTs are computed here; the coarse
+    # meta from load_ivf_index spares a second staleness scan.
+    books, codes, dim = load_pq_index(
+        spark, sf_dir, coarse, PQ_M, PQ_K, PQ_ITERS, e
     )
-    ld2 = F.aggregate(
-        F.zip_with("iv", "civ", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
+    lut = at_most(  # per query, subspace and code
+        _adc_lut(_query_int_vectors(e, nq), books, dim // PQ_M, ["qid"]),
+        nq * PQ_M * PQ_K,
     )
-    lut = None
-    for m in range(PQ_M):
-        q_sub = q_iv.select(
-            F.col("vid").alias("qid"),
-            F.slice("iv", m * sub + 1, sub).alias("iv"),
-        )
-        lm = q_sub.crossJoin(
-            books.filter(F.col("m") == m).select("cid", "civ")
-        ).select("qid", F.lit(m).alias("m"), "cid", ld2.alias("ld2"))
-        lut = lm if lut is None else lut.unionByName(lm)
-    lut = at_most(lut, nq * PQ_M * PQ_K)  # per query, subspace and code
     parts = (
         codes.join(cand, on="vid")
         .join(lut, on=["qid", "m", "cid"])
@@ -832,39 +819,9 @@ def ann_recall_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     (queries×corpus — the sampled-query correctness anchor, exactly
     how you'd run it over 100 TB), the IVF-PQ side is
     ann_ivfpq_topk's dataflow verbatim."""
-    from dbt_project_spark.operators.similarity import bruteforce_topk
-
     e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < PQANN_NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-    c = e.select(F.col("vec_id").alias("neighbor_id"), "embedding")
-    bf = bruteforce_topk(q, c, PQANN_K).select("query_id", "neighbor_id")
-    adc = _ivfpq_adc(spark, sf_dir, PQANN_NQ)
-    w = Window.partitionBy("query_id").orderBy(F.asc("ad2"), F.asc("neighbor_id"))
-    ivfpq = (
-        adc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= PQANN_K)
-        .select(
-            F.col("query_id").alias("iq"), F.col("neighbor_id").alias("in_")
-        )
-    )
-    m = (
-        bf.join(
-            ivfpq,
-            (F.col("iq") == F.col("query_id"))
-            & (F.col("in_") == F.col("neighbor_id")),
-            "left",
-        )
-        .groupBy("query_id")
-        .agg(F.count("in_").cast("bigint").alias("n_matched"))
-    )
-    return m.select(
-        "query_id",
-        F.lit(PQANN_K).cast("bigint").alias("k"),
-        "n_matched",
-        F.round(F.col("n_matched") * 1.0 / PQANN_K, 6).alias("recall"),
-    )
+    bf = bruteforce_topk(ann_queries(e, PQANN_NQ), ann_corpus(e), PQANN_K)
+    return recall_at_k(bf, ann_ivfpq_topk(spark, sf_dir), PQANN_K)
 
 
 # ---------------------------------------------------------------------------
@@ -1058,7 +1015,7 @@ def _rpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dbt_project_spark.operators.kmeans import KM_SCALE
 
     e = load_table(spark, sf_dir, "embeddings")
-    ccent, cells, _k, nprobe = load_ivf_index(spark, sf_dir, e)
+    ccent, cells, coarse = load_ivf_index(spark, sf_dir, e)
     to_int = lambda col: F.transform(
         col, lambda x: F.round(x.cast("double") * KM_SCALE).cast("bigint")
     )
@@ -1066,16 +1023,11 @@ def _rpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # residual PQ codebooks + corpus codes from the PERSISTED index
     # (trained/encoded once per corpus on v − centroid(cell(v)) by
     # build_pq_index(residual=True) — bit-identical to inline).
-    books, codes = load_pq_index(
-        spark, sf_dir, PQ_M, PQ_K, PQ_ITERS, e, residual=True
+    books, codes, dim = load_pq_index(
+        spark, sf_dir, coarse, PQ_M, PQ_K, PQ_ITERS, e, residual=True
     )
-    dim = e.select(F.min(F.size("embedding")).alias("d")).first()["d"]
-    sub = dim // PQ_M
-
-    queries = e.filter(F.col("vec_id") < PQANN_NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-    probes = probe_cells(queries, ccent, nprobe)
+    nprobe = coarse["nprobe"]
+    probes = probe_cells(ann_queries(e, PQANN_NQ), ccent, nprobe)
     qres = persist_tracked(
         probes.join(
             centi.select(F.col("cid"), F.col("civ")),
@@ -1098,24 +1050,10 @@ def _rpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     cand.count()
-    parts = None
-    ld2 = F.aggregate(
-        F.zip_with("iv", "civ", lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
+    lut = at_most(
+        _adc_lut(qres, books, dim // PQ_M, ["query_id", "cell"]),
+        PQANN_NQ * nprobe * PQ_M * PQ_K,
     )
-    lut = None
-    for m in range(PQ_M):
-        q_sub = qres.select(
-            "query_id", "cell", F.slice("iv", m * sub + 1, sub).alias("iv")
-        )
-        lm = q_sub.crossJoin(
-            books.filter(F.col("m") == m).select("cid", "civ")
-        ).select(
-            "query_id", "cell", F.lit(m).alias("m"), "cid", ld2.alias("ld2")
-        )
-        lut = lm if lut is None else lut.unionByName(lm)
-    lut = at_most(lut, PQANN_NQ * nprobe * PQ_M * PQ_K)
     parts = (
         codes.join(cand, on="vid")
         .join(lut, on=["query_id", "cell", "m", "cid"])
@@ -1151,39 +1089,9 @@ def ann_recall_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     reason FAISS defaults to IVFADC). Same shape as the rest of the
     recall-monitor family; deterministic end-to-end, so the
     comparison itself hash-gates."""
-    from dbt_project_spark.operators.similarity import bruteforce_topk
-
     e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < PQANN_NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-    c = e.select(F.col("vec_id").alias("neighbor_id"), "embedding")
-    bf = bruteforce_topk(q, c, PQANN_K).select("query_id", "neighbor_id")
-    adc = _rpq_adc(spark, sf_dir)
-    w = Window.partitionBy("query_id").orderBy(F.asc("ad2"), F.asc("vid"))
-    ivfpq = (
-        adc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= PQANN_K)
-        .select(
-            F.col("query_id").alias("iq"), F.col("vid").alias("in_")
-        )
-    )
-    m = (
-        bf.join(
-            ivfpq,
-            (F.col("iq") == F.col("query_id"))
-            & (F.col("in_") == F.col("neighbor_id")),
-            "left",
-        )
-        .groupBy("query_id")
-        .agg(F.count("in_").cast("bigint").alias("n_matched"))
-    )
-    return m.select(
-        "query_id",
-        F.lit(PQANN_K).cast("bigint").alias("k"),
-        "n_matched",
-        F.round(F.col("n_matched") * 1.0 / PQANN_K, 6).alias("recall"),
-    )
+    bf = bruteforce_topk(ann_queries(e, PQANN_NQ), ann_corpus(e), PQANN_K)
+    return recall_at_k(bf, ann_ivfpq_residual_topk(spark, sf_dir), PQANN_K)
 
 
 def _ivf_recall_oracle() -> str:
@@ -1239,33 +1147,9 @@ def ann_recall_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator can read exactly WHERE the loss enters the stack.
     Serving side reuses the persisted index verbatim (ann_ivf_topk's
     dataflow)."""
-    from dbt_project_spark.operators.similarity import bruteforce_topk
-
     e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < NQUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-    c = e.select(F.col("vec_id").alias("neighbor_id"), "embedding")
-    bf = bruteforce_topk(q, c, IVF_TOPK).select("query_id", "neighbor_id")
-    ivf = ann_ivf_topk(spark, sf_dir).select(
-        F.col("query_id").alias("iq"), F.col("neighbor_id").alias("in_")
-    )
-    m = (
-        bf.join(
-            ivf,
-            (F.col("iq") == F.col("query_id"))
-            & (F.col("in_") == F.col("neighbor_id")),
-            "left",
-        )
-        .groupBy("query_id")
-        .agg(F.count("in_").cast("bigint").alias("n_matched"))
-    )
-    return m.select(
-        "query_id",
-        F.lit(IVF_TOPK).cast("bigint").alias("k"),
-        "n_matched",
-        F.round(F.col("n_matched") * 1.0 / IVF_TOPK, 6).alias("recall"),
-    )
+    bf = bruteforce_topk(ann_queries(e, NQUERIES), ann_corpus(e), IVF_TOPK)
+    return recall_at_k(bf, ann_ivf_topk(spark, sf_dir), IVF_TOPK)
 
 
 # ---------------------------------------------------------------------------
@@ -1325,7 +1209,8 @@ def ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dbt_project_spark.operators.ivf import load_ivf_index
 
     e = load_table(spark, sf_dir, "embeddings")
-    _cent, cells, k, _np = load_ivf_index(spark, sf_dir, e)
+    _cent, cells, meta = load_ivf_index(spark, sf_dir, e)
+    k = meta["k"]
     sizes = cells.groupBy("cid").agg(F.count(F.lit(1)).alias("sz"))
     g = sizes.agg(
         F.sum("sz").cast("bigint").alias("n"),
@@ -1447,31 +1332,20 @@ def ann_probe_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     once and is shared across settings. Cost is Σp/K of the corpus
     per query batch — the sweep itself is the recall/cost curve.
     """
-    from dbt_project_spark.operators.ivf import load_ivf_index, probe_cells
-    from dbt_project_spark.operators.similarity import bruteforce_topk
+    from dbt_project_spark.operators.ivf import ivf_search, load_ivf_index
 
     e = load_table(spark, sf_dir, "embeddings")
-    cent, cells, k, np_ = load_ivf_index(spark, sf_dir, e)
+    cent, cells, meta = load_ivf_index(spark, sf_dir, e)
+    k, np_ = meta["k"], meta["nprobe"]
     settings = sorted({1, max(np_ // 2, 1), np_, min(2 * np_, k)})
-    queries = e.filter(F.col("vec_id") < NQUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
+    queries = ann_queries(e, NQUERIES)
+    bf = bruteforce_topk(queries, ann_corpus(e), IVF_TOPK).select(
+        "query_id", "neighbor_id"
     )
-    c = e.select(F.col("vec_id").alias("neighbor_id"), "embedding")
-    bf = bruteforce_topk(queries, c, IVF_TOPK).select("query_id", "neighbor_id")
-    wr = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
     parts = []
     for p in settings:
-        probes = probe_cells(queries, cent, p)
-        topk = (
-            probes.join(cells, on="cid")
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .withColumn(
-                "cosine", F.round(cosine_similarity("qe", "embedding"), 6)
-            )
-            .select("query_id", F.col("vec_id").alias("neighbor_id"), "cosine")
-            .withColumn("rank", F.row_number().over(wr))
-            .filter(F.col("rank") <= IVF_TOPK)
-            .select("query_id", "neighbor_id")
+        topk = ivf_search(queries, cent, cells, p, IVF_TOPK).select(
+            "query_id", "neighbor_id"
         )
         nm = topk.join(bf, on=["query_id", "neighbor_id"]).agg(
             F.count(F.lit(1)).cast("bigint").alias("nm")
@@ -1665,14 +1539,10 @@ def ann_ivfpq_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dbt_project_spark.functions.expressions import cosine_similarity
 
     e = load_table(spark, sf_dir, "embeddings")
-    q = e.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe"))
-    c = e.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ce")
-    )
     rc = (
-        at_most(short.join(q, "query_id"), bound)
-        .join(c, "neighbor_id")
-        .withColumn("cosine", F.round(cosine_similarity("qe", "ce"), 6))
+        at_most(short.join(ann_queries(e, PQANN_NQ), "query_id"), bound)
+        .join(ann_corpus(e), "neighbor_id")
+        .withColumn("cosine", F.round(cosine_similarity("qe", "embedding"), 6))
     )
     w2 = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.asc("neighbor_id")
@@ -1718,33 +1588,9 @@ def ann_recall_ivfpq_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     much recall the 4·k exact re-rank buys back. Within the probed
     cells the refine ceiling is the coarse-probe recall itself — any
     remaining gap is pure shortlist truncation."""
-    from dbt_project_spark.operators.similarity import bruteforce_topk
-
     e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < PQANN_NQ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-    c = e.select(F.col("vec_id").alias("neighbor_id"), "embedding")
-    bf = bruteforce_topk(q, c, PQANN_K).select("query_id", "neighbor_id")
-    ref = ann_ivfpq_refine(spark, sf_dir).select(
-        F.col("query_id").alias("iq"), F.col("neighbor_id").alias("in_")
-    )
-    m = (
-        bf.join(
-            ref,
-            (F.col("iq") == F.col("query_id"))
-            & (F.col("in_") == F.col("neighbor_id")),
-            "left",
-        )
-        .groupBy("query_id")
-        .agg(F.count("in_").cast("bigint").alias("n_matched"))
-    )
-    return m.select(
-        "query_id",
-        F.lit(PQANN_K).cast("bigint").alias("k"),
-        "n_matched",
-        F.round(F.col("n_matched") * 1.0 / PQANN_K, 6).alias("recall"),
-    )
+    bf = bruteforce_topk(ann_queries(e, PQANN_NQ), ann_corpus(e), PQANN_K)
+    return recall_at_k(bf, ann_ivfpq_refine(spark, sf_dir), PQANN_K)
 
 
 # ---------------------------------------------------------------------------

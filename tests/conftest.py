@@ -60,6 +60,31 @@ def _release_tracked_caches():
     reclaim_jvm()
 
 
+@pytest.fixture(scope="module", autouse=True)
+def _no_leaked_ivf_index(tmp_path_factory):
+    """The persisted IVF index is keyed by its data dir's full path and
+    outlives the process, so a test that builds one over a temp data
+    dir must delete it (``shutil.rmtree(ivf_index_dir(d))``), or every
+    session leaves one more under ``tempfile.gettempdir()``. After each
+    module, fail on (and delete) any index whose data dir is in this
+    session's temp tree."""
+    yield
+    import os
+    import shutil
+
+    from dbt_project_spark.operators.ivf import ivf_index_dir
+
+    leaked = []
+    for root, dirs, files in os.walk(tmp_path_factory.getbasetemp()):
+        if "embeddings.parquet" in dirs + files:
+            d = ivf_index_dir(root)
+            if os.path.isdir(d):
+                leaked.append(root)
+                shutil.rmtree(d, ignore_errors=True)
+        dirs[:] = [x for x in dirs if not x.endswith(".parquet")]
+    assert not leaked, f"IVF index left behind for {leaked}"
+
+
 def plan_string(df) -> str:
     """Formatted physical plan at an 8 MiB render cap (shared by the
     plan-property test files — ADVICE r10 deduplicated four identical

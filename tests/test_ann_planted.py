@@ -18,10 +18,12 @@ TRUNC_DIMS=32 dims, so dimension truncation is lossless here.
 """
 
 import os
+import shutil
 
 import pytest
 
 from dbt_project_spark.catalog import QUERIES, load_all
+from dbt_project_spark.operators.ivf import ivf_index_dir
 
 load_all()
 
@@ -47,7 +49,8 @@ def ann_dir(spark, tmp_path_factory):
         rows, "vec_id bigint, embedding array<float>, label int"
     )
     df.coalesce(1).write.parquet(os.path.join(d, "embeddings.parquet"))
-    return d
+    yield d
+    shutil.rmtree(ivf_index_dir(d), ignore_errors=True)
 
 
 def _mates(q: int, k: int) -> list[int]:
@@ -166,3 +169,50 @@ def test_ivf_train_centroids_planted(spark, ann_dir):
     assert len(rows) == 16
     assert sum(r["n_members"] for r in rows) == N
     assert all(r["c_sum"] == KM_SCALE for r in rows)
+
+
+def test_recall_at_k_planted(spark):
+    """recall_at_k counts, per query of the exact list, the pairs the
+    approximate list shares: a full match, a partial one, and a query
+    the approximate list lacks (0 matched, still reported)."""
+    from dbt_project_spark.operators.similarity import recall_at_k
+
+    exact = spark.createDataFrame(
+        [(q, q * 3 + j) for q in range(3) for j in (1, 2, 3)],
+        "query_id bigint, neighbor_id bigint",
+    )
+    approx = spark.createDataFrame(
+        # query 0: all 3; query 1: 1 of 3 plus a miss; query 2: absent;
+        # query 3 is not an exact query and adds no row
+        [(0, 3), (0, 1), (0, 2), (1, 5), (1, 9), (3, 1)],
+        "query_id bigint, neighbor_id bigint",
+    )
+    out = recall_at_k(exact, approx, 3)
+    assert out.dtypes == [
+        ("query_id", "bigint"),
+        ("k", "bigint"),
+        ("n_matched", "bigint"),
+        ("recall", "double"),
+    ]
+    got = sorted(tuple(r) for r in out.collect())
+    assert got == [(0, 3, 3, 1.0), (1, 3, 1, 0.333333), (2, 3, 0, 0.0)]
+
+
+def test_warm_ivfpq_checks_the_coarse_index_once(spark, ann_dir, monkeypatch):
+    """A warm IVF-PQ query checks its coarse index for staleness (a
+    corpus fingerprint scan) once: the PQ layer takes the coarse meta
+    the query already loaded instead of scanning again."""
+    from dbt_project_spark.operators import ivf
+
+    QUERIES["ann_ivfpq_topk"](spark, ann_dir).collect()  # warm both layers
+    calls = []
+    real = ivf.build_ivf_index
+
+    def spy(*args, **kwargs):
+        calls.append(args[1])
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(ivf, "build_ivf_index", spy)
+    df = QUERIES["ann_ivfpq_topk"](spark, ann_dir)
+    assert calls == [ann_dir]
+    _assert_topk_is_lowest_mates(df, 10, score=("ad2", 0))

@@ -40,7 +40,9 @@ def test_ivf_index_build_serve_and_staleness(spark, tmp_path):
     meta = build_ivf_index(spark, sf_dir, e)
     assert meta["k"] == 16 and meta["nprobe"] == 2  # min clamps at n=64
 
-    cent, cells, k, nprobe = load_ivf_index(spark, sf_dir, e)
+    cent, cells, meta_l = load_ivf_index(spark, sf_dir, e)
+    assert meta_l == meta
+    k = meta["k"]
     assert cent.count() == k == 16
     # every corpus vector sits in exactly one inverted list, with its
     # embedding stored inside the list (no corpus join at serve time)
@@ -67,7 +69,7 @@ def test_ivf_index_build_serve_and_staleness(spark, tmp_path):
     meta2 = build_ivf_index(spark, sf_dir, e2)
     assert meta2["fp"] != meta["fp"]
     # rebuilt lists reflect the NEW corpus
-    _, cells2, _, _ = load_ivf_index(spark, sf_dir, e2)
+    _, cells2, _ = load_ivf_index(spark, sf_dir, e2)
     new = {
         (r["vec_id"], r["cid"]) for r in cells2.select("vec_id", "cid").collect()
     }
@@ -99,12 +101,13 @@ def test_pq_index_staleness_follows_corpus(spark, tmp_path):
     _write_corpus(spark, sf_dir, seed=5)
     shutil.rmtree(ivf_index_dir(sf_dir), ignore_errors=True)
     e = _embeddings(spark, sf_dir)
-    m1 = build_pq_index(spark, sf_dir, pq_m=2, pq_k=4, pq_iters=1, e=e)
+    coarse = build_ivf_index(spark, sf_dir, e)
+    m1 = build_pq_index(spark, sf_dir, coarse, 2, 4, 1, e=e)
     d = os.path.join(ivf_index_dir(sf_dir), "pq_raw")
     mpath = os.path.join(d, "_META.json")
     mtime = os.path.getmtime(mpath)
     # warm: same meta -> skip
-    assert build_pq_index(spark, sf_dir, pq_m=2, pq_k=4, pq_iters=1, e=e) == m1
+    assert build_pq_index(spark, sf_dir, coarse, 2, 4, 1, e=e) == m1
     assert os.path.getmtime(mpath) == mtime
     codes1 = {
         (r["vid"], r["m"], r["cid"])
@@ -116,18 +119,82 @@ def test_pq_index_staleness_follows_corpus(spark, tmp_path):
     # same count, new content -> fingerprint differs -> rebuild
     _write_corpus(spark, sf_dir, seed=6)
     e2 = _embeddings(spark, sf_dir)
-    m2 = build_pq_index(spark, sf_dir, pq_m=2, pq_k=4, pq_iters=1, e=e2)
+    coarse2 = build_ivf_index(spark, sf_dir, e2)
+    m2 = build_pq_index(spark, sf_dir, coarse2, 2, 4, 1, e=e2)
     assert m2["fp"] != m1["fp"]
     with open(mpath) as fh:
         assert json.load(fh) == m2
     # residual variant builds independently and encodes every vector
-    mr = build_pq_index(
-        spark, sf_dir, pq_m=2, pq_k=4, pq_iters=1, e=e2, residual=True
-    )
+    mr = build_pq_index(spark, sf_dir, coarse2, 2, 4, 1, e=e2, residual=True)
     assert mr["residual"] is True
     dres = os.path.join(ivf_index_dir(sf_dir), "pq_residual")
     codes_r = spark.read.parquet(os.path.join(dres, "codes.parquet"))
     assert codes_r.select("vid").distinct().count() == N
+    shutil.rmtree(ivf_index_dir(sf_dir), ignore_errors=True)
+
+
+def test_same_basename_dirs_get_their_own_index(spark, tmp_path):
+    """Two data dirs with the same basename, row count and content
+    fingerprint (same first components) but different vectors: each is
+    keyed by its full path, so each serves its own rows."""
+    from dbt_project_spark.catalog import QUERIES, load_all
+
+    load_all()
+    rng = random.Random(3)
+    firsts = [rng.uniform(-1, 1) for _ in range(N)]
+    dirs, corpora = [], []
+    for parent in ("a", "b"):
+        sf_dir = str(tmp_path / parent / "sfsame")
+        rows = [
+            (i, [firsts[i]] + [rng.uniform(-1, 1) for _ in range(7)])
+            for i in range(N)
+        ]
+        spark.createDataFrame(
+            rows, "vec_id bigint, embedding array<double>"
+        ).coalesce(1).write.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+        shutil.rmtree(ivf_index_dir(sf_dir), ignore_errors=True)
+        dirs.append(sf_dir)
+        corpora.append({i: v for i, v in rows})
+    assert ivf_index_dir(dirs[0]) != ivf_index_dir(dirs[1])
+    metas = [build_ivf_index(spark, d, _embeddings(spark, d)) for d in dirs]
+    assert metas[0] == metas[1]  # indistinguishable by their metas
+    for sf_dir, corpus in zip(dirs, corpora):
+        _, cells, _ = load_ivf_index(spark, sf_dir)
+        got = {r["vec_id"]: list(r["embedding"]) for r in cells.collect()}
+        assert got == corpus
+        top = QUERIES["ann_ivf_topk"](spark, sf_dir).collect()
+        assert {r["neighbor_id"] for r in top} <= set(corpus)
+        shutil.rmtree(ivf_index_dir(sf_dir), ignore_errors=True)
+
+
+def test_pq_meta_records_dim_and_old_meta_rebuilds(spark, tmp_path):
+    """The PQ meta carries the slice width's basis, dim; a meta written
+    before it did (no dim, older version) no longer matches, so the
+    next build rebuilds and writes the current one."""
+    import json
+
+    from dbt_project_spark.operators.ivf import (
+        PQ_INDEX_VERSION,
+        build_pq_index,
+        load_pq_index,
+    )
+
+    sf_dir = str(tmp_path / "sfm")
+    _write_corpus(spark, sf_dir, seed=11)
+    shutil.rmtree(ivf_index_dir(sf_dir), ignore_errors=True)
+    e = _embeddings(spark, sf_dir)
+    coarse = build_ivf_index(spark, sf_dir, e)
+    meta = build_pq_index(spark, sf_dir, coarse, 2, 4, 1, e=e)
+    assert meta["dim"] == 8
+    mpath = os.path.join(ivf_index_dir(sf_dir), "pq_raw", "_META.json")
+    old = {k: v for k, v in meta.items() if k != "dim"}
+    old["version"] = PQ_INDEX_VERSION - 1
+    with open(mpath, "w") as fh:
+        json.dump(old, fh)
+    _, _, dim = load_pq_index(spark, sf_dir, coarse, 2, 4, 1, e)
+    assert dim == 8
+    with open(mpath) as fh:
+        assert json.load(fh) == meta
     shutil.rmtree(ivf_index_dir(sf_dir), ignore_errors=True)
 
 

@@ -173,7 +173,10 @@ _SCALED = {"spark.sql.autoBroadcastJoinThreshold": "4096"}
 # cross joins against literal tables (literal_table) and key- or
 # top-k-bounded sides (at_most); the nb_* rows and
 # serving_parity_classifier cross the classes with _nb_model's
-# at-most-NB_B buckets
+# at-most-NB_B buckets; count_overdispersion and negbin_moment_fit
+# cross their per-type moments with the one-row day count,
+# kmv_user_overlap its key-filtered estimates, and mk_trend_sen_slope
+# pairs a counted daily series
 SMALL_SIDE_QUERIES = (
     "slo_burn_rate",
     "vocab_coverage_curve",
@@ -183,6 +186,10 @@ SMALL_SIDE_QUERIES = (
     "nb_margin_calibration",
     "nb_mcc_score",
     "serving_parity_classifier",
+    "count_overdispersion",
+    "negbin_moment_fit",
+    "kmv_user_overlap",
+    "mk_trend_sen_slope",
 )
 
 

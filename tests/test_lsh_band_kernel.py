@@ -47,11 +47,14 @@ def _rows(df):
     )
 
 
-def test_band_kernel_matches_sql_on_random_corpus(spark):
+def test_band_kernel_matches_sql_on_random_corpus(spark, monkeypatch):
     import random
 
+    from dbt_project_spark.operators import similarity
+
     rng = random.Random(17)
-    w = lsh_table_weights(4, 3, dim=8)
+    monkeypatch.setattr(similarity, "LSH_DIM", 8)
+    w = lsh_table_weights(4, 3)
     rows = [
         (i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(300)
     ]
@@ -235,13 +238,14 @@ def test_cell_local_pairs_match_join_exact(spark):
     assert cp.filter(F.col("cid").isNull()).count() == 0
 
 
-def test_cell_local_pairs_hot_cell_block_invariant(spark):
+def test_cell_local_pairs_hot_cell_block_invariant(spark, monkeypatch):
     """r13 skew bound (VERDICT r12 task 4): a hot cell must stream the
     cosine matrix in row blocks — forcing a tiny block budget (many
     blocks per cell) must emit EXACTLY the same candidate set as the
     single-block regime, degenerate members included."""
     import random
 
+    from dbt_project_spark.operators import similarity
     from dbt_project_spark.operators.similarity import (
         cell_local_candidate_pairs,
     )
@@ -269,11 +273,9 @@ def test_cell_local_pairs_hot_cell_block_invariant(spark):
         map(tuple, cell_local_candidate_pairs(mem, 0.9).collect())
     )
     # 8 KiB budget -> ~6-row blocks over the 153-member hot cell
+    monkeypatch.setattr(similarity, "_CELL_PAIR_BLOCK_BYTES", 8 << 10)
     many_blocks = sorted(
-        map(
-            tuple,
-            cell_local_candidate_pairs(mem, 0.9, block_bytes=8 << 10).collect(),
-        )
+        map(tuple, cell_local_candidate_pairs(mem, 0.9).collect())
     )
     assert many_blocks == one_block
     # degenerate members' pairs are all kept (never finite-prunable)

@@ -150,6 +150,7 @@ def test_build_pq_index_shared_sample_matches_per_subspace_training(
     import shutil
 
     from dbt_project_spark.operators.ivf import (
+        build_ivf_index,
         build_pq_index,
         ivf_index_dir,
     )
@@ -171,7 +172,8 @@ def test_build_pq_index_shared_sample_matches_per_subspace_training(
     )
     e = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
     shutil.rmtree(ivf_index_dir(sf_dir), ignore_errors=True)
-    build_pq_index(spark, sf_dir, pq_m, pq_k, pq_iters, e=e, force=True)
+    coarse = build_ivf_index(spark, sf_dir, e)
+    build_pq_index(spark, sf_dir, coarse, pq_m, pq_k, pq_iters, e=e)
     d = os.path.join(ivf_index_dir(sf_dir), "pq_raw")
     books = spark.read.parquet(os.path.join(d, "codebooks.parquet"))
     got = {

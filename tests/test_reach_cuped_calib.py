@@ -129,6 +129,9 @@ def test_pq_zero_distortion_on_16_unique_vectors(spark, tmp_path):
     """16 unique vectors, K=16 per subspace: every vector seeds its
     own centroid, so distortion is exactly 0 and every cell has one
     member."""
+    import shutil
+
+    from dbt_project_spark.operators.ivf import ivf_index_dir
     from dbt_project_spark.queries_vectors import pq_train_encode
 
     rows = []
@@ -141,7 +144,10 @@ def test_pq_zero_distortion_on_16_unique_vectors(spark, tmp_path):
     ).coalesce(1).write.mode("overwrite").parquet(
         str(tmp_path / "embeddings.parquet")
     )
-    out = pq_train_encode(spark, str(tmp_path)).collect()
+    try:
+        out = pq_train_encode(spark, str(tmp_path)).collect()
+    finally:
+        shutil.rmtree(ivf_index_dir(str(tmp_path)), ignore_errors=True)
     assert len(out) == 64  # 4 subspaces x 16 cells
     assert all(r["d2_sum"] == 0 for r in out)
     assert all(r["n_members"] == 1 for r in out)

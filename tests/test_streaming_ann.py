@@ -22,8 +22,8 @@ def _serve_batch(spark, qdf):
     from dbt_project_spark.functions.expressions import cosine_similarity
     from dbt_project_spark.operators.ivf import load_ivf_index, probe_cells
 
-    cent, cells, _k, nprobe = load_ivf_index(spark, SF)
-    probes = probe_cells(qdf, cent, nprobe)
+    cent, cells, meta = load_ivf_index(spark, SF)
+    probes = probe_cells(qdf, cent, meta["nprobe"])
     scored = (
         F.broadcast(probes)
         .join(cells, on="cid")
