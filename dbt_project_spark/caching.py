@@ -31,7 +31,10 @@ sources and sinks, a per-call index) take their directory from
 ``release_tracked`` deletes every scratch directory, so the same
 lifetime holds: a result read from scratch files is valid until the
 next catalog entry is built. Directories still registered when the
-process exits are deleted then.
+process exits are deleted then. A directory the process reuses across
+catalog entries (the persisted IVF index) is registered with
+``process_dir`` instead: ``release_tracked`` leaves it, and process
+exit deletes it with the scratch directories.
 """
 
 from __future__ import annotations
@@ -46,6 +49,7 @@ from pyspark.sql import DataFrame, Row
 _TRACKED: list[DataFrame] = []
 _CHECKPOINTS: list["Checkpoint"] = []
 _SCRATCH: list[str] = []
+_PROCESS_DIRS: list[str] = []
 
 
 def persist_tracked(
@@ -65,13 +69,29 @@ def scratch_dir(prefix: str) -> str:
     return path
 
 
+def process_dir(path: str) -> None:
+    """Register ``path``, a directory this process built and reuses
+    across catalog entries, for deletion at process exit."""
+    if path not in _PROCESS_DIRS:
+        _PROCESS_DIRS.append(path)
+
+
 def _remove_scratch() -> None:
     for path in _SCRATCH:
         shutil.rmtree(path, ignore_errors=True)
     _SCRATCH.clear()
 
 
-atexit.register(_remove_scratch)
+def remove_at_exit() -> None:
+    """Delete every scratch and process directory still registered (the
+    process-exit hook)."""
+    _remove_scratch()
+    for path in _PROCESS_DIRS:
+        shutil.rmtree(path, ignore_errors=True)
+    _PROCESS_DIRS.clear()
+
+
+atexit.register(remove_at_exit)
 
 
 def unpersist_tracked(df: DataFrame) -> None:

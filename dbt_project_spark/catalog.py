@@ -131,6 +131,9 @@ REFRESH: list[str] = [
     "minhash_vs_exact_recall",
     "corpus_keep_list",
     "split_group_aware",
+    # simhash_pairs now runs on the shared band join
+    # (operators/dedup.py band_pairs).
+    "simhash_radius_sweep",
     # r13 batch 3: bruteforce_topk two-stage shortlist kernel
     # (operators/similarity.py) — every catalog row whose call graph
     # reaches it (the exact-ranking anchor of the recall family + the

@@ -5,6 +5,19 @@ codegen'd array expressions; hashes are the cross-engine md5-prefix
 integer (functions/expressions.py), so every step is reproducible in
 ANSI SQL for the oracle.
 
+Near-dup detection is filter-and-verify: a candidate generator, then
+exact verification. Each step is one function that every query shares:
+
+- ``shingle_overlap`` — all pairs sharing a shingle, with their
+  intersection and set sizes (the exact n-gram join).
+- ``band_pairs`` — distinct pairs sharing a (bid, bv) band bucket
+  (MinHash and SimHash candidates).
+- ``candidate_overlap`` — intersection and set sizes of given
+  candidate pairs, joined on a shingle hash with exact collision
+  routing (the verifier behind every MinHash query).
+- ``minhash_clusters`` — MinHash pairs folded into connected
+  components: (doc, cluster_id = min doc id of the component).
+
 Scale notes (100 TB):
 - exact dedup groups on the 128-bit content hash, not the text — the
   shuffle carries 16-byte keys, not documents.
@@ -19,9 +32,16 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import os
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dbt_project_spark.caching import (
+    RoundCache,
+    local_checkpoint_tracked,
+    persist_tracked,
+)
 from dbt_project_spark.functions.expressions import md5_int
 
 # MinHash permutation constants: h_i(x) = (A[i]*x + B[i]) mod P.
@@ -29,7 +49,12 @@ from dbt_project_spark.functions.expressions import md5_int
 MINHASH_P = 2147483647
 MINHASH_A = [7, 13, 31, 43, 59, 87, 101, 127, 151, 163, 179, 199, 211, 229, 241, 263]
 MINHASH_B = [3, 17, 29, 47, 61, 79, 103, 131, 149, 167, 181, 193, 223, 233, 251, 269]
+MINHASH_BANDS = 4  # LSH bands of len(MINHASH_A) // MINHASH_BANDS rows each
+SHINGLE_N = 3  # word n-gram order of every shingle set
 SIMHASH_BITS = 32
+# Hex chars of the md5 prefix that keys the verify join (60 bits);
+# tests shrink it to force real collisions through the string branch.
+VERIFY_HASH_NCHARS = 15
 
 
 def tokens_col(text_col: str = "text"):
@@ -74,7 +99,7 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def exploded_shingles(df: DataFrame, id_col: str, n: int = 3) -> DataFrame:
+def exploded_shingles(df: DataFrame, id_col: str) -> DataFrame:
     """(doc, set_size, shingle) — one row per distinct shingle per doc.
     Expects a ``__toks`` column (see ``_with_tokens``).
 
@@ -95,8 +120,8 @@ def exploded_shingles(df: DataFrame, id_col: str, n: int = 3) -> DataFrame:
     sh = df.select(
         F.col(id_col).alias("doc"),
         F.struct(
-            F.size(shingles_col("__toks", n)).alias("sz"),
-            shingles_col("__toks", n).alias("sh"),
+            F.size(shingles_col("__toks", SHINGLE_N)).alias("sz"),
+            shingles_col("__toks", SHINGLE_N).alias("sh"),
         ).alias("t"),
     )
     return sh.select(
@@ -131,70 +156,70 @@ def _with_tokens(df: DataFrame, text_col: str) -> DataFrame:
     return spread_small_scan(df).withColumn("__toks", tokens_col(text_col))
 
 
+def _postings(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Persisted ``exploded_shingles`` of a text corpus: every consumer
+    reads it at least twice (pair join sides, signatures, verify), and
+    Spark does not reuse a repeated subtree (measured 2× tokenization,
+    ~2× wall-clock without the cache). Tracked: released when the next
+    catalog query is built."""
+    return persist_tracked(exploded_shingles(_with_tokens(df, text_col), id_col))
+
+
+def _jaccard():
+    """inter / |A∪B| by inclusion-exclusion over integer counts, so the
+    ratio is bit-deterministic."""
+    return F.col("inter") / (F.col("sa") + F.col("sb") - F.col("inter"))
+
+
+def _overlap(rows: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, inter, sa, sb) from one row per shared shingle."""
+    return rows.groupBy("doc_a", "doc_b").agg(
+        F.count(F.lit(1)).alias("inter"),
+        F.max("sz_a").alias("sa"),
+        F.max("sz_b").alias("sb"),
+    )
+
+
+def shingle_overlap(postings: DataFrame, max_bucket: int | None) -> DataFrame:
+    """(doc_a, doc_b, inter, sa, sb) for every doc pair (doc_a < doc_b)
+    sharing at least one shingle: the shared-shingle self-join over
+    ``exploded_shingles`` postings.
+
+    A shingle held by ONE doc can produce no pair, and in real corpora
+    singletons are the posting majority — they are dropped BEFORE the
+    self-join so the pair exchange moves only pair-capable postings.
+    The df counts ride ONE map-side-combined aggregate, which also
+    applies the hot-shingle cap (df > ``max_bucket`` falls out of the
+    keep range [2, max_bucket]); the keep set comes out partitioned by
+    sg, and the semi-join re-partitions the postings by sg, which the
+    self-join then reuses (no further exchange on the join inputs).
+    ``sz`` (the full set size) is computed per row before any drop."""
+    n = F.col("__n")
+    keep = (
+        postings.groupBy("sg")
+        .agg(F.count(F.lit(1)).alias("__n"))
+        .filter((n >= 2) if max_bucket is None else n.between(2, max_bucket))
+        .select("sg")
+    )
+    ex = persist_tracked(postings.join(keep, on="sg", how="left_semi"))
+    a = ex.select(F.col("doc").alias("doc_a"), F.col("sz").alias("sz_a"), "sg")
+    b = ex.select(F.col("doc").alias("doc_b"), F.col("sz").alias("sz_b"), "sg")
+    return _overlap(a.join(b, on="sg").filter(F.col("doc_a") < F.col("doc_b")))
+
+
 def jaccard_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
     threshold: float,
-    n: int = 3,
     max_bucket: int | None = None,
-    persist_postings: bool = True,
 ) -> DataFrame:
-    """Near-dup pairs by exact n-gram Jaccard via shared-shingle join.
-
-    intersection = count of co-occurring shingles; |A∪B| by
-    inclusion-exclusion — integer arithmetic end-to-end, so the final
-    ratio is bit-deterministic.
-
-    ``persist_postings`` caches the shingle postings (MEMORY_AND_DISK):
-    the self-join consumes them twice and Spark does NOT reuse the
-    subtree across the two sides (measured 2× tokenization, ~2×
-    wall-clock without it). At cluster scale the equivalent is
-    checkpointing postings to parquet once per corpus.
-    """
-    from dbt_project_spark.caching import persist_tracked
-
-    ex = exploded_shingles(_with_tokens(df, text_col), id_col, n)
-    if persist_postings:
-        ex = persist_tracked(ex)
-    # r13 (VERDICT r12 task 5, guide §2.3/§3.2): a shingle held by ONE
-    # doc can produce no pair, and in real corpora singletons are the
-    # posting majority — drop them BEFORE the self-join so the pair
-    # exchange moves only pair-capable postings. The df counts ride
-    # ONE map-side-combined aggregate (the same one the hot-shingle
-    # cap already paid), the keep set [2, max_bucket] comes out
-    # partitioned by sg, and the semi-join re-partitions the postings
-    # by sg — which the self-join then reuses (zero further exchanges
-    # on the join inputs; the r10 broadcast-anti hot cap is subsumed:
-    # count > max_bucket simply falls out of the keep range).
-    # Semantics: identical — df=1 rows produced no a<b pair, and sz
-    # (the full set size) is computed per row before any drop.
-    counts = ex.groupBy("sg").agg(F.count(F.lit(1)).alias("__n"))
-    lo, hi = 2, max_bucket if max_bucket is not None else None
-    keep = counts.filter(
-        (F.col("__n") >= lo)
-        if hi is None
-        else (F.col("__n") >= lo) & (F.col("__n") <= hi)
-    ).select("sg")
-    ex2 = persist_tracked(ex.join(keep, on="sg", how="left_semi"))
-    a = ex2.select(F.col("doc").alias("doc_a"), F.col("sz").alias("sz_a"), "sg")
-    b = ex2.select(F.col("doc").alias("doc_b"), F.col("sz").alias("sz_b"), "sg")
-    pairs = (
-        a.join(b, on="sg")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(
-            F.count(F.lit(1)).alias("inter"),
-            F.max("sz_a").alias("sa"),
-            F.max("sz_b").alias("sb"),
-        )
-        .withColumn(
-            "jaccard",
-            F.col("inter") / (F.col("sa") + F.col("sb") - F.col("inter")),
-        )
+    """Near-dup pairs by exact n-gram Jaccard via shared-shingle join."""
+    return (
+        shingle_overlap(_postings(df, id_col, text_col), max_bucket)
+        .select("doc_a", "doc_b", _jaccard().alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
-    return pairs.select("doc_a", "doc_b", "jaccard")
 
 
 def editdistance_pairs(
@@ -253,7 +278,6 @@ def minhash_signatures(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 3,
     postings: DataFrame | None = None,
 ) -> DataFrame:
     """K=len(A) minhash values per doc, as columns mh0..mh{K-1}.
@@ -266,7 +290,7 @@ def minhash_signatures(
     ex = (
         postings
         if postings is not None
-        else exploded_shingles(_with_tokens(df, text_col), id_col, n)
+        else exploded_shingles(_with_tokens(df, text_col), id_col)
     )
     h = ex.withColumn("h", md5_int("sg"))
     aggs = [
@@ -276,94 +300,104 @@ def minhash_signatures(
     return h.groupBy(F.col("doc")).agg(*aggs)
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    threshold: float,
-    bands: int = 4,
-    n: int = 3,
-) -> DataFrame:
-    """Banded-LSH candidate pairs, verified with exact Jaccard.
-
-    Docs sharing ANY band (band = md5 of r consecutive signature
-    values) become candidates; candidates are then verified against
-    the exact n-gram Jaccard so output precision is 1.0 — LSH only
-    trades recall for scale.
-    """
-    k = len(MINHASH_A)
-    r = k // bands
-    from dbt_project_spark.caching import persist_tracked
-
-    # One persisted postings relation feeds the signature stage AND
-    # both verify sides (3 consumers — Spark won't dedup the subtrees).
-    # Tracked: released when the next catalog query is built.
-    postings = persist_tracked(
-        exploded_shingles(_with_tokens(df, text_col), id_col, n)
-    )
-    sig = minhash_signatures(df, id_col, text_col, n, postings=postings)
-    # r13 (guide §2.4 / sf100 stage evidence): the band self-join's two
-    # sides are materialized as CONCURRENT AQE stage-jobs, and a lazy
-    # persist cannot dedupe work still in flight — both sides computed
-    # the full postings→md5→16-min-agg signature pipeline (2 × ~600 s
-    # executor at sf100, 5M docs). One eager materialization of the
-    # persisted band stack runs tokenize→postings→signatures→bands
-    # exactly once, sequentially filling all three caches; the join
-    # sides then read the stacked cache. The count itself aggregates
-    # during the fill pass — no extra corpus scan.
-    stacked = persist_tracked(minhash_band_stack(sig, bands))
-    stacked.count()
-    a = stacked.select(F.col("doc").alias("doc_a"), "bid", "bv")
-    b = stacked.select(F.col("doc").alias("doc_b"), "bid", "bv")
-    cand = (
-        a.join(b, on=["bid", "bv"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    # Verify ONLY candidate pairs (the point of LSH at scale): join the
-    # candidates back to the (shared, persisted) shingle postings.
-    return verify_jaccard(cand, postings, threshold)
-
-
-def minhash_band_stack(sig: DataFrame, bands: int) -> DataFrame:
+def minhash_band_stack(sig: DataFrame) -> DataFrame:
     """(doc, bid, bv): one row per (doc, band); bv = md5-int of the
     band's r consecutive signature values. The stacked layout is what
     both the self-join path and the persisted index store — band joins
     shuffle (id, 2 ints) rows regardless of document size."""
-    k = len(MINHASH_A)
-    r = k // bands
+    r = len(MINHASH_A) // MINHASH_BANDS
     band_cols = []
-    for bnd in range(bands):
+    for bnd in range(MINHASH_BANDS):
         parts = [f"mh{bnd * r + j}" for j in range(r)]
         band_cols.append(
             md5_int(F.concat_ws(",", *[F.col(p).cast("string") for p in parts])).alias(
                 f"band{bnd}"
             )
         )
-    banded = sig.select("doc", *band_cols)
-    return banded.select(
+    return _stack_bands(sig.select("doc", *band_cols), MINHASH_BANDS, ())
+
+
+def _stack_bands(sig: DataFrame, nbands: int, carry: tuple) -> DataFrame:
+    """(doc, *carry, bid, bv) from columns band0..band{nbands-1}."""
+    return sig.select(
         "doc",
+        *carry,
         F.explode(
             F.array(
                 *[
                     F.struct(F.lit(bnd).alias("bid"), F.col(f"band{bnd}").alias("bv"))
-                    for bnd in range(bands)
+                    for bnd in range(nbands)
                 ]
             )
         ).alias("bx"),
-    ).select("doc", "bx.bid", "bx.bv")
+    ).select("doc", *carry, "bx.bid", "bx.bv")
 
 
-def verify_jaccard(
-    cand: DataFrame,
-    postings: DataFrame,
-    threshold: float,
-    hash_nchars: int = 15,
+def band_pairs(stacked: DataFrame, carry: tuple = ()) -> DataFrame:
+    """Distinct (doc_a, doc_b, c_a…, c_b…) pairs, doc_a < doc_b, that
+    share a (bid, bv) band bucket of a (doc, *carry, bid, bv) stack:
+    the banded-LSH candidate join, bucket-local (never all pairs).
+    Each ``carry`` column c comes out as c_a and c_b."""
+
+    def side(s: str) -> DataFrame:
+        return stacked.select(
+            F.col("doc").alias(f"doc_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in carry],
+            "bid",
+            "bv",
+        )
+
+    return (
+        side("a")
+        .join(side("b"), on=["bid", "bv"])
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .select("doc_a", "doc_b", *[f"{c}_{s}" for s in "ab" for c in carry])
+        .distinct()
+    )
+
+
+def minhash_candidates(
+    df: DataFrame, id_col: str, text_col: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(postings, signatures, candidate pairs) of banded MinHash-LSH.
+
+    One persisted postings relation feeds the signature stage and the
+    verify join; the signatures are persisted for callers that compare
+    them per pair. The band self-join's two sides are materialized as
+    CONCURRENT AQE stage-jobs, and a lazy persist cannot dedupe work
+    still in flight — both sides computed the full
+    postings→md5→16-min-agg signature pipeline (2 × ~600 s executor at
+    sf100, 5M docs). One eager materialization of the persisted band
+    stack runs tokenize→postings→signatures→bands exactly once,
+    filling every cache; the join sides then read the stacked cache.
+    The count itself aggregates during the fill pass — no extra corpus
+    scan."""
+    postings = _postings(df, id_col, text_col)
+    sig = persist_tracked(minhash_signatures(df, id_col, text_col, postings))
+    stacked = persist_tracked(minhash_band_stack(sig))
+    stacked.count()
+    return postings, sig, band_pairs(stacked)
+
+
+def minhash_lsh_pairs(
+    df: DataFrame, id_col: str, text_col: str, threshold: float
 ) -> DataFrame:
-    """Exact n-gram Jaccard for candidate (doc_a, doc_b) pairs from a
-    shingle-postings relation — precision 1.0 regardless of how the
-    candidates were generated.
+    """Banded-LSH candidate pairs, verified with exact Jaccard.
+
+    Docs sharing ANY band (band = md5 of r consecutive signature
+    values) become candidates; candidates are then verified against
+    the exact n-gram Jaccard so output precision is 1.0 — LSH only
+    trades recall for scale. Only candidate pairs are verified (the
+    point of LSH at scale), against the shared postings.
+    """
+    postings, _, cand = minhash_candidates(df, id_col, text_col)
+    return verify_jaccard(cand, postings, threshold)
+
+
+def candidate_overlap(cand: DataFrame, postings: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, inter, sa, sb) for candidate (doc_a, doc_b) pairs
+    from a shingle-postings relation; a candidate sharing no shingle
+    drops out.
 
     Candidate-local (r10): the postings are first semi-joined down to
     docs that appear in SOME candidate pair, so every later join moves
@@ -384,10 +418,10 @@ def verify_jaccard(
     Both persists are lazy (filled at first materialization): cand
     fans out to the docs list and the pair join, needed to both verify
     sides — Spark does not dedup repeated subtrees, so without the
-    caches the LSH pipeline and the postings scan each run twice."""
-    from dbt_project_spark.caching import persist_tracked
-
-    cand = persist_tracked(cand.select("doc_a", "doc_b"))
+    caches the LSH pipeline and the postings scan each run twice.
+    ``cand`` is persisted in place, so a caller that reads it again
+    (the calibration queries' signature compare) reads the cache."""
+    cand = persist_tracked(cand)
     docs = (
         cand.select(F.col("doc_a").alias("doc"))
         .unionByName(cand.select(F.col("doc_b").alias("doc")))
@@ -400,27 +434,25 @@ def verify_jaccard(
     # sf0.1/sf1 — the extra aggregate + semi-join exchanges cost more
     # than the (already join-eliminated) df=1 rows' shuffle saves on
     # the CC-backed queries (split_group_aware +1.3 s, dedup_clusters
-    # +0.8 s at sf0.1). The prune landed in jaccard_pairs instead,
+    # +0.8 s at sf0.1). The prune lives in shingle_overlap instead,
     # where the hot-cap aggregate already pays for the counts.
     # r13 (guide §2.3 "shuffle keys and metadata instead of payloads";
     # sf100 stage evidence): the intersection join shuffled the raw
     # shingle STRINGS — 10.4 GiB of row data on the (doc_b, sg)
     # exchange alone at 5M docs, and every sort comparison was a string
-    # compare. The join now runs on h = md5_int(sg, 15) (60-bit BIGINT)
-    # with EXACT collision routing: an h that maps to more than one
-    # distinct sg within the candidate-doc postings (expected count ~0:
-    # ~(3e7)²/2⁶¹ ≈ 4e-4 per run) is detected by a one-pass aggregate,
-    # and its rows take the original string-equality join; all other h
-    # are injective over `needed`, so h-equality ⇔ sg-equality and the
-    # union of the two branches is row-for-row the old join. The
-    # detect aggregate's count doubles as the eager materializer that
-    # fills the cand/needed caches sequentially (the lazy persists
-    # otherwise race in concurrent AQE stage-jobs).
-    # hash_nchars=15 in production (60 bits); tests shrink it to force
-    # real collisions through the string branch.
+    # compare. The join now runs on h = md5_int(sg, VERIFY_HASH_NCHARS)
+    # (60-bit BIGINT) with EXACT collision routing: an h that maps to
+    # more than one distinct sg within the candidate-doc postings
+    # (expected count ~0: ~(3e7)²/2⁶¹ ≈ 4e-4 per run) is detected by a
+    # one-pass aggregate, and its rows take the original string-equality
+    # join; all other h are injective over `needed`, so h-equality ⇔
+    # sg-equality and the union of the two branches is row-for-row the
+    # old join. The detect aggregate's count doubles as the eager
+    # materializer that fills the cand/needed caches sequentially (the
+    # lazy persists otherwise race in concurrent AQE stage-jobs).
     needed = persist_tracked(
         postings.join(docs, on="doc", how="left_semi").withColumn(
-            "h", md5_int(F.col("sg"), hash_nchars)
+            "h", md5_int(F.col("sg"), VERIFY_HASH_NCHARS)
         )
     )
     coll = persist_tracked(
@@ -450,22 +482,19 @@ def verify_jaccard(
             .join(exb, on=["doc_b", key])
             .select("doc_a", "doc_b", "sz_a", "sz_b")
         )
-    inter_rows = (
-        parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-    )
+    return _overlap(parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1]))
+
+
+def verify_jaccard(
+    cand: DataFrame, postings: DataFrame, threshold: float
+) -> DataFrame:
+    """Exact n-gram Jaccard of candidate (doc_a, doc_b) pairs, at or
+    above ``threshold`` — precision 1.0 regardless of how the
+    candidates were generated."""
     return (
-        inter_rows.groupBy("doc_a", "doc_b")
-        .agg(
-            F.count(F.lit(1)).alias("inter"),
-            F.max("sz_a").alias("sa"),
-            F.max("sz_b").alias("sb"),
-        )
-        .withColumn(
-            "jaccard",
-            F.col("inter") / (F.col("sa") + F.col("sb") - F.col("inter")),
-        )
+        candidate_overlap(cand, postings)
+        .select("doc_a", "doc_b", _jaccard().alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
     )
 
 
@@ -474,8 +503,6 @@ def build_minhash_index(
     id_col: str,
     text_col: str,
     index_dir: str,
-    bands: int = 4,
-    n: int = 3,
 ) -> None:
     """Persist the corpus-side MinHash dedup index: the banded
     signature stack (``bands.parquet``) and the shingle postings
@@ -487,11 +514,9 @@ def build_minhash_index(
     At cluster scale both tables would be bucketed — bands by
     (bid, bv) so the lookup join is shuffle-free on the index side,
     postings by doc for the verify join."""
-    import os
-
-    ex = exploded_shingles(_with_tokens(df, text_col), id_col, n)
-    sig = minhash_signatures(df, id_col, text_col, n, postings=ex)
-    minhash_band_stack(sig, bands).write.mode("overwrite").parquet(
+    ex = _postings(df, id_col, text_col)
+    sig = minhash_signatures(df, id_col, text_col, ex)
+    minhash_band_stack(sig).write.mode("overwrite").parquet(
         os.path.join(index_dir, "bands.parquet")
     )
     ex.write.mode("overwrite").parquet(os.path.join(index_dir, "postings.parquet"))
@@ -504,8 +529,6 @@ def incremental_minhash_pairs(
     text_col: str,
     index_dir: str,
     threshold: float,
-    bands: int = 4,
-    n: int = 3,
     update_index: bool = False,
 ) -> DataFrame:
     """Near-dup pairs involving a NEW batch, against a saved index.
@@ -524,15 +547,9 @@ def incremental_minhash_pairs(
     ``update_index=True`` appends the batch's bands/postings to the
     index so the next batch sees this one.
     """
-    import os
-
-    from dbt_project_spark.caching import persist_tracked
-
-    new_postings = persist_tracked(
-        exploded_shingles(_with_tokens(new_df, text_col), id_col, n)
-    )
-    sig = minhash_signatures(new_df, id_col, text_col, n, postings=new_postings)
-    new_stack = persist_tracked(minhash_band_stack(sig, bands))
+    new_postings = _postings(new_df, id_col, text_col)
+    sig = minhash_signatures(new_df, id_col, text_col, new_postings)
+    new_stack = persist_tracked(minhash_band_stack(sig))
     # r13 note: minhash_lsh_pairs eagerly materializes its band stack
     # to kill the concurrent-side signature race; HERE the race only
     # duplicates the NEW BATCH's signature pass (the corpus side comes
@@ -587,28 +604,30 @@ def incremental_minhash_pairs(
 # Truncate CC label lineage every N rounds (lazy localCheckpoint —
 # materialized by the round's own signature aggregate).
 _CC_CHECKPOINT_EVERY = 4
+# Round budget of the label loop, and the first round that pointer-jumps
+# (see connected_components).
+_CC_MAX_ITER = 25
+_CC_JUMP_FROM = 2
 
 
 def connected_components(
     edges: DataFrame,
     src: str = "doc_a",
     dst: str = "doc_b",
-    max_iter: int = 25,
-    jump_from: int = 2,
 ) -> DataFrame:
     """Connected components by min-label propagation WITH pointer
     jumping: (node, component_id=min node id in component).
 
     Each round does (a) one-hop propagation over the symmetrized
     edge list (shuffle join + groupBy-min with map-side partials)
-    and — from round ``jump_from`` on — (b) a pointer-jump: every
+    and — from round ``_CC_JUMP_FROM`` on — (b) a pointer-jump: every
     node adopts its label's label, halving remaining label-tree
     depth. (a) alone converges in O(diameter) rounds, which a path
     graph turns into O(n); with (b) the loop is O(log diameter) —
     the Hash-to-Min shape, the difference between 30 rounds and 5 on
     a 30-node chain, and between hundreds and ~10 at 100 TB.
 
-    The jump is DEFERRED (``jump_from=2``, r04): it costs an extra
+    The jump is DEFERRED (``_CC_JUMP_FROM = 2``, r04): it costs an extra
     nodes-sized self-join per round, and real dedup graphs are
     near-diameter-≤3 (small near-duplicate clusters) — they converge
     before a jump would ever fire, so the shallow common case pays
@@ -627,12 +646,6 @@ def connected_components(
     blocks freed as soon as the next checkpoint lands. Deterministic:
     the fixpoint (min reachable id per node) is independent of
     iteration or partition order."""
-    from dbt_project_spark.caching import (
-        RoundCache,
-        local_checkpoint_tracked,
-        persist_tracked,
-    )
-
     # CHECKPOINT (not persist) the raw edge list BEFORE symmetrizing:
     # the union has two branches over the same (possibly expensive —
     # e.g. MinHash) edge pipeline, and Spark does not dedup the
@@ -669,7 +682,7 @@ def connected_components(
     prev_sig = _sig(labels)
     rounds = RoundCache(_CC_CHECKPOINT_EVERY)
     init_labels = labels
-    for i in range(max_iter):
+    for i in range(_CC_MAX_ITER):
         prop = sym.join(labels, sym.u == labels.node).select(
             F.col("v").alias("node"), "lab"
         )
@@ -678,7 +691,7 @@ def connected_components(
             .groupBy("node")
             .agg(F.min("lab").alias("lab"))
         )
-        if i >= jump_from:
+        if i >= _CC_JUMP_FROM:
             # pointer jump: adopt the label's own label (always <= lab,
             # same component) — halves remaining label-tree depth. hop
             # appears on both sides, but its expensive half (the
@@ -706,21 +719,33 @@ def connected_components(
             break
         prev_sig = new_sig
     else:  # pragma: no cover - defensive
-        raise RuntimeError(f"connected_components: no fixpoint in {max_iter} rounds")
+        raise RuntimeError(f"connected_components: no fixpoint in {_CC_MAX_ITER} rounds")
     sym.unpersist()
     return labels
 
 
-def simhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, bits: int = SIMHASH_BITS
-) -> DataFrame:
+def minhash_clusters(
+    df: DataFrame, id_col: str, text_col: str, threshold: float
+) -> tuple[DataFrame, DataFrame]:
+    """(pairs, labels): the MinHash-LSH near-dup pairs at ``threshold``
+    (persisted, for callers that also read them) and their connected
+    components as (``id_col``, cluster_id = min id in the component).
+    Only docs in some pair are labelled."""
+    pairs = persist_tracked(minhash_lsh_pairs(df, id_col, text_col, threshold))
+    labels = connected_components(pairs).select(
+        F.col("node").alias(id_col), F.col("lab").alias("cluster_id")
+    )
+    return pairs, labels
+
+
+def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Per-doc SimHash: bit b of the signature is the sign of the sum
     of ±1 votes from every token occurrence's hash bit b.
 
-    Computed as `bits` conditional-sum aggregates over exploded tokens
-    — one shuffle, no per-bit explode (input rows × 1, not × bits).
-    Band columns (8-bit slices) support hamming-bucketed candidate
-    generation at scale.
+    Computed as SIMHASH_BITS conditional-sum aggregates over exploded
+    tokens — one shuffle, no per-bit explode (input rows × 1, not ×
+    bits). Band columns (8-bit slices) support hamming-bucketed
+    candidate generation at scale.
     """
     tok = (
         _with_tokens(df, text_col)
@@ -731,18 +756,18 @@ def simhash_signatures(
         F.sum(
             F.when(F.shiftright(F.col("h"), bit).bitwiseAND(1) == 1, 1).otherwise(-1)
         ).alias(f"v{bit}")
-        for bit in range(bits)
+        for bit in range(SIMHASH_BITS)
     ]
     per_doc = tok.groupBy("doc").agg(*votes)
     sig = sum(
         [
             F.when(F.col(f"v{bit}") > 0, F.lit(2**bit)).otherwise(F.lit(0))
-            for bit in range(bits)
+            for bit in range(SIMHASH_BITS)
         ],
         start=F.lit(0),
     ).cast("bigint")
     out = per_doc.withColumn("simhash", sig).select("doc", "simhash")
-    for bnd in range(bits // 8):
+    for bnd in range(SIMHASH_BITS // 8):
         out = out.withColumn(
             f"band{bnd}",
             F.shiftright(F.col("simhash"), bnd * 8).bitwiseAND(255).cast("int"),
@@ -755,40 +780,19 @@ def simhash_pairs(
     id_col: str,
     text_col: str,
     max_hamming: int = 3,
-    bits: int = SIMHASH_BITS,
 ) -> DataFrame:
     """Near-dup pairs: candidates share ≥1 signature band — by
     pigeonhole, any pair with hamming distance < nbands must agree on
     at least one 8-bit band, so recall is exact for max_hamming <=
     nbands-1 — then verified by exact popcount hamming distance."""
-    sig = simhash_signatures(df, id_col, text_col, bits)
-    nbands = bits // 8
-    stacked = sig.select(
-        "doc",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(bnd).alias("bid"), F.col(f"band{bnd}").alias("bv"))
-                    for bnd in range(nbands)
-                ]
-            )
-        ).alias("bx"),
-    ).select("doc", "simhash", "bx.bid", "bx.bv")
-    a = stacked.select(
-        F.col("doc").alias("doc_a"), F.col("simhash").alias("sig_a"), "bid", "bv"
-    )
-    b = stacked.select(
-        F.col("doc").alias("doc_b"), F.col("simhash").alias("sig_b"), "bid", "bv"
+    stacked = _stack_bands(
+        simhash_signatures(df, id_col, text_col), SIMHASH_BITS // 8, ("simhash",)
     )
     return (
-        a.join(b, on=["bid", "bv"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "sig_a", "sig_b")
-        .distinct()
+        band_pairs(stacked, carry=("simhash",))
         .withColumn(
             "hamming",
-            F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))).cast("int"),
+            F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))).cast("int"),
         )
         .filter(F.col("hamming") <= max_hamming)
         .select("doc_a", "doc_b", "hamming")
@@ -800,49 +804,18 @@ def containment_pairs(
     id_col: str,
     text_col: str,
     threshold: float,
-    n: int = 3,
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Asymmetric CONTAINMENT pairs: inter / |smaller shingle set| —
     the quote/inclusion detector Jaccard structurally misses (a small
     doc fully quoted inside a large one has containment 1.0 but
-    Jaccard ≈ |small|/|large| → 0). Same shared-shingle candidate
-    machinery, postings cache, and hot-shingle cap as
+    Jaccard ≈ |small|/|large| → 0). Same shared-shingle kernel as
     ``jaccard_pairs``; only the verification ratio differs. Both
     metrics are emitted so the gap is visible per pair.
     """
-    from dbt_project_spark.caching import persist_tracked
-
-    ex = persist_tracked(exploded_shingles(_with_tokens(df, text_col), id_col, n))
-    if max_bucket is not None:
-        hot = (
-            ex.groupBy("sg")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") > max_bucket)
-            .select("sg")
-        )
-        ex = ex.join(hot, on="sg", how="left_anti")
-    a = ex.select(F.col("doc").alias("doc_a"), F.col("sz").alias("sz_a"), "sg")
-    b = ex.select(F.col("doc").alias("doc_b"), F.col("sz").alias("sz_b"), "sg")
     return (
-        a.join(b, on="sg")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(
-            F.count(F.lit(1)).alias("inter"),
-            F.max("sz_a").alias("sa"),
-            F.max("sz_b").alias("sb"),
-        )
-        .withColumn(
-            "containment", F.col("inter") / F.least(F.col("sa"), F.col("sb"))
-        )
+        shingle_overlap(_postings(df, id_col, text_col), max_bucket)
+        .withColumn("containment", F.col("inter") / F.least(F.col("sa"), F.col("sb")))
         .filter(F.col("containment") >= threshold)
-        .select(
-            "doc_a",
-            "doc_b",
-            "containment",
-            (F.col("inter") / (F.col("sa") + F.col("sb") - F.col("inter"))).alias(
-                "jaccard"
-            ),
-        )
+        .select("doc_a", "doc_b", "containment", _jaccard().alias("jaccard"))
     )

@@ -15,14 +15,13 @@ from pyspark.sql import functions as F
 
 from dbt_project_spark.catalog import register
 from dbt_project_spark.operators.dedup import (
-    connected_components,
-    minhash_lsh_pairs,
+    minhash_clusters,
     shingles_col,
     tokens_col,
 )
 from dbt_project_spark.operators.joins import literal_table
 from dbt_project_spark.operators.text_clean import normalize_text
-from dbt_project_spark.queries_dedup import _minhash_oracle
+from dbt_project_spark.queries_dedup import JACCARD_T, _minhash_oracle
 from dbt_project_spark.sources import load_table
 
 # n-gram order for contamination checks. Production pipelines use
@@ -92,8 +91,10 @@ def contamination_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _clusters_oracle() -> str:
-    return f"""
+# pairs (the MinHash oracle) → labels (doc_id, cluster_id): the
+# connected components as a recursive min-label fixpoint, as WITH
+# clauses.
+_LABELS_CTE = f"""
     WITH RECURSIVE pairs AS ({_minhash_oracle()}),
     sym AS (SELECT doc_a AS u, doc_b AS v FROM pairs
             UNION ALL SELECT doc_b, doc_a FROM pairs),
@@ -104,7 +105,11 @@ def _clusters_oracle() -> str:
         SELECT s.v, r.lab FROM reach r JOIN sym s ON s.u = r.node
     ),
     labels AS (SELECT node AS doc_id, MIN(lab) AS cluster_id
-               FROM reach GROUP BY node),
+               FROM reach GROUP BY node)"""
+
+
+def _clusters_oracle() -> str:
+    return f"""{_LABELS_CTE},
     sized AS (SELECT cluster_id, COUNT(*) AS cluster_size
               FROM labels GROUP BY cluster_id)
     SELECT l.doc_id, l.cluster_id, s.cluster_size
@@ -123,11 +128,8 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     same fixpoint with a recursive CTE. Only docs that appear in some
     near-dup pair are emitted (singletons are the corpus majority and
     carry no dedup decision)."""
-    pairs = minhash_lsh_pairs(
-        load_table(spark, sf_dir, "documents"), "doc_id", "text", 0.8
-    )
-    labels = connected_components(pairs, "doc_a", "doc_b").select(
-        F.col("node").alias("doc_id"), F.col("lab").alias("cluster_id")
+    _, labels = minhash_clusters(
+        load_table(spark, sf_dir, "documents"), "doc_id", "text", JACCARD_T
     )
     sized = labels.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("cluster_size")
@@ -206,18 +208,7 @@ def text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _keep_list_oracle() -> str:
-    return f"""
-    WITH RECURSIVE pairs AS ({_minhash_oracle()}),
-    sym AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-            UNION ALL SELECT doc_b, doc_a FROM pairs),
-    nodes AS (SELECT DISTINCT u AS node FROM sym),
-    reach(node, lab) AS (
-        SELECT node, node FROM nodes
-        UNION
-        SELECT s.v, r.lab FROM reach r JOIN sym s ON s.u = r.node
-    ),
-    labels AS (SELECT node AS doc_id, MIN(lab) AS cluster_id
-               FROM reach GROUP BY node)
+    return f"""{_LABELS_CTE}
     SELECT d.doc_id,
            COALESCE(l.cluster_id, d.doc_id) AS cluster_id,
            COALESCE(l.cluster_id, d.doc_id) = d.doc_id AS keep
@@ -240,10 +231,7 @@ def corpus_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself never self-joins here; all the pair work happened in the
     bucketed LSH stage."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(docs, "doc_id", "text", 0.8)
-    labels = connected_components(pairs, "doc_a", "doc_b").select(
-        F.col("node").alias("doc_id"), F.col("lab").alias("cluster_id")
-    )
+    _, labels = minhash_clusters(docs, "doc_id", "text", JACCARD_T)
     return (
         docs.select("doc_id")
         .join(labels, on="doc_id", how="left")
@@ -262,18 +250,7 @@ SPLIT_TRAIN_OF_10 = 8
 
 
 def _split_oracle() -> str:
-    return f"""
-    WITH RECURSIVE pairs AS ({_minhash_oracle()}),
-    sym AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-            UNION ALL SELECT doc_b, doc_a FROM pairs),
-    nodes AS (SELECT DISTINCT u AS node FROM sym),
-    reach(node, lab) AS (
-        SELECT node, node FROM nodes
-        UNION
-        SELECT s.v, r.lab FROM reach r JOIN sym s ON s.u = r.node
-    ),
-    labels AS (SELECT node AS doc_id, MIN(lab) AS cluster_id
-               FROM reach GROUP BY node),
+    return f"""{_LABELS_CTE},
     assign AS (
       SELECT d.doc_id,
              COALESCE(l.cluster_id, d.doc_id) AS cluster_id,
@@ -318,14 +295,10 @@ def split_group_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from dbt_project_spark.functions import md5_int
 
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(docs, "doc_id", "text", 0.8)
     from dbt_project_spark.caching import persist_tracked
 
-    pairs = persist_tracked(pairs)
-    labels = connected_components(pairs, "doc_a", "doc_b").select(
-        F.col("node").alias("doc_id"), F.col("lab").alias("cluster_id")
-    )
+    docs = load_table(spark, sf_dir, "documents")
+    pairs, labels = minhash_clusters(docs, "doc_id", "text", JACCARD_T)
     assign = persist_tracked(
         docs.select("doc_id", "text")
         .join(labels, on="doc_id", how="left")
@@ -634,18 +607,7 @@ def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cluster_hist_oracle() -> str:
-    return f"""
-    WITH RECURSIVE pairs AS ({_minhash_oracle()}),
-    sym AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-            UNION ALL SELECT doc_b, doc_a FROM pairs),
-    nodes AS (SELECT DISTINCT u AS node FROM sym),
-    reach(node, lab) AS (
-        SELECT node, node FROM nodes
-        UNION
-        SELECT s.v, r.lab FROM reach r JOIN sym s ON s.u = r.node
-    ),
-    labels AS (SELECT node AS doc_id, MIN(lab) AS cluster_id
-               FROM reach GROUP BY node),
+    return f"""{_LABELS_CTE},
     sizes AS (SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS sz
               FROM labels GROUP BY cluster_id),
     t AS (SELECT CAST(SUM(sz) AS BIGINT) AS docs_in_clusters FROM sizes)
@@ -672,11 +634,8 @@ def dedup_cluster_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: reuses the MinHash-LSH → connected-components stack;
     everything after the labels table is cluster-sized aggregates.
     """
-    pairs = minhash_lsh_pairs(
-        load_table(spark, sf_dir, "documents"), "doc_id", "text", 0.8
-    )
-    labels = connected_components(pairs, "doc_a", "doc_b").select(
-        F.col("node").alias("doc_id"), F.col("lab").alias("cluster_id")
+    _, labels = minhash_clusters(
+        load_table(spark, sf_dir, "documents"), "doc_id", "text", JACCARD_T
     )
     sizes = labels.groupBy("cluster_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("sz")

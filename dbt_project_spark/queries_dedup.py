@@ -11,19 +11,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dbt_project_spark.caching import scratch_dir
+from dbt_project_spark.caching import persist_tracked, scratch_dir
 from dbt_project_spark.catalog import register
 from dbt_project_spark.operators.dedup import (
     MINHASH_A,
     MINHASH_B,
+    MINHASH_BANDS,
     MINHASH_P,
     SIMHASH_BITS,
     build_minhash_index,
+    candidate_overlap,
+    containment_pairs,
     editdistance_pairs,
     exact_dedup,
     incremental_minhash_pairs,
     jaccard_pairs,
+    minhash_candidates,
     minhash_lsh_pairs,
+    simhash_pairs,
     simhash_signatures,
 )
 from dbt_project_spark.operators.joins import literal_table
@@ -97,6 +102,21 @@ _EX_CTE = f"""
 """
 
 
+# ex → capped (MAX_BUCKET stop-shingle cap) → pairs (doc_a, doc_b,
+# inter, sa, sb): the exact shared-shingle join, as WITH clauses.
+_EXACT_PAIRS_CTE = f"""
+    WITH {_EX_CTE},
+    capped AS (
+      SELECT doc, sz, sg FROM (
+        SELECT doc, sz, sg, COUNT(*) OVER (PARTITION BY sg) AS bn FROM ex)
+      WHERE bn <= {MAX_BUCKET}),
+    pairs AS (
+      SELECT a.doc AS doc_a, b.doc AS doc_b, COUNT(*) AS inter,
+             MAX(a.sz) AS sa, MAX(b.sz) AS sb
+      FROM capped a JOIN capped b ON a.sg = b.sg AND a.doc < b.doc
+      GROUP BY doc_a, doc_b)"""
+
+
 @register(
     "dedup_exact",
     oracle="""
@@ -111,17 +131,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_ngram_jaccard",
-    oracle=f"""
-    WITH {_EX_CTE},
-    capped AS (
-      SELECT doc, sz, sg FROM (
-        SELECT doc, sz, sg, COUNT(*) OVER (PARTITION BY sg) AS bn FROM ex)
-      WHERE bn <= {MAX_BUCKET}),
-    pairs AS (
-      SELECT a.doc AS doc_a, b.doc AS doc_b, COUNT(*) AS inter,
-             MAX(a.sz) AS sa, MAX(b.sz) AS sb
-      FROM capped a JOIN capped b ON a.sg = b.sg AND a.doc < b.doc
-      GROUP BY doc_a, doc_b)
+    oracle=f"""{_EXACT_PAIRS_CTE}
     SELECT doc_a, doc_b, inter / (sa + sb - inter) AS jaccard
     FROM pairs WHERE inter / (sa + sb - inter) >= {JACCARD_T}
     """,
@@ -139,12 +149,11 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _minhash_oracle(cand_pred: str = "", extra_cols: str = "") -> str:
-    """Full MinHash-LSH pipeline in DuckDB SQL. ``cand_pred``
-    restricts the candidate pairs (incremental variant: at least one
-    side in the new batch); ``extra_cols`` appends output columns."""
-    k = len(MINHASH_A)
-    r = k // 4
+def _minhash_ctes(cand_where: str = "") -> str:
+    """ex → hashed → sigs (mh0..) → bands → stack (doc, bid, bv) → cand
+    (doc_a, doc_b): the banded MinHash candidate pipeline, as WITH
+    clauses. ``cand_where`` is appended to the candidate join."""
+    r = len(MINHASH_A) // MINHASH_BANDS
     mins = ",\n           ".join(
         f"MIN(({a} * h + {b}) % {MINHASH_P}) AS mh{i}"
         for i, (a, b) in enumerate(zip(MINHASH_A, MINHASH_B))
@@ -154,12 +163,12 @@ def _minhash_oracle(cand_pred: str = "", extra_cols: str = "") -> str:
             x=" || ',' || ".join(f"mh{bnd * r + j}" for j in range(r))
         )
         + f" AS band{bnd}"
-        for bnd in range(4)
+        for bnd in range(MINHASH_BANDS)
     )
     stack = " UNION ALL ".join(
-        f"SELECT doc, {bnd} AS bid, band{bnd} AS bv FROM bands" for bnd in range(4)
+        f"SELECT doc, {bnd} AS bid, band{bnd} AS bv FROM bands"
+        for bnd in range(MINHASH_BANDS)
     )
-    where = f"WHERE {cand_pred}" if cand_pred else ""
     return f"""
     WITH {_EX_CTE},
     hashed AS (SELECT doc, sz, {_MD5INT.format(x='sg')} AS h FROM ex),
@@ -167,8 +176,16 @@ def _minhash_oracle(cand_pred: str = "", extra_cols: str = "") -> str:
     bands AS (SELECT doc, {bands} FROM sigs),
     stack AS ({stack}),
     cand AS (SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
-             FROM stack a JOIN stack b ON a.bid = b.bid AND a.bv = b.bv AND a.doc < b.doc
-             {where}),
+             FROM stack a JOIN stack b
+               ON a.bid = b.bid AND a.bv = b.bv AND a.doc < b.doc{cand_where})"""
+
+
+def _minhash_oracle(cand_pred: str = "", extra_cols: str = "") -> str:
+    """Full MinHash-LSH pipeline in DuckDB SQL. ``cand_pred``
+    restricts the candidate pairs (incremental variant: at least one
+    side in the new batch); ``extra_cols`` appends output columns."""
+    where = "\n             " + (f"WHERE {cand_pred}" if cand_pred else "")
+    return f"""{_minhash_ctes(where)},
     ver AS (SELECT c.doc_a, c.doc_b, COUNT(*) AS inter,
                    MAX(ea.sz) AS sa, MAX(eb.sz) AS sb
             FROM cand c JOIN ex ea ON ea.doc = c.doc_a
@@ -488,7 +505,6 @@ def dedup_pair_evidence(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc span counts are a corpus-sized aggregate. Nothing here
     revisits the n² space the LSH stage already avoided.
     """
-    from dbt_project_spark.caching import persist_tracked
     from dbt_project_spark.operators.dedup import tokens_col
     from dbt_project_spark.queries_training import SPAN_N
 
@@ -552,17 +568,7 @@ CONTAIN_T = 0.8  # containment threshold (quote/inclusion detection)
 
 @register(
     "dedup_containment",
-    oracle=f"""
-    WITH {_EX_CTE},
-    capped AS (
-      SELECT doc, sz, sg FROM (
-        SELECT doc, sz, sg, COUNT(*) OVER (PARTITION BY sg) AS bn FROM ex)
-      WHERE bn <= {MAX_BUCKET}),
-    pairs AS (
-      SELECT a.doc AS doc_a, b.doc AS doc_b, COUNT(*) AS inter,
-             MAX(a.sz) AS sa, MAX(b.sz) AS sb
-      FROM capped a JOIN capped b ON a.sg = b.sg AND a.doc < b.doc
-      GROUP BY doc_a, doc_b)
+    oracle=f"""{_EXACT_PAIRS_CTE}
     SELECT doc_a, doc_b,
            inter / least(sa, sb) AS containment,
            inter / (sa + sb - inter) AS jaccard
@@ -580,8 +586,6 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     MAX_BUCKET stop-shingle cap as dedup_ngram_jaccard — the scale
     story is identical, only the verification ratio differs.
     """
-    from dbt_project_spark.operators.dedup import containment_pairs
-
     return containment_pairs(
         load_table(spark, sf_dir, "documents"),
         "doc_id",
@@ -601,34 +605,10 @@ def _minhash_calib_oracle() -> str:
     the 16-component signature-agreement estimate, summarized into
     one calibration row — mirrors the Spark pipeline CTE for CTE."""
     k = len(MINHASH_A)
-    r = k // 4
-    mins = ",\n           ".join(
-        f"MIN(({a} * h + {b}) % {MINHASH_P}) AS mh{i}"
-        for i, (a, b) in enumerate(zip(MINHASH_A, MINHASH_B))
-    )
-    bands = ",\n           ".join(
-        _MD5INT.format(
-            x=" || ',' || ".join(f"mh{bnd * r + j}" for j in range(r))
-        )
-        + f" AS band{bnd}"
-        for bnd in range(4)
-    )
-    stack = " UNION ALL ".join(
-        f"SELECT doc, {bnd} AS bid, band{bnd} AS bv FROM bands"
-        for bnd in range(4)
-    )
     matches = " + ".join(
         f"CASE WHEN x.mh{i} = y.mh{i} THEN 1 ELSE 0 END" for i in range(k)
     )
-    return f"""
-    WITH {_EX_CTE},
-    hashed AS (SELECT doc, sz, {_MD5INT.format(x='sg')} AS h FROM ex),
-    sigs AS (SELECT doc, {mins} FROM hashed GROUP BY doc),
-    bands AS (SELECT doc, {bands} FROM sigs),
-    stack AS ({stack}),
-    cand AS (SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
-             FROM stack a JOIN stack b
-               ON a.bid = b.bid AND a.bv = b.bv AND a.doc < b.doc),
+    return f"""{_minhash_ctes()},
     ver AS (SELECT c.doc_a, c.doc_b, CAST(COUNT(*) AS BIGINT) AS inter,
                    CAST(MAX(ea.sz) AS BIGINT) AS sa,
                    CAST(MAX(eb.sz) AS BIGINT) AS sb
@@ -654,6 +634,29 @@ def _minhash_calib_oracle() -> str:
     """
 
 
+def _sig_agreement(pairs: DataFrame, sig: DataFrame) -> DataFrame:
+    """``pairs`` plus e0..e{K-1}: whether doc_a's and doc_b's MinHash
+    signatures agree on component i."""
+
+    def side(s: str) -> DataFrame:
+        return sig.select(
+            F.col("doc").alias(f"doc_{s}"),
+            *[F.col(f"mh{i}").alias(f"{s}{i}") for i in range(len(MINHASH_A))],
+        )
+
+    return (
+        pairs.join(side("a"), "doc_a")
+        .join(side("b"), "doc_b")
+        .select(
+            *pairs.columns,
+            *[
+                (F.col(f"a{i}") == F.col(f"b{i}")).alias(f"e{i}")
+                for i in range(len(MINHASH_A))
+            ],
+        )
+    )
+
+
 @register("minhash_estimate_error", oracle=_minhash_calib_oracle())
 def minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash index CALIBRATION: over every LSH candidate pair,
@@ -677,67 +680,18 @@ def minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs); the signature compare joins the pairs table (LSH-bounded)
     against the docs-sized signature table twice.
     """
-    from dbt_project_spark.caching import persist_tracked
-    from dbt_project_spark.operators.dedup import (
-        _with_tokens,
-        exploded_shingles,
-        minhash_band_stack,
-        minhash_signatures,
-    )
-
     k = len(MINHASH_A)
-    docs = load_table(spark, sf_dir, "documents")
-    postings = persist_tracked(
-        exploded_shingles(_with_tokens(docs, "text"), "doc_id", 3)
+    postings, sig, cand = minhash_candidates(
+        load_table(spark, sf_dir, "documents"), "doc_id", "text"
     )
-    sig = persist_tracked(
-        minhash_signatures(docs, "doc_id", "text", 3, postings=postings)
+    ver = candidate_overlap(cand, postings).select(
+        "doc_a", "doc_b", *[F.col(c).cast("bigint") for c in ("inter", "sa", "sb")]
     )
-    stacked = minhash_band_stack(sig, 4)
-    a = stacked.select(F.col("doc").alias("doc_a"), "bid", "bv")
-    b = stacked.select(F.col("doc").alias("doc_b"), "bid", "bv")
-    cand = (
-        a.join(b, on=["bid", "bv"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    ea = postings.select(
-        F.col("doc").alias("doc_a"), F.col("sz").alias("sza"), "sg"
-    )
-    eb = postings.select(
-        F.col("doc").alias("doc_b"), F.col("sz").alias("szb"), "sg"
-    )
-    ver = (
-        cand.join(ea, "doc_a")
-        .join(eb, ["doc_b", "sg"])
-        .groupBy("doc_a", "doc_b")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("inter"),
-            F.max("sza").cast("bigint").alias("sa"),
-            F.max("szb").cast("bigint").alias("sb"),
-        )
-    )
-    sx = sig.select(
-        F.col("doc").alias("doc_a"),
-        *[F.col(f"mh{i}").alias(f"xa{i}") for i in range(k)],
-    )
-    sy = sig.select(
-        F.col("doc").alias("doc_b"),
-        *[F.col(f"mh{i}").alias(f"yb{i}") for i in range(k)],
-    )
-    matches = None
-    for i in range(k):
-        ind = F.when(F.col(f"xa{i}") == F.col(f"yb{i}"), 1).otherwise(0)
-        matches = ind if matches is None else matches + ind
-    est = (
-        ver.join(sx, "doc_a")
-        .join(sy, "doc_b")
-        .select(
-            "inter",
-            (F.col("sa") + F.col("sb") - F.col("inter")).alias("un"),
-            matches.cast("bigint").alias("m"),
-        )
+    matches = sum(F.when(F.col(f"e{i}"), 1).otherwise(0) for i in range(k))
+    est = _sig_agreement(ver, sig).select(
+        "inter",
+        (F.col("sa") + F.col("sb") - F.col("inter")).alias("un"),
+        matches.cast("bigint").alias("m"),
     )
     err = est.select(
         "m",
@@ -776,22 +730,6 @@ BAND_CONFIGS = [(16, 1), (8, 2), (4, 4), (2, 8), (1, 16)]
 
 def _band_tuning_oracle() -> str:
     k = len(MINHASH_A)
-    mins = ",\n           ".join(
-        f"MIN(({a} * h + {b}) % {MINHASH_P}) AS mh{i}"
-        for i, (a, b) in enumerate(zip(MINHASH_A, MINHASH_B))
-    )
-    r4 = k // 4
-    bands = ",\n           ".join(
-        _MD5INT.format(
-            x=" || ',' || ".join(f"mh{bnd * r4 + j}" for j in range(r4))
-        )
-        + f" AS band{bnd}"
-        for bnd in range(4)
-    )
-    stack = " UNION ALL ".join(
-        f"SELECT doc, {bnd} AS bid, band{bnd} AS bv FROM bands"
-        for bnd in range(4)
-    )
     eqs = ",\n                 ".join(
         f"sa.mh{i} = sb.mh{i} AS e{i}" for i in range(k)
     )
@@ -816,15 +754,7 @@ def _band_tuning_oracle() -> str:
                      // SUM(CASE WHEN {collide} THEN 1 ELSE 0 END)
                 ELSE 0 END AS BIGINT) AS precision50_micro
     FROM pj""")
-    return f"""
-    WITH {_EX_CTE},
-    hashed AS (SELECT doc, sz, {_MD5INT.format(x='sg')} AS h FROM ex),
-    sigs AS (SELECT doc, {mins} FROM hashed GROUP BY doc),
-    bands AS (SELECT doc, {bands} FROM sigs),
-    stack AS ({stack}),
-    cand AS (SELECT DISTINCT a.doc AS doc_a, b.doc AS doc_b
-             FROM stack a JOIN stack b
-               ON a.bid = b.bid AND a.bv = b.bv AND a.doc < b.doc),
+    return f"""{_minhash_ctes()},
     ver AS (SELECT c.doc_a, c.doc_b,
                    CAST(COUNT(*) * 1000000 //
                         (MAX(ea.sz) + MAX(eb.sz) - COUNT(*)) AS BIGINT)
@@ -865,68 +795,20 @@ def minhash_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shingle postings; the 5 config rows are conditional
     aggregates over ONE cached pair table.
     """
-    from dbt_project_spark.caching import persist_tracked
-    from dbt_project_spark.operators.dedup import (
-        _with_tokens,
-        exploded_shingles,
-        minhash_band_stack,
-        minhash_signatures,
+    postings, sig, cand = minhash_candidates(
+        load_table(spark, sf_dir, "documents"), "doc_id", "text"
     )
-
-    k = len(MINHASH_A)
-    docs = load_table(spark, sf_dir, "documents")
-    postings = persist_tracked(
-        exploded_shingles(_with_tokens(docs, "text"), "doc_id", 3)
-    )
-    sig = persist_tracked(
-        minhash_signatures(docs, "doc_id", "text", 3, postings=postings)
-    )
-    stacked = minhash_band_stack(sig, 4)
-    a = stacked.select(F.col("doc").alias("doc_a"), "bid", "bv")
-    b = stacked.select(F.col("doc").alias("doc_b"), "bid", "bv")
-    cand = (
-        a.join(b, on=["bid", "bv"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    ea = postings.select(F.col("doc").alias("doc_a"), F.col("sz").alias("sa"), "sg")
-    eb = postings.select(F.col("doc").alias("doc_b"), F.col("sz").alias("sb"), "sg")
-    ver = (
-        cand.join(ea, on="doc_a")
-        .join(eb, on=["doc_b", "sg"])
-        .groupBy("doc_a", "doc_b")
-        .agg(
-            F.expr(
-                "CAST(COUNT(*) * 1000000 div"
-                " (MAX(sa) + MAX(sb) - COUNT(*)) AS BIGINT)"
-            ).alias("j_micro")
-        )
-    )
-    sa = sig.select(
-        F.col("doc").alias("doc_a"),
-        *[F.col(f"mh{i}").alias(f"a{i}") for i in range(k)],
-    )
-    sb = sig.select(
-        F.col("doc").alias("doc_b"),
-        *[F.col(f"mh{i}").alias(f"b{i}") for i in range(k)],
-    )
-    eq = (
-        cand.join(sa, on="doc_a")
-        .join(sb, on="doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            *[
-                (F.col(f"a{i}") == F.col(f"b{i}")).alias(f"e{i}")
-                for i in range(k)
-            ],
-        )
+    ver = candidate_overlap(cand, postings).select(
+        "doc_a",
+        "doc_b",
+        F.expr("CAST(inter * 1000000 div (sa + sb - inter) AS BIGINT)").alias(
+            "j_micro"
+        ),
     )
     pj = persist_tracked(
-        eq.join(ver, on=["doc_a", "doc_b"], how="left").withColumn(
-            "j_micro", F.coalesce("j_micro", F.lit(0))
-        )
+        _sig_agreement(cand, sig)
+        .join(ver, on=["doc_a", "doc_b"], how="left")
+        .withColumn("j_micro", F.coalesce("j_micro", F.lit(0)))
     )
     out = None
     for bcnt, r in BAND_CONFIGS:
@@ -1118,7 +1000,6 @@ def _sem_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Within-cell exact-cosine near-dup pairs ≥ τ over base ∪ clone
     members — shared by dedup_semantic and dedup_semantic_keeplist."""
     base, cmem = _sem_members(spark, sf_dir)
-    from dbt_project_spark.caching import persist_tracked
     from dbt_project_spark.functions.expressions import cosine_similarity
     from dbt_project_spark.operators.similarity import (
         cell_local_candidate_pairs,
@@ -1376,8 +1257,6 @@ def exact_substr_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     t = docs.select("doc_id", tokens_col("text").alias("t"))
-    from dbt_project_spark.caching import persist_tracked
-
     n = t.select(
         "doc_id", F.size("t").cast("bigint").alias("n_tokens")
     ).filter(F.col("n_tokens") > 0)
@@ -1499,7 +1378,6 @@ def semantic_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     same within-cell pair cosines; the τ grid only re-aggregates a
     pairs-sized table against a 4-row broadcast."""
     base, cmem = _sem_members(spark, sf_dir)
-    from dbt_project_spark.caching import persist_tracked
     from dbt_project_spark.functions.expressions import cosine_similarity
     from dbt_project_spark.operators.similarity import (
         cell_local_candidate_pairs,
@@ -1658,7 +1536,6 @@ def winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the SELECTED fingerprints only. The cross-doc share join
     runs on the winnowed set — this subsampling is exactly why MOSS
     scales to web-corpus plagiarism detection."""
-    from dbt_project_spark.caching import persist_tracked
     from dbt_project_spark.operators.dedup import tokens_col
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1879,17 +1756,14 @@ def simhash_radius_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: band-bucketed candidate join (bucket-local, as
     dedup_simhash), one pairs-sized popcount filter, a 4-row
     fan-out aggregate."""
-    from dbt_project_spark.operators.dedup import simhash_pairs
-
-    pairs = simhash_pairs(
-        load_table(spark, sf_dir, "documents"),
-        "doc_id",
-        "text",
-        max_hamming=SH_SWEEP_MAX,
+    pairs = persist_tracked(
+        simhash_pairs(
+            load_table(spark, sf_dir, "documents"),
+            "doc_id",
+            "text",
+            max_hamming=SH_SWEEP_MAX,
+        )
     )
-    from dbt_project_spark.caching import persist_tracked
-
-    pairs = persist_tracked(pairs)
     radii = spark.range(0, SH_SWEEP_MAX + 1).select(
         F.col("id").alias("radius")
     )
@@ -1960,12 +1834,11 @@ def dedup_pair_transitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the pair graph is pairs-sized (already ≪ corpus);
     the wedge join is degree-bounded on it, the closure an
     equi-join — the triangle_count machinery one level up."""
-    pairs = minhash_lsh_pairs(
-        load_table(spark, sf_dir, "documents"), "doc_id", "text", JACCARD_T
-    ).select("doc_a", "doc_b")
-    from dbt_project_spark.caching import persist_tracked
-
-    pairs = persist_tracked(pairs)
+    pairs = persist_tracked(
+        minhash_lsh_pairs(
+            load_table(spark, sf_dir, "documents"), "doc_id", "text", JACCARD_T
+        ).select("doc_a", "doc_b")
+    )
     und = pairs.select(
         F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
     ).unionByName(
@@ -1973,12 +1846,11 @@ def dedup_pair_transitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = und.select(F.col("v").alias("ctr"), F.col("u").alias("x"))
     b = und.select(F.col("v").alias("ctr2"), F.col("u").alias("y"))
-    wedge = (
+    wedge = persist_tracked(
         a.join(b, a.ctr == F.col("ctr2"))
         .filter(F.col("x") < F.col("y"))
         .select("x", "y")
     )
-    wedge = persist_tracked(wedge)
     closed = (
         wedge.join(
             pairs.select(
@@ -2015,18 +1887,7 @@ def dedup_pair_transitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH lsh AS (SELECT doc_a, doc_b FROM ({_minhash_oracle()})),
     ext AS (
-      SELECT doc_a, doc_b FROM (
-        WITH {_EX_CTE},
-        capped AS (
-          SELECT doc, sz, sg FROM (
-            SELECT doc, sz, sg, COUNT(*) OVER (PARTITION BY sg) AS bn
-            FROM ex)
-          WHERE bn <= {MAX_BUCKET}),
-        pairs AS (
-          SELECT a.doc AS doc_a, b.doc AS doc_b, COUNT(*) AS inter,
-                 MAX(a.sz) AS sa, MAX(b.sz) AS sb
-          FROM capped a JOIN capped b ON a.sg = b.sg AND a.doc < b.doc
-          GROUP BY doc_a, doc_b)
+      SELECT doc_a, doc_b FROM ({_EXACT_PAIRS_CTE}
         SELECT doc_a, doc_b FROM pairs
         WHERE inter / (sa + sb - inter) >= {JACCARD_T})),
     j AS (SELECT
@@ -2064,16 +1925,14 @@ def minhash_vs_exact_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the two pipelines' own shapes plus one pairs-sized
     semi-join."""
     docs = load_table(spark, sf_dir, "documents")
-    lsh = minhash_lsh_pairs(docs, "doc_id", "text", JACCARD_T).select(
-        "doc_a", "doc_b"
+    lsh = persist_tracked(
+        minhash_lsh_pairs(docs, "doc_id", "text", JACCARD_T).select("doc_a", "doc_b")
     )
-    ext = jaccard_pairs(
-        docs, "doc_id", "text", JACCARD_T, max_bucket=MAX_BUCKET
-    ).select("doc_a", "doc_b")
-    from dbt_project_spark.caching import persist_tracked
-
-    lsh = persist_tracked(lsh)
-    ext = persist_tracked(ext)
+    ext = persist_tracked(
+        jaccard_pairs(
+            docs, "doc_id", "text", JACCARD_T, max_bucket=MAX_BUCKET
+        ).select("doc_a", "doc_b")
+    )
     n_exact = ext.agg(F.count(F.lit(1)).cast("bigint").alias("n_exact"))
     n_lsh = lsh.agg(F.count(F.lit(1)).cast("bigint").alias("n_lsh"))
     n_both = lsh.join(ext, ["doc_a", "doc_b"], "left_semi").agg(

@@ -31,6 +31,25 @@ def _embeddings(spark, sf_dir):
     return spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
 
 
+def test_built_index_is_deleted_at_process_exit(spark, tmp_path, monkeypatch):
+    """The process that builds an index owns it: it survives
+    ``release_tracked`` (queries reuse it) and caching's exit hook
+    deletes it."""
+    from dbt_project_spark import caching
+
+    monkeypatch.setattr(caching, "_PROCESS_DIRS", [])
+    monkeypatch.setattr(caching, "_SCRATCH", [])
+    sf_dir = str(tmp_path / "sfexit")
+    _write_corpus(spark, sf_dir, seed=5)
+    d = ivf_index_dir(sf_dir)
+    shutil.rmtree(d, ignore_errors=True)
+    build_ivf_index(spark, sf_dir, _embeddings(spark, sf_dir))
+    caching.release_tracked()
+    assert os.path.isfile(os.path.join(d, "_META.json"))
+    caching.remove_at_exit()
+    assert not os.path.exists(d)
+
+
 def test_ivf_index_build_serve_and_staleness(spark, tmp_path):
     sf_dir = str(tmp_path / "sfx")
     _write_corpus(spark, sf_dir, seed=1)

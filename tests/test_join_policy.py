@@ -30,7 +30,7 @@ GUARDED_BROADCASTS = {
     ("operators/graph.py", "_node_side"): "node count <= NODE_BROADCAST_MAX_NODES",
     ("operators/graph.py", "_closed_wedges"): "_edge_stats edge count <= CLOSING_BROADCAST_MAX_EDGES",
     ("queries_graph.py", "link_prediction_jaccard"): "_edge_stats m and min(2m, span) <= LP_ANTI_BROADCAST_MAX_EDGES",
-    ("operators/dedup.py", "verify_jaccard"): "doc list <= 2 x candidate pairs, set by the near-dup count",
+    ("operators/dedup.py", "candidate_overlap"): "doc list <= 2 x candidate pairs, set by the near-dup count",
     ("operators/joins.py", "broadcast_dim_join"): "the caller names the dimension",
 }
 

@@ -6,7 +6,7 @@ import re
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from dbt_project_spark.operators.dedup import jaccard_pairs
+from dbt_project_spark.operators.dedup import containment_pairs, jaccard_pairs
 
 WORDS = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta", "theta"]
 
@@ -48,13 +48,66 @@ def test_jaccard_pairs_matches_python_model(spark_session_holder, docs_texts, th
     df = spark.createDataFrame(docs, ["doc_id", "text"])
     got = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in jaccard_pairs(df, "doc_id", "text", threshold,
-                               persist_postings=False).collect()
+        for r in jaccard_pairs(df, "doc_id", "text", threshold).collect()
     }
     want = _py_jaccard_pairs(docs, threshold)
     assert set(got) == set(want)
     for k in got:
         assert abs(got[k] - want[k]) < 1e-12
+
+
+def _py_containment_pairs(docs, threshold, max_bucket):
+    """(a, b) -> (containment, jaccard) over shingles held by at most
+    ``max_bucket`` docs; set sizes count every shingle."""
+    sets = {i: _py_shingles(t) for i, t in docs}
+    df = {}
+    for s in sets.values():
+        for g in s:
+            df[g] = df.get(g, 0) + 1
+    out = {}
+    for i, (ida, _) in enumerate(docs):
+        for idb, _ in docs[i + 1 :]:
+            sa, sb = sets[ida], sets[idb]
+            inter = len({g for g in sa & sb if df[g] <= max_bucket})
+            if inter == 0:
+                continue
+            c = inter / min(len(sa), len(sb))
+            if c >= threshold:
+                out[(min(ida, idb), max(ida, idb))] = (
+                    c,
+                    inter / (len(sa) + len(sb) - inter),
+                )
+    return out
+
+
+@settings(
+    max_examples=12,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow],
+)
+@given(
+    st.lists(doc_strategy, min_size=2, max_size=6),
+    st.sampled_from([0.3, 0.6, 0.9]),
+    st.sampled_from([2, 3]),
+)
+def test_containment_pairs_matches_python_model(
+    spark_session_holder, docs_texts, threshold, max_bucket
+):
+    """Capped containment: shingles held by one doc (df = 1) and by more
+    than ``max_bucket`` docs add nothing to the intersection."""
+    spark = spark_session_holder
+    docs = list(enumerate(docs_texts))
+    df = spark.createDataFrame(docs, ["doc_id", "text"])
+    got = {
+        (r["doc_a"], r["doc_b"]): (r["containment"], r["jaccard"])
+        for r in containment_pairs(
+            df, "doc_id", "text", threshold, max_bucket=max_bucket
+        ).collect()
+    }
+    want = _py_containment_pairs(docs, threshold, max_bucket)
+    assert set(got) == set(want)
+    for k in got:
+        assert all(abs(g - w) < 1e-12 for g, w in zip(got[k], want[k]))
 
 
 def _py_components(edges):
